@@ -933,12 +933,9 @@ class Engine(val spark: SparkSession, warehouseDir: String,
       .orderBy("field_id")
   }
 
-  /** The flagship health report; `files` is cached across sections. */
-  def health(ref: String): HealthReport = {
-    val t = load(ref)
-    val f = MetaRelations.files(spark, t).cache()
-    MetaHealth.report(spark, t, f)
-  }
+  /** The flagship health report, computed eagerly by one fold over the
+    * live entries ([[MetaHealth.report]]); nothing is cached. */
+  def health(ref: String): HealthReport = MetaHealth.report(spark, load(ref))
 
   def diff(ref: String, snap1: Long, snap2: Long): DiffReport =
     MetaDiff.diff(spark, load(ref), snap1, snap2)

@@ -14,8 +14,13 @@ import graft.meta.IcebergTable
   *
   * Metadata volumes are small (thousands of rows for thousands of data
   * files), so rows are parsed driver-side (Jackson + core Avro) and lifted
-  * with `createDataFrame`; all ANALYTICS over them stay distributed,
-  * declarative DataFrame transforms. At 100 TB of *data* the metadata tree
+  * with `createDataFrame`; the analytics over them stay distributed,
+  * declarative DataFrame transforms. The one exception is the health
+  * report ([[graft.ops.MetaHealth]]): it is a single mergeable aggregate,
+  * like the reference's one pass over `inspect.files()`, so it folds the
+  * entries directly — on the driver, or in one job past
+  * [[DistributeEntriesThreshold]] — instead of planning seven relations
+  * over this one. At 100 TB of *data* the metadata tree
   * is still MB-scale — this boundary is deliberate and documented
   * (SURVEY §7.3): a DSv2 connector would add complexity with no pruning or
   * parallelism to win at these row counts.
@@ -53,12 +58,8 @@ object MetaRelations {
   /** `files` relation, pinned to a snapshot (None = current). Small
     * tables parse driver-side (a 5k-row frame split across 32 partitions
     * pays more task overhead than compute); big tables distribute the
-    * manifest reads ([[DistributeEntriesThreshold]]). The threshold is a
-    * parameter so warmup code can force the DISTRIBUTED plan family on a
-    * tiny table (pass 0) — the two paths produce different physical plan
-    * shapes, and codegen warmed on one does not cover the other. */
+    * manifest reads ([[DistributeEntriesThreshold]]). */
   def files(spark: SparkSession, t: IcebergTable, snapshotId: Option[Long] = None,
-      distributeThreshold: Int = DistributeEntriesThreshold,
       // manifest-level pruning (ManifestSummaries): a caller that has
       // already ruled out manifests via their partition summaries passes
       // the survivors — only THEIR Avro is ever parsed, driver or executor
@@ -67,7 +68,7 @@ object MetaRelations {
     val dataManifests = onlyManifests.getOrElse(allDataManifests)
     val approxEntries = dataManifests
       .map(m => m.addedFilesCount + m.existingFilesCount).sum
-    if (approxEntries <= distributeThreshold) {
+    if (approxEntries <= DistributeEntriesThreshold) {
       val rows =
         if (dataManifests.size == allDataManifests.size)
           t.files(snapshotId).map(entryRow) // memoized full listing

@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, count, lit, sum}
 
 import graft.Sessions
 import graft.fixtures.FixtureWriter
@@ -21,15 +22,13 @@ import graft.rel.MetaRelations
   */
 object MetaBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       // Metadata-scale frames are small; fewer shuffle partitions cut
-      // task overhead. Codegen stays ON — interpreted mode measured 4-5x
-      // slower even at 5000 rows (UDF decode + exploded maps). AQE is OFF:
-      // its per-stage re-planning is pure overhead on KB-scale frames, and
-      // it made the warmup's plans (5-row table) diverge from the timed
-      // run's (5000-row), defeating the codegen warmup.
+      // task overhead. AQE is OFF: its per-stage re-planning is pure
+      // overhead on KB-scale frames.
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.adaptive.enabled", "false")
       .config("spark.ui.enabled", "false")
@@ -41,34 +40,7 @@ object MetaBench {
     if (!Files.exists(Paths.get(s"$dir/metadata/v1.metadata.json")))
       FixtureWriter.writeMonster(dir) // 5 commits x 1000 files, 10 rows/file
 
-    // steady-state warmup (JIT + codegen), untimed: run the health plan
-    // shapes once against a 5-file mini table so the timed run measures
-    // execution, not Janino compilation (plan-shape codegen is cached)
-    spark.range(1000).count()
-    val warmDir = "/tmp/graft-monster-mini2"
-    if (!Files.exists(Paths.get(s"$warmDir/metadata/v1.metadata.json"))) {
-      // 2 commits so the snapshot-diff warmup below has a pair to diff
-      FixtureWriter.writeMonster(warmDir, nCommits = 2, filesPerCommit = 5)
-    }
-    locally {
-      val t = IcebergTable.load(warmDir)
-      // distributeThreshold = 0 forces the EXECUTOR-PARALLEL manifest-scan
-      // plan family the 5000-file monster uses — warming the driver-side
-      // LocalRelation path (what a 5-file table picks naturally) compiles
-      // none of the mapPartitions/cache plan shapes the timed run needs
-      val files = MetaRelations.files(spark, t, distributeThreshold = 0).cache()
-      val h = MetaHealth.report(spark, t, files)
-      Seq(h.fileStats, h.manifestCensus, h.partitionStats, h.nullRates,
-        h.columnShare, h.columnBounds, h.overlap).foreach(_.collect())
-      // the `files` task's projection-collect and the snapshot-diff shapes
-      // are timed too — warm them on the mini table as well
-      files.select("file_path", "record_count", "file_size_in_bytes", "partition")
-        .collect()
-      files.unpersist()
-      val snaps = t.metadata.snapshots.map(_.snapshotId)
-      if (snaps.size >= 2)
-        MetaDiff.diff(spark, t, snaps(snaps.size - 2), snaps.last).totals.collect()
-    }
+    spark.range(1000).count() // session warm-up, untimed
 
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()
@@ -79,37 +51,17 @@ object MetaBench {
     // summary: load latest snapshot + schema + current-state totals
     val (_, tSummary) = time {
       val t = IcebergTable.load(dir)
-      val files = MetaRelations.files(spark, t)
-      files.agg(
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.col("record_count")),
-        org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.col("file_size_in_bytes"))).collect()
+      MetaRelations.files(spark, t)
+        .agg(count(lit(1)), sum(col("record_count")), sum(col("file_size_in_bytes"))).collect()
     }
 
-    // health: full 5000-file scan — skew, nulls, bounds, overlap. The
-    // seven sections are independent DataFrames over one cached `files`
-    // scan; collect them CONCURRENTLY (the reference fans its TUI panels
-    // out to worker threads the same way — SURVEY §3.3), letting the Spark
-    // scheduler interleave the tiny jobs.
+    // health: the seven sections from one fold over the live entries
     def runHealth(): Unit = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration._
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val t = IcebergTable.load(dir)
-      val files = MetaRelations.files(spark, t).cache()
-      files.count() // materialize once
-      val h = MetaHealth.report(spark, t, files)
-      val sections = Seq(
-        h.fileStats, h.manifestCensus, h.partitionStats,
-        h.nullRates, h.columnShare, h.columnBounds, h.overlap)
-      Await.result(
-        Future.sequence(sections.map(df => Future(df.collect()))), 120.seconds)
-      files.unpersist()
+      val h = MetaHealth.report(spark, IcebergTable.load(dir))
+      Seq(h.fileStats, h.manifestCensus, h.partitionStats, h.nullRates,
+        h.columnShare, h.columnBounds, h.overlap).foreach(_.collect())
     }
-    val (_, tHealth) = time(runHealth())      // cold: includes codegen compile
+    val (_, tHealth) = time(runHealth())      // cold: first run, JIT included
     val (_, tHealthWarm) = time(runHealth())  // steady state
 
     // files: list all file paths + stats
