@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.api.Engine
-import graft.meta.Transforms
 
 /** PERSISTENT dedup component assignment — the `(doc_id, component)`
   * frame [[Dedup.connectedComponents]] produces, materialized as a Graft
@@ -30,8 +29,9 @@ import graft.meta.Transforms
   *
   * Scale shape: the table is `bucket[nBuckets](component)`-partitioned,
   * so [[fold]]'s relabel pass — the one that rewrites WHOLE components —
-  * prunes to the merged-away labels' buckets (a batch merges a handful
-  * of components, so this reads a handful of buckets, not the corpus
+  * reads through [[ScanPlanner]]'s partition-pruned read and touches only
+  * the merged-away labels' buckets (a batch merges a handful of
+  * components, so this reads a handful of buckets, not the corpus
   * assignment). The endpoint-resolution pass is one scan of the table
   * with the batch's id set pushed down, emitting batch-bounded rows.
   * The update commit is merge-on-read ([[Engine.upsert]]): an equality
@@ -94,72 +94,14 @@ final class ComponentIndex(
   def dropList: DataFrame = assignments.select("doc_id")
 
   /** Paths of the files a relabel of `labels`' components must read:
-    * the labels' buckets prune the files relation. The labels are
-    * driver-known longs, so their bucket values compute DRIVER-SIDE
-    * ([[Transforms.literal]], the partition-prune twin of the column
-    * transform) — no Spark job just to hash a handful of longs. Files
-    * with no recorded bucket value survive conservatively, and an
-    * unmappable label disables the prune rather than guessing. */
+    * [[ScanPlanner.pathsWhereIn]] maps the driver-known labels through
+    * the table's own `component` spec fields on the driver — no Spark
+    * job just to hash a handful of longs. Files with no recorded bucket
+    * value survive conservatively, and an unmappable label disables the
+    * prune rather than guessing. */
   def relabelPaths(labels: Seq[Long]): Seq[String] =
-    relabelPaths(labels, engine.load(ref))
-
-  private def relabelPaths(
-      labels: Seq[Long], t: graft.meta.IcebergTable): Seq[String] = {
-    if (t.metadata.currentSnapshotId.isEmpty) return Seq.empty
-    val files = graft.rel.MetaRelations.files(engine.spark, t, None)
-    val keep = BucketPrune.bucketCount(t, "component") match {
-      case None => files
-      case Some(n) =>
-        val lits = labels.map(l =>
-          Transforms.literal(s"bucket[$n]", l.toString, "long"))
-        if (lits.exists(_.isEmpty)) files
-        else {
-          val buckets = lits.flatten.distinct
-          val pv = col("partition")(Transforms.fieldName("component", s"bucket[$n]"))
-          files.filter(pv.isNull || pv.isin(buckets: _*))
-        }
-    }
-    keep.select("file_path").collect()
-      .map(r => t.resolvePath(r.getString(0))).toIndexedSeq
-  }
-
-  /** The assignment restricted to the files `labels`' relabel can touch
-    * — a bucket-pruned scan with merge-on-read deletes still applied. */
-  private def relabelRows(
-      labels: Seq[Long], t: graft.meta.IcebergTable): DataFrame = {
-    val paths = relabelPaths(labels, t)
-    if (paths.isEmpty)
-      engine.spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    else ScanPlanner.readFiles(engine.spark, t, paths)
-  }
-
-  /** [[relabelRows]] for a DataFrame label set (`doc_id` column) — the
-    * corpus-scale twin: the labels' bucket census runs DISTRIBUTED
-    * through the column transform ([[Transforms.column]], the same
-    * Spark-side hash the probe prune uses) and only the ≤ nBuckets
-    * distinct bucket ints come back to the driver, so a retire set of
-    * millions never materializes as a driver literal just to decide
-    * which files to read. */
-  private def relabelRowsDf(
-      labels: DataFrame, t: graft.meta.IcebergTable): DataFrame = {
-    if (t.metadata.currentSnapshotId.isEmpty)
-      return engine.spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    val files = graft.rel.MetaRelations.files(engine.spark, t, None)
-    val keep = BucketPrune.bucketCount(t, "component") match {
-      case None => files
-      case Some(n) =>
-        val buckets = labels
-          .select(Transforms.column(s"bucket[$n]", col("doc_id"), "long").as("b"))
-          .distinct().collect().map(_.getInt(0).toString).toSeq
-        val pv = col("partition")(Transforms.fieldName("component", s"bucket[$n]"))
-        files.filter(pv.isNull || pv.isin(buckets: _*))
-    }
-    val paths = keep.select("file_path").collect()
-      .map(r => t.resolvePath(r.getString(0))).toIndexedSeq
-    if (paths.isEmpty)
-      engine.spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    else ScanPlanner.readFiles(engine.spark, t, paths)
-  }
+    ScanPlanner.pathsWhereIn(engine.spark, engine.load(ref), "component",
+      labels.map(_.toString))
 
   /** Fold one batch's candidate edges into the standing assignment:
     * compute the delta ([[Dedup.incrementalComponents]], sparse
@@ -186,7 +128,8 @@ final class ComponentIndex(
     val store = storeOf(t)
     val delta = Dedup.incrementalComponents(store, newEdges,
       sparseAssign = true,
-      relabelSource = Some(labels => relabelRows(labels, t)))
+      relabelSource = Some(labels => ScanPlanner.readTableWhereIn(
+        engine.spark, t, "component", labels.map(_.toString))))
       .localCheckpoint()
     val upserts = delta.filter(col("doc_id") =!= col("component"))
     if (!upserts.isEmpty) engine.upsert(ref, upserts, Seq("doc_id"),
@@ -263,10 +206,10 @@ final class ComponentIndex(
     * readers and the relabel prune hashes a driver-known label list.
     * Above the threshold every retired-id filter switches to a
     * broadcast semi/anti-join and the relabel prune's bucket census
-    * runs distributed ([[Transforms.column]]) — a compliance batch of
-    * millions of ids never inflates a plan or the driver. Same final
-    * table state either way (spec-pinned with the threshold forced to
-    * 0). */
+    * runs distributed ([[ScanPlanner.readTableWhereInFrame]]) — a
+    * compliance batch of millions of ids never inflates a plan or the
+    * driver. Same final table state either way (spec-pinned with the
+    * threshold forced to 0). */
   def retire(retired: DataFrame, pairsAmong: DataFrame => DataFrame,
       inMaxIds: Int = 1000): DataFrame = {
     val rids = retired.select(col("doc_id")).distinct().localCheckpoint()
@@ -300,15 +243,14 @@ final class ComponentIndex(
         val memberComps = retiredRows.select("component").distinct()
           .collect().map(_.getLong(0))
         val affectedLabels = (memberComps ++ seq).distinct.toIndexedSeq
-        relabelRows(affectedLabels, t)
-          .filter(col("component").isin(affectedLabels: _*))
+        ScanPlanner.readTableWhereIn(engine.spark, t, "component",
+          affectedLabels.map(_.toString))
       case None =>
-        val labels = retiredRows.select(col("component").as("doc_id"))
-          .union(rids).distinct().localCheckpoint()
-        val labelsFit = Dedup.fitsBroadcast(labels)
-        relabelRowsDf(labels, t)
-          .join(Dedup.hintIf(labelsFit)(
-              labels.select(col("doc_id").as("component"))),
+        val labels = retiredRows.select(col("component"))
+          .union(rids.select(col("doc_id").as("component")))
+          .distinct().localCheckpoint()
+        ScanPlanner.readTableWhereInFrame(engine.spark, t, "component", labels)
+          .join(Dedup.hintIf(Dedup.fitsBroadcast(labels))(labels),
             Seq("component"), "left_semi")
     }).localCheckpoint()
     // remaining members: stored members plus the (implicit) label docs

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.api.Engine
-import graft.meta.Transforms
 
 /** PERSISTENT near-duplicate band index — the `(doc_id, band, band_sig)`
   * MinHash-LSH index materialized as a Graft table, so incremental and
@@ -30,10 +29,10 @@ import graft.meta.Transforms
   * corpus documents. Signature parameters are pinned at construction: an
   * index probed with different (numPerm, rowsPerBand) than it was built
   * with would silently miss every collision. (The BUCKET count, by
-  * contrast, is read back from the table's own partition spec at probe
-  * time — pruning with a different N than the files were written under
-  * would be silently unsound, so the constructor value is only used by
-  * [[create]].)
+  * contrast, is read back from the table's own partition specs at probe
+  * time by [[ScanPlanner]]'s pruned read — pruning with a different N
+  * than the files were written under would be silently unsound, so the
+  * constructor value is only used by [[create]].)
   */
 final class NearDupIndex(
     val engine: Engine,
@@ -64,54 +63,20 @@ final class NearDupIndex(
     * keys; no document text anywhere in this plan). */
   def signatures: DataFrame = engine.readTable(ref)
 
-  /** Bucket count the index TABLE was built with, read from its own
-    * partition spec — NOT the constructor: pruning with a different N
-    * than the files were written under would silently miss collisions.
-    * None = not bucket-partitioned on band_sig (or conflicting specs
-    * after evolution) → probes fall back to the full scan. Soundness
-    * rules shared with the component ledger: [[BucketPrune]]. */
-  private def tableBucketCount(t: graft.meta.IcebergTable): Option[Int] =
-    BucketPrune.bucketCount(t, "band_sig")
-
   /** Paths of the index files a probe for `batchSigs` must read: the
     * batch's distinct band-sig buckets (≤ nBuckets ints — a
-    * metadata-scale collect) prune the files relation to colliding
-    * buckets. Files with no recorded bucket value (written before the
-    * table was bucketed) survive conservatively. */
+    * metadata-scale census) prune the table's files through
+    * [[ScanPlanner.pathsWhereInFrame]], under the bucket count each file
+    * was WRITTEN with (read from the table's own partition specs, never
+    * the constructor). Files with no recorded bucket value (written
+    * before the table was bucketed) survive conservatively. */
   def probePaths(batchSigs: DataFrame): Seq[String] =
-    probePaths(batchSigs, engine.load(ref))
-
-  /** [[probePaths]] against an already-loaded table — the probe paths
-    * (one `load` + metadata parse, a catalog round-trip on network
-    * backends) reuse it instead of re-loading per helper. */
-  private def probePaths(
-      batchSigs: DataFrame, t: graft.meta.IcebergTable): Seq[String] = {
-    if (t.metadata.currentSnapshotId.isEmpty) return Seq.empty
-    val files = graft.rel.MetaRelations.files(engine.spark, t, None)
-    val keep = tableBucketCount(t) match {
-      case None => files
-      case Some(n) =>
-        val buckets = batchSigs
-          .select(Transforms.column(s"bucket[$n]", col("band_sig"), "long").as("b"))
-          .distinct().collect().map(_.getInt(0).toString).toSeq
-        val pv = col("partition")(Transforms.fieldName("band_sig", s"bucket[$n]"))
-        files.filter(pv.isNull || pv.isin(buckets: _*))
-    }
-    // metadata-scale collect: the surviving PATH LIST parameterizes the
-    // scan, exactly like ScanPlanner.readTableWhere
-    keep.select("file_path").collect()
-      .map(r => t.resolvePath(r.getString(0))).toIndexedSeq
-  }
+    ScanPlanner.pathsWhereInFrame(engine.spark, engine.load(ref), "band_sig", batchSigs)
 
   /** The index restricted to the files `batchSigs` can collide with —
     * a bucket-pruned scan with merge-on-read deletes still applied. */
-  private def probeSignatures(batchSigs: DataFrame): DataFrame = {
-    val t = engine.load(ref) // ONE load feeds both the prune and the scan
-    val paths = probePaths(batchSigs, t)
-    if (paths.isEmpty)
-      engine.spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    else ScanPlanner.readFiles(engine.spark, t, paths)
-  }
+  private def probeSignatures(batchSigs: DataFrame): DataFrame =
+    ScanPlanner.readTableWhereInFrame(engine.spark, engine.load(ref), "band_sig", batchSigs)
 
   /** Flag increment docs whose bands collide with the index: one row per
     * flagged doc `(doc_id, dup_of, n_bands)`; absent docs are clean.

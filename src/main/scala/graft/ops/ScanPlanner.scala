@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.expr.IcebergDecode
@@ -98,28 +98,62 @@ object ScanPlanner {
     // `partitionEquals` keys are SOURCE columns; each maps through every
     // spec field derived from that source (identity, bucket[N],
     // truncate[W] — any spec version) to the partition value a matching
-    // file must carry. Files lacking the key (other spec versions) keep
-    // conservatively; a partition-field name with conflicting transforms
-    // across specs is skipped (cannot prune soundly on one value).
-    val partOk = partitionEquals.foldLeft(lit(true)) { case (acc, (k, v)) =>
-      val src = t.metadata.currentSchema.fields.find(_.name == k)
-        .getOrElse(throw new NoSuchElementException(
-          s"partition predicate column $k not in current schema"))
-      val specFields = t.metadata.partitionSpecs.flatMap(_.fields)
-        .filter(_.sourceId == src.id)
-      specFields.groupBy(_.name).toSeq.sortBy(_._1).flatMap { case (pname, sfs) =>
-        sfs.map(_.transform).distinct match {
-          // every stored form a match may carry (canonical + the raw
-          // spelling — foreign manifests may store non-canonical)
-          case Seq(tr) => graft.meta.Transforms.literalForms(tr, v, src.fieldType)
-            .map(pvs => col("partition")(pname).isNull ||
-              col("partition")(pname).isin(pvs.map(lit(_)): _*))
-          case _ => None
-        }
-      }.foldLeft(acc)(_ && _)
-    }
-    files.filter(loOk && hiOk && partOk)
+    // file must carry (see [[inGroups]])
+    files.filter(loOk && hiOk &&
+      groupsFilter(partitionProbeGroups(t, partitionEquals)))
   }
+
+  /** The spec fields derived from source `column`, one per spec-field
+    * NAME: `Some(transform)` when every spec version agrees on it, `None`
+    * when they conflict (no single stored form to prune on). */
+  private def specFieldsOf(t: IcebergTable, column: String)
+      : (graft.meta.SchemaField, Seq[(String, Option[String])]) = {
+    val src = t.metadata.currentSchema.fields.find(_.name == column)
+      .getOrElse(throw new NoSuchElementException(
+        s"partition predicate column $column not in current schema"))
+    src -> t.metadata.partitionSpecs.flatMap(_.fields)
+      .filter(_.sourceId == src.id)
+      .groupBy(_.name).toSeq.sortBy(_._1).map { case (pname, sfs) =>
+        pname -> (sfs.map(_.transform).distinct match {
+          case Seq(tr) => Some(tr)
+          case _ => None
+        })
+      }
+  }
+
+  /** `column ∈ values` as (spec-field name → allowed stored forms)
+    * groups — the shape every pruning tier consumes. Each value maps
+    * through the field's transform to every stored form a matching file
+    * may carry (canonical + the raw spelling: foreign manifests may store
+    * non-canonical). A group is `None` (cannot prune) for conflicting
+    * transforms or when ANY value fails to map: pruning on a PARTIAL
+    * literal set would drop files holding the unmappable value's rows
+    * while the residual row filter still matches them. */
+  private def inGroups(t: IcebergTable, column: String,
+      values: Seq[String]): Seq[(String, Option[Set[String]])] = {
+    val (src, fields) = specFieldsOf(t, column)
+    fields.map { case (pname, transform) =>
+      pname -> transform.flatMap { tr =>
+        val pvs = values.map(v =>
+          graft.meta.Transforms.literalForms(tr, v, src.fieldType))
+        if (pvs.exists(_.isEmpty)) None else Some(pvs.flatten.flatten.toSet)
+      }
+    }
+  }
+
+  /** The partition-equals probes as [[inGroups]], one key at a time. */
+  private def partitionProbeGroups(t: IcebergTable,
+      partitionEquals: Map[String, String]): Seq[(String, Option[Set[String]])] =
+    partitionEquals.toSeq.flatMap { case (k, v) => inGroups(t, k, Seq(v)) }
+
+  /** The groups as a predicate over the files relation: a file's recorded
+    * value must be allowed, or absent (files of other spec versions keep
+    * — conservative). */
+  private def groupsFilter(groups: Seq[(String, Option[Set[String]])]): Column =
+    groups.flatMap { case (pname, allowed) =>
+      allowed.map(av => col("partition")(pname).isNull ||
+        col("partition")(pname).isin(av.toSeq.map(lit(_)): _*))
+    }.foldLeft(lit(true))(_ && _)
 
   /** Read the ACTUAL data of a snapshot as a DataFrame (all live files),
     * with v2 position deletes applied merge-on-read: deleted (file, pos)
@@ -743,83 +777,124 @@ object ScanPlanner {
       column: String,
       values: Seq[String],
       snapshotId: Option[Long] = None): DataFrame = {
-    val src = t.metadata.currentSchema.fields.find(_.name == column)
-      .getOrElse(throw new NoSuchElementException(
-        s"partition predicate column $column not in current schema"))
-    val specFields = t.metadata.partitionSpecs.flatMap(_.fields)
-      .filter(_.sourceId == src.id)
-    // one prune condition per spec-field name: the file's recorded value
-    // must be among the transformed literals (or absent — conservative).
-    // A name with conflicting transforms across specs cannot prune, and
-    // neither can one where ANY value fails to map through the transform
-    // (same contract as pruneFiles' single-value None): pruning on a
-    // PARTIAL literal set would drop files holding the unmappable
-    // value's rows while the residual row filter still matches them.
-    val groups: Seq[(String, Option[Set[String]])] =
-      specFields.groupBy(_.name).toSeq.sortBy(_._1).map {
-        case (pname, sfs) => pname -> (sfs.map(_.transform).distinct match {
-          case Seq(tr) =>
-            val pvs = values.map(v =>
-              graft.meta.Transforms.literalForms(tr, v, src.fieldType))
-            if (pvs.exists(_.isEmpty)) None
-            else Some(pvs.flatten.flatten.distinct.toSet)
-          case _ => None
-        })
+    val groups = inGroups(t, column, values)
+    prunedRead(spark, t, snapshotId, prunePaths(spark, t, snapshotId, groups),
+      col(column).isin(values.map(lit(_)): _*))
+  }
+
+  /** The data files a [[readTableWhereIn]] probe opens. */
+  def pathsWhereIn(spark: SparkSession, t: IcebergTable, column: String,
+      values: Seq[String]): Seq[String] = {
+    val groups = inGroups(t, column, values)
+    prunePaths(spark, t, None, groups)._1
+  }
+
+  /** The frame-keyed twin of [[readTableWhereIn]], for key sets that
+    * must not reach the driver (a streaming batch's band keys, a
+    * mass-retire label set): the keys are `keys`' `column` column. ONE
+    * distributed census collects their distinct stored forms under each
+    * `bucket[N]` spec field of the column — at most N values per field,
+    * metadata-scale — and feeds the same prune core. Only bucket fields
+    * prune (the census renders their stored form exactly); every other
+    * field keeps its files. No residual filter: the caller joins the
+    * keys against the result. */
+  def readTableWhereInFrame(spark: SparkSession, t: IcebergTable,
+      column: String, keys: DataFrame): DataFrame =
+    prunedRead(spark, t, None,
+      prunePaths(spark, t, None, censusGroups(t, column, keys)), lit(true))
+
+  /** The data files a [[readTableWhereInFrame]] probe opens. */
+  def pathsWhereInFrame(spark: SparkSession, t: IcebergTable,
+      column: String, keys: DataFrame): Seq[String] =
+    prunePaths(spark, t, None, censusGroups(t, column, keys))._1
+
+  /** [[inGroups]] for a key FRAME, restricted to `bucket[N]` fields: one
+    * job-bounded census of the distinct transformed keys (≤ the product
+    * of the fields' bucket counts — one field outside spec evolution).
+    * Null keys drop out: they match no row of an equi-join. */
+  private def censusGroups(t: IcebergTable, column: String,
+      keys: DataFrame): Seq[(String, Option[Set[String]])] = {
+    val (src, fields) = specFieldsOf(t, column)
+    val buckets = fields.collect {
+      case (pname, Some(tr)) if tr.startsWith("bucket[") => pname -> tr }
+    if (buckets.isEmpty) Seq.empty
+    else {
+      val census = keys.select(buckets.map { case (_, tr) =>
+          // a DataType, not "string": a type name parses through the
+          // SQL parser, whose grammar cache then stays on the heap
+          graft.meta.Transforms.column(tr, col(column), src.fieldType)
+            .cast(org.apache.spark.sql.types.StringType) }: _*)
+        .distinct().collect()
+      buckets.zipWithIndex.map { case ((pname, _), i) =>
+        pname -> Some(census.flatMap(r => Option(r.getString(i))).toSet)
       }
-    // metadata-SMALL snapshots (summary-gated, no manifest read needed
-    // to decide) prune entirely on the driver — zero Spark actions, the
-    // difference between ~0.3 s and ~0 for index probes on micro-batch
-    // streams; above the threshold the files RELATION prunes with its
-    // executor-parallel manifest parse (the >2000-entry contract)
+    }
+  }
+
+  /** THE partition-probe prune core: the MANIFEST tier first
+    * ([[graft.meta.ManifestSummaries.mayMatch]] — a manifest whose
+    * partition summary excludes every allowed value is never OPENED;
+    * summary-less manifests keep), then the FILE tier over the kept
+    * manifests. Metadata-SMALL snapshots (summary-gated, at or under
+    * [[DriverPruneMaxFiles]]) prune on the driver with zero Spark
+    * actions — the difference between ~0.1 s and ~0 for index probes on
+    * micro-batch streams; larger ones prune through the files RELATION's
+    * executor-parallel manifest parse. Returns the kept data-file paths
+    * and the kept manifests (the scan's classification-listing hint).
+    * `groups` is only evaluated when the snapshot has data manifests. */
+  private def prunePaths(
+      spark: SparkSession,
+      t: IcebergTable,
+      snapshotId: Option[Long],
+      groups: => Seq[(String, Option[Set[String]])])
+      : (IndexedSeq[String], Seq[graft.meta.ManifestFile]) = {
+    val allManifests = t.manifests(snapshotId).filter(_.content == 0)
+    if (allManifests.isEmpty) return (IndexedSeq.empty, Seq.empty)
+    val gs = groups
+    val kept = allManifests.filter(m =>
+      graft.meta.ManifestSummaries.mayMatch(t.metadata, m, gs))
     val totalFiles: Option[Long] = snapshotId
       .flatMap(id => t.metadata.snapshot(id))
       .orElse(t.metadata.currentSnapshot)
       .flatMap(_.summary.get("total-data-files"))
       .flatMap(s => scala.util.Try(s.toLong).toOption)
-    // MANIFEST-level tier first (ManifestSummaries.mayMatch): a manifest
-    // whose partition summary range excludes every probed value is never
-    // OPENED — at scale the probe parses the few manifests covering the
-    // probed partitions, not the whole list. Summary-less manifests
-    // (legacy, foreign, unsummarizable fields) keep conservatively.
-    val allManifests = t.manifests(snapshotId).filter(_.content == 0)
-    val keptManifests = allManifests.filter(m =>
-      graft.meta.ManifestSummaries.mayMatch(t.metadata, m, groups))
-    val pruned: Array[String] =
-      if (totalFiles.exists(_ <= DriverPruneMaxFiles)) {
-        val entries =
-          if (keptManifests.size == allManifests.size)
-            t.files(snapshotId) // memoized full listing
-          else keptManifests
-            .flatMap(m => t.manifestEntries(t.resolvePath(m.manifestPath)))
-            .filter(_.status != 2)
-        entries.iterator.filter(e => groups.forall {
-          case (pname, allowed) =>
+    val paths =
+      if (totalFiles.exists(_ <= DriverPruneMaxFiles))
+        (if (kept.size == allManifests.size) t.files(snapshotId) // memoized
+         else kept.flatMap(m => t.manifestEntries(t.resolvePath(m.manifestPath)))
+           .filter(_.status != 2)).iterator
+          .filter(e => gs.forall { case (pname, allowed) =>
             allowed.forall(av => e.partition.get(pname).forall(av.contains))
-        }).map(e => t.resolvePath(e.filePath)).toArray
-      } else {
-        val keep = groups.flatMap { case (pname, allowed) =>
-          allowed.map(av => col("partition")(pname).isNull ||
-            col("partition")(pname).isin(av.toSeq: _*))
-        }.foldLeft(lit(true))(_ && _)
+          })
+          .map(e => t.resolvePath(e.filePath)).toIndexedSeq
+      else
         graft.rel.MetaRelations.files(spark, t, snapshotId,
-            onlyManifests = Some(keptManifests))
-          .filter(keep).select("file_path")
-          .collect().map(r => t.resolvePath(r.getString(0)))
-      }
-    val resid = col(column).isin(values.map(lit(_)): _*)
-    if (pruned.isEmpty)
-      emptyOrPinned(spark, t, anyLiveFile(t, snapshotId), snapshotId)
-    else
-      // the file-scoped split applies to pruned scans too: surviving
-      // delete-untouched files scan bare, only hit files pay anti-joins
-      readSplit(spark, t, snapshotId, pruned.toIndexedSeq,
-        manifestsHint = Some(keptManifests)).filter(resid)
+            onlyManifests = Some(kept))
+          .filter(groupsFilter(gs)).select("file_path")
+          .collect().map(r => t.resolvePath(r.getString(0))).toIndexedSeq
+    (paths, kept)
   }
 
-  /** Read the data with metadata pruning: only files whose bounds may
-    * hold `column ∈ [lo, hi]` are opened; the exact range predicate is
-    * re-applied row-level (and pushed into the parquet row groups by
-    * Catalyst), so the result equals the unpruned filtered read. */
+  /** The one pruned-scan tail: the kept paths go through the file-scoped
+    * merge-on-read split (deletes apply to a pruned subset too; surviving
+    * delete-untouched files scan bare), hinted with the kept manifests,
+    * then `resid` re-applies the exact predicate row-level. Nothing kept:
+    * the correct result is EMPTY with the table's schema, scanning
+    * nothing. */
+  private def prunedRead(
+      spark: SparkSession,
+      t: IcebergTable,
+      snapshotId: Option[Long],
+      pruned: (Seq[String], Seq[graft.meta.ManifestFile]),
+      resid: Column): DataFrame = {
+    val (paths, kept) = pruned
+    if (paths.isEmpty)
+      emptyOrPinned(spark, t, anyLiveFile(t, snapshotId), snapshotId)
+    else
+      readSplit(spark, t, snapshotId, paths.toIndexedSeq,
+        manifestsHint = Some(kept)).filter(resid)
+  }
+
   /** ONE live data file of the snapshot, parsing manifests lazily until
     * an entry turns up — what the pruned-to-empty read paths pin their
     * result schema on. [[IcebergTable.files]] would parse EVERY manifest
@@ -832,29 +907,10 @@ object ScanPlanner {
       .map(e => t.resolvePath(e.filePath))
       .nextOption()
 
-  /** The partition-equals probes as (spec-field name -> allowed stored
-    * forms) groups — the shape both pruning tiers consume. Mirrors
-    * [[pruneFiles]]'s partOk semantics exactly: one group per spec-field
-    * name, `None` (cannot prune) for conflicting transforms or an
-    * unmappable literal, same missing-column exception. */
-  private def partitionProbeGroups(t: IcebergTable,
-      partitionEquals: Map[String, String]): Seq[(String, Option[Set[String]])] =
-    partitionEquals.toSeq.flatMap { case (k, v) =>
-      val src = t.metadata.currentSchema.fields.find(_.name == k)
-        .getOrElse(throw new NoSuchElementException(
-          s"partition predicate column $k not in current schema"))
-      t.metadata.partitionSpecs.flatMap(_.fields)
-        .filter(_.sourceId == src.id)
-        .groupBy(_.name).toSeq.sortBy(_._1).map { case (pname, sfs) =>
-          pname -> (sfs.map(_.transform).distinct match {
-            case Seq(tr) =>
-              graft.meta.Transforms.literalForms(tr, v, src.fieldType)
-                .map(_.toSet)
-            case _ => None
-          })
-        }
-    }
-
+  /** Read the data with metadata pruning: only files whose bounds may
+    * hold `column ∈ [lo, hi]` are opened; the exact range predicate is
+    * re-applied row-level (and pushed into the parquet row groups by
+    * Catalyst), so the result equals the unpruned filtered read. */
   def readTableWhere(
       spark: SparkSession,
       t: IcebergTable,
@@ -883,18 +939,6 @@ object ScanPlanner {
       // back to the driver to parameterize the scan, exactly like any
       // Iceberg planner's task list
       .collect().map(r => t.resolvePath(r.getString(0)))
-    val df =
-      if (pruned.nonEmpty)
-        // deletes apply to the pruned subset too — a deleted row must not
-        // reappear just because the scan was narrowed; the file-scoped
-        // split keeps the untouched survivors on the bare vectorized path
-        readSplit(spark, t, snapshotId, pruned.toIndexedSeq,
-          manifestsHint = Some(keptManifests))
-      else
-        // everything pruned: the correct result is EMPTY with the table's
-        // schema — read it from any live file (or the declared schema
-        // when the snapshot has none), scan nothing
-        return emptyOrPinned(spark, t, anyLiveFile(t, snapshotId), snapshotId)
     // lo/hi are in the BOUNDS' numeric domain (timestamps = micros,
     // dates = epoch days — [[graft.expr.IcebergDecode.decodeNumeric]]);
     // the row-level re-filter must compare in the same domain, and a
@@ -920,7 +964,7 @@ object ScanPlanner {
       // to the column type, so the comparison stays pushdown-eligible
       acc && col(k) === lit(v)
     }
-    df.filter(resid)
+    prunedRead(spark, t, snapshotId, (pruned.toIndexedSeq, keptManifests), resid)
   }
 
   /** Read the data pruned to `column ∈ points` through the files' COLUMN
@@ -971,12 +1015,7 @@ object ScanPlanner {
       // metadata-scale collect: the surviving PATH LIST parameterizes
       // the scan, exactly like readTableWhere
       .collect().map(r => t.resolvePath(r.getString(0)))
-    if (pruned.isEmpty)
-      // every file pruned: EMPTY with the table's schema, scan nothing
-      emptyOrPinned(spark, t, anyLiveFile(t, snapshotId), snapshotId)
-    else
-      readSplit(spark, t, snapshotId, pruned.toIndexedSeq,
-          manifestsHint = Some(keptManifests))
-        .filter(col(column).isin(sorted: _*))
+    prunedRead(spark, t, snapshotId, (pruned.toIndexedSeq, keptManifests),
+      col(column).isin(sorted: _*))
   }
 }

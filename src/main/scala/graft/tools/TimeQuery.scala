@@ -6,9 +6,10 @@ import graft.Sessions
 import graft.queries.Registry
 
 /** Dev helper: time one registered query N times in-process under the
-  * same session shape as [[graft.Bench]] (local[32], 32 shuffle
-  * partitions, AQE on) — JVM startup and first-use codegen excluded from
-  * all but the first sample.
+  * same session shape as [[graft.Bench]] (local[cpus], cpus shuffle
+  * partitions, AQE on; cpus from `SPARK_GRAFT_CPUS`, else every core) —
+  * JVM startup and first-use codegen excluded from all but the first
+  * sample.
   * Usage: runMain graft.tools.TimeQuery <queryName> [sfDir] [n]
   */
 object TimeQuery {
@@ -16,7 +17,8 @@ object TimeQuery {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val n = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

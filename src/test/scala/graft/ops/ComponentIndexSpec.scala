@@ -97,6 +97,65 @@ class ComponentIndexSpec extends SparkSpec {
         .filter { case (k, v) => k != v })
   }
 
+  test("relabelPaths at or below DriverPruneMaxFiles runs no Spark job") {
+    val s2 = spark
+    import s2.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("compidxjobs").toString
+    val e = new Engine(spark, wh)
+    val idx = new ComponentIndex(e, "ns.comp_jobs", nBuckets = 8)
+    idx.create()
+    idx.bootstrap((0L until 40L by 2L).map(i => (i, i + 1L)).toDF("a_id", "b_id"))
+    val files = e.load("ns.comp_jobs").files().size
+    assert(files > 1 && files <= ScanPlanner.DriverPruneMaxFiles)
+    var paths = Seq.empty[String]
+    assert(jobsDuring { paths = idx.relabelPaths(Seq(10L, 12L, 14L, 16L, 18L)) } == 0)
+    assert(paths.nonEmpty && paths.size < files)
+  }
+
+  test("re-bucketed ledger (bucket[8] -> bucket[16]): folds and both " +
+      "retire paths stay equal to the from-scratch closure") {
+    val s2 = spark
+    import s2.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("compidxrebucket").toString
+    val e = new Engine(spark, wh)
+    val idx = new ComponentIndex(e, "ns.rebucket_comps", nBuckets = 8)
+    idx.create()
+    val boot = (0L until 40L by 2L).map(i => (i, i + 1L))
+    idx.bootstrap(boot.toDF("a_id", "b_id"))
+    e.setPartitionSpec("ns.rebucket_comps", Seq("bucket[16](component)"))
+    def closure(ps: Seq[(Long, Long)]) =
+      asMap(Dedup.connectedComponents(ps.toDF("a_id", "b_id")))
+        .filter { case (k, v) => k != v }
+    // a fold under the new spec: relabels rows written under bucket[8]
+    // and writes them back under bucket[16]
+    val batch1 = Seq((1L, 3L), (5L, 7L), (100L, 9L))
+    idx.fold(batch1.toDF("a_id", "b_id"))
+    val specs = e.load("ns.rebucket_comps").manifests()
+      .filter(_.content == 0).map(_.partitionSpecId).distinct
+    assert(specs.size == 2, s"expected files under both specs, got $specs")
+    assert(asMap(idx.assignments) == closure(boot ++ batch1))
+    // a second fold merges components stored under both layouts
+    val batch2 = Seq((3L, 11L), (7L, 13L), (200L, 0L))
+    idx.fold(batch2.toDF("a_id", "b_id"))
+    val edges = boot ++ batch1 ++ batch2
+    assert(asMap(idx.assignments) == closure(edges))
+
+    // retire: the literal path, then the frame-keyed (threshold 0) path
+    var retired = Set.empty[Long]
+    def provider(ids: org.apache.spark.sql.DataFrame) = {
+      val s = ids.collect().map(_.getLong(0)).toSet
+      edges.filter(p => s(p._1) && s(p._2) && !retired(p._1) && !retired(p._2))
+        .toDF("a_id", "b_id")
+    }
+    retired ++= Seq(3L, 12L)
+    idx.retire(Seq(3L, 12L), provider)
+    def live = edges.filter(p => !retired(p._1) && !retired(p._2))
+    assert(asMap(idx.assignments) == closure(live))
+    retired ++= Seq(0L, 7L)
+    idx.retire(Seq(0L, 7L).toDF("doc_id"), provider, inMaxIds = 0)
+    assert(asMap(idx.assignments) == closure(live))
+  }
+
   test("retire re-clusters only affected components: bridge removal " +
       "splits, label removal relabels, singletons are a no-op") {
     val s2 = spark

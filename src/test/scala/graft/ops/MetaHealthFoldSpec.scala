@@ -1,11 +1,9 @@
 package graft.ops
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Random
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -319,23 +317,6 @@ class MetaHealthFoldSpec extends SparkSpec {
     val key = "spark.graft.overlap.distributedSweepRows"
     spark.conf.set(key, "100")
     try assertFoldEqualsReference(t) finally spark.conf.unset(key)
-  }
-
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    // the listener bus is async: settle before and after, so events still
-    // queued from earlier work are not counted
-    def settled(): Int = {
-      var last = -1
-      while (last != jobs.get()) { last = jobs.get(); Thread.sleep(300) }
-      last
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { val before = settled(); body; settled() - before }
-    finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("the report runs no job below the threshold and one above it") {

@@ -134,6 +134,81 @@ class NearDupIndexSpec extends SparkSpec {
     assert(idx.admit(again).count() == 1L) // fresh copy re-enters
   }
 
+  /** 40 templated corpus docs: wide enough that band signatures land in
+    * (essentially) every bucket, and several docs are near-dups of each
+    * other. */
+  private def templatedCorpus(ids: Seq[Long]) = {
+    val s2 = spark
+    import s2.implicits._
+    ids.map(i =>
+      (i, s"corpus document number $i carrying its own distinctive payload " +
+        s"token${i}a token${i}b token${i}c token${i}d"))
+      .toDF("doc_id", "text")
+  }
+
+  test("probePaths at or below DriverPruneMaxFiles runs only its bucket-census jobs") {
+    val s2 = spark
+    import s2.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("ndjobs").toString
+    val e = new Engine(spark, wh)
+    val idx = new NearDupIndex(e, "ns.jobs_index", nBuckets = 8)
+    idx.create()
+    idx.bootstrap(templatedCorpus(1L to 40L))
+    val t = e.load("ns.jobs_index")
+    assert(t.files().size <= ScanPlanner.DriverPruneMaxFiles)
+    val batchSigs = Dedup.bandSignatures(Seq((1000L,
+      "corpus document number 7 carrying its own distinctive payload " +
+        "token7a token7b token7c token7d")).toDF("doc_id", "text"))
+      .localCheckpoint()
+    val warm = idx.probePaths(batchSigs)
+    assert(warm.nonEmpty && warm.size < t.files().size)
+    // the census alone: distinct bucket values of the batch's band keys
+    val census = jobsDuring(batchSigs
+      .select(graft.meta.Transforms.column("bucket[8]", col("band_sig"), "long")
+        .cast(org.apache.spark.sql.types.StringType))
+      .distinct().collect())
+    assert(census > 0)
+    // the file prune itself runs on the driver: no job beyond the census
+    assert(jobsDuring(idx.probePaths(batchSigs)) == census)
+  }
+
+  test("re-bucketed index (bucket[8] -> bucket[16]): the gate flags exactly " +
+      "what an unpruned band join over the signatures flags") {
+    val s2 = spark
+    import s2.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("ndrebucket").toString
+    val e = new Engine(spark, wh)
+    val idx = new NearDupIndex(e, "ns.rebucket_index", nBuckets = 8)
+    idx.create()
+    idx.bootstrap(templatedCorpus(1L to 40L))
+    e.setPartitionSpec("ns.rebucket_index", Seq("bucket[16](band_sig)"))
+    // one batch admitted under the new spec: the index now holds files
+    // of both layouts
+    val fresh = Seq(
+      (500L, "an unrelated sentence about sailing boats across the northern sea"),
+      (501L, "quarterly revenue tables for a small bakery in the old town"))
+      .toDF("doc_id", "text")
+    assert(idx.admit(fresh).count() == 2L)
+    val specs = e.load("ns.rebucket_index").manifests()
+      .filter(_.content == 0).map(_.partitionSpecId).distinct
+    assert(specs.size == 2, s"expected files under both specs, got $specs")
+
+    // a batch colliding with both layouts, plus a clean doc
+    val batch = Seq(
+      (1000L, "corpus document number 7 carrying its own distinctive payload " +
+        "token7a token7b token7c token7d"),
+      (1001L, "an unrelated sentence about sailing boats across the northern sea"),
+      (1002L, "a genuinely novel line that shares no shingle with anything"))
+      .toDF("doc_id", "text")
+    val sigs = Dedup.bandSignatures(batch).localCheckpoint()
+    val expected = Dedup.bandCollisions(sigs, idx.signatures)
+      .collect().map(_.toSeq).toSet
+    assert(expected.map(_.head) == Set(1000L, 1001L), expected.toString)
+    assert(idx.check(batch).collect().map(_.toSeq).toSet == expected)
+    assert(idx.admit(batch).select("doc_id").as[Long].collect().toSeq ==
+      Seq(1002L))
+  }
+
   test("admit with dedupWithinBatch keeps one doc per intra-batch dup group") {
     val s2 = spark
     import s2.implicits._
