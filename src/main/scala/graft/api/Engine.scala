@@ -660,22 +660,9 @@ class Engine(val spark: SparkSession, warehouseDir: String,
     if (warehouseDir.nonEmpty) Overview.tableFacts(spark, warehouseDir)
     else Overview.tableFactsFromCatalog(spark, catalog)
 
-  /** A8 — one-row table summary (ref `formatters.py:940-979`). */
-  def summary(ref: String): DataFrame = {
-    val t = load(ref)
-    val files = MetaRelations.files(spark, t)
-    val md = t.metadata
-    files.agg(
-        count(lit(1)).as("file_count"),
-        coalesce(sum(col("record_count")), lit(0L)).as("total_records"),
-        coalesce(sum(col("file_size_in_bytes")), lit(0L)).as("total_bytes"),
-        countDistinct(col("partition")).as("partition_count"))
-      .withColumn("table_name", lit(ref))
-      .withColumn("format_version", lit(md.formatVersion))
-      .withColumn("snapshot_count", lit(md.snapshots.size))
-      .withColumn("field_count", lit(md.currentSchema.fields.size))
-      .withColumn("last_updated_ms", lit(md.lastUpdatedMs))
-  }
+  /** A8 — one-row table summary (ref `formatters.py:940-979`), from one
+    * fold over the live entries ([[MetaRelations.summary]]). */
+  def summary(ref: String): DataFrame = MetaRelations.summary(spark, load(ref), ref)
 
   /** W1 — recent operations: newest 5 snapshots (ref `formatters.py:952-965`). */
   def recentOps(ref: String): DataFrame =
@@ -957,35 +944,10 @@ class Engine(val spark: SparkSession, warehouseDir: String,
 
   /** The TUI metadata-tree data (ref `formatters.py:1195-1307`): one row
     * per manifest with entry stats, share of total rows (A13 "45% of
-    * rows") and the size-color class vs the average file size (W8). */
-  def tree(ref: String, snapshotId: Option[Long] = None): DataFrame = {
-    val t = load(ref)
-    val perManifest = {
-      val rows = t.manifests(snapshotId).map { m =>
-        val entries = t.manifestEntries(m.manifestPath).filter(_.status != 2)
-        (m.manifestPath, m.content, entries.size.toLong,
-          entries.map(_.recordCount).sum, entries.map(_.fileSizeInBytes).sum)
-      }
-      spark.createDataFrame(rows)
-        .toDF("manifest_path", "content", "file_count", "row_count", "total_bytes")
-    }
-    // GLOBAL-WINDOW BOUND: perManifest is a DRIVER-BUILT local relation
-    // with one row per manifest (metadata-scale); the empty-partition
-    // window never sees data rows.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy()
-    perManifest
-      .withColumn("pct_of_rows",
-        round(lit(100.0) * col("row_count") / sum(col("row_count")).over(w), 2))
-      .withColumn("avg_bytes",
-        sum(col("total_bytes")).over(w) / sum(col("file_count")).over(w))
-      .withColumn("size_color",
-        when(col("file_count") === 0, "green")
-          .when(col("total_bytes") / col("file_count") <= col("avg_bytes") * 0.5, "green")
-          .when(col("total_bytes") / col("file_count") <= col("avg_bytes") * 1.5, "yellow")
-          .otherwise(lit("red")))
-      .drop("avg_bytes")
-      .orderBy("manifest_path")
-  }
+    * rows") and the size-color class vs the average file size (W8), from
+    * one fold over the entries ([[MetaRelations.tree]]). */
+  def tree(ref: String, snapshotId: Option[Long] = None): DataFrame =
+    MetaRelations.tree(spark, load(ref), snapshotId)
 
   /** Namespace health fan-out (ref `cli.py:1131-1163` `health --namespace`):
     * one report per table in the namespace. Reports build concurrently —

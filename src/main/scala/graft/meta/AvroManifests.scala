@@ -222,14 +222,14 @@ object AvroManifests {
 
   // ---- read ----
 
-  private def readAll(path: String, schema: Schema): Seq[GenericRecord] = {
+  private def readAll[A](path: String, schema: Schema)(f: GenericRecord => A): Seq[A] = {
     val reader = DataFileReader.openReader(new File(path), new GenericDatumReader[GenericRecord](schema))
-    try reader.iterator().asScala.toVector
+    try reader.iterator().asScala.map(f).toVector
     finally reader.close()
   }
 
   def readManifestList(path: String): Seq[ManifestFile] =
-    readAll(path, ManifestListSchema).map { r =>
+    readAll(path, ManifestListSchema) { r =>
       ManifestFile(
         r.get("manifest_path").toString,
         r.get("manifest_length").asInstanceOf[Long],
@@ -254,40 +254,63 @@ object AvroManifests {
             Option(sr.get("upper_bound")).map(_.toString))))
     }
 
-  def readManifest(path: String): Seq[DataFileEntry] =
-    readAll(path, ManifestSchema).map { r =>
-      val df = r.get("data_file").asInstanceOf[GenericRecord]
-      def recs(field: String): Seq[GenericRecord] =
-        df.get(field).asInstanceOf[java.util.List[GenericRecord]].asScala.toSeq
-      def i64Map(field: String): Map[Int, Long] =
-        recs(field).map(e => e.get("key").asInstanceOf[Int] -> e.get("value").asInstanceOf[Long]).toMap
-      def binMap(field: String): Map[Int, Array[Byte]] =
-        recs(field).map { e =>
-          val bb = e.get("value").asInstanceOf[ByteBuffer]
-          val arr = new Array[Byte](bb.remaining())
-          bb.duplicate().get(arr)
-          e.get("key").asInstanceOf[Int] -> arr
-        }.toMap
-      DataFileEntry(
-        r.get("status").asInstanceOf[Int],
-        r.get("snapshot_id").asInstanceOf[Long],
-        df.get("content").asInstanceOf[Int],
-        df.get("file_path").toString,
-        df.get("file_format").toString,
-        recs("partition").map(p => p.get("name").toString -> p.get("value").toString).toMap,
-        df.get("record_count").asInstanceOf[Long],
-        df.get("file_size_in_bytes").asInstanceOf[Long],
-        i64Map("column_sizes"),
-        i64Map("value_counts"),
-        i64Map("null_value_counts"),
-        binMap("lower_bounds"),
-        binMap("upper_bounds"),
-        // older manifests (pre-equality-ids) resolve through the schema
-        // default; Avro surfaces int arrays as java.util.List[Integer]
-        Option(df.get("equality_ids"))
-          .map(_.asInstanceOf[java.util.List[Integer]].asScala.toSeq.map(_.toInt))
-          .getOrElse(Seq.empty),
-        // pre-sequence manifests resolve through the schema default (-1)
-        Option(r.get("sequence_number")).map(_.asInstanceOf[Long]).getOrElse(-1L))
-    }
+  def readManifest(path: String): Seq[DataFileEntry] = readAll(path, ManifestSchema)(entryOf)
+
+  /** Decode a manifest keeping only the named `data_file` fields (the
+    * entry's status, snapshot id and sequence number are always read).
+    * The reader schema drops the other fields, so Avro skips their bytes
+    * instead of building records, and they come back empty: `""`, `0`,
+    * empty maps and lists. Such entries are partial: never cache them
+    * where full entries are expected. */
+  def readManifest(path: String, projection: Seq[String]): Seq[DataFileEntry] =
+    readAll(path, projected(projection))(entryOf)
+
+  private def projected(fields: Seq[String]): Schema = {
+    def keep(s: Schema, f: Schema.Field => Option[Schema]): Schema =
+      Schema.createRecord(s.getName, s.getDoc, s.getNamespace, false,
+        s.getFields.asScala.flatMap(x => f(x).map(new Schema.Field(x, _))).asJava)
+    val dataFile = keep(ManifestSchema.getField("data_file").schema(),
+      x => Some(x.schema()).filter(_ => fields.contains(x.name)))
+    keep(ManifestSchema, x => Some(if (x.name == "data_file") dataFile else x.schema()))
+  }
+
+  private def entryOf(r: GenericRecord): DataFileEntry = {
+    val df = r.get("data_file").asInstanceOf[GenericRecord]
+    // a field the reader schema projected away reads as null
+    def get(field: String): AnyRef = if (df.hasField(field)) df.get(field) else null
+    def recs(field: String): Seq[GenericRecord] =
+      Option(get(field)).map(_.asInstanceOf[java.util.List[GenericRecord]].asScala.toSeq)
+        .getOrElse(Seq.empty)
+    def i64Map(field: String): Map[Int, Long] =
+      recs(field).map(e => e.get("key").asInstanceOf[Int] -> e.get("value").asInstanceOf[Long]).toMap
+    def binMap(field: String): Map[Int, Array[Byte]] =
+      recs(field).map { e =>
+        val bb = e.get("value").asInstanceOf[ByteBuffer]
+        val arr = new Array[Byte](bb.remaining())
+        bb.duplicate().get(arr)
+        e.get("key").asInstanceOf[Int] -> arr
+      }.toMap
+    def long(field: String): Long = Option(get(field)).map(_.asInstanceOf[Long]).getOrElse(0L)
+    DataFileEntry(
+      r.get("status").asInstanceOf[Int],
+      r.get("snapshot_id").asInstanceOf[Long],
+      Option(get("content")).map(_.asInstanceOf[Int]).getOrElse(0),
+      Option(get("file_path")).map(_.toString).getOrElse(""),
+      Option(get("file_format")).map(_.toString).getOrElse(""),
+      recs("partition").map(p => p.get("name").toString -> p.get("value").toString).toMap,
+      long("record_count"),
+      long("file_size_in_bytes"),
+      i64Map("column_sizes"),
+      i64Map("value_counts"),
+      i64Map("null_value_counts"),
+      binMap("lower_bounds"),
+      binMap("upper_bounds"),
+      // older manifests (pre-equality-ids) resolve through the schema
+      // default; Avro surfaces int arrays as java.util.List[Integer]
+      Option(get("equality_ids"))
+        .map(_.asInstanceOf[java.util.List[Integer]].asScala.toSeq.map(_.toInt))
+        .getOrElse(Seq.empty),
+      // pre-sequence manifests resolve through the schema default (-1)
+      Option(r.get("sequence_number")).map(_.asInstanceOf[Long]).getOrElse(-1L))
+  }
 }

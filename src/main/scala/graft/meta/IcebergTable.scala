@@ -34,13 +34,19 @@ final class IcebergTable(val tableDir: String, val metadata: TableMetadata) {
     * scan in [[graft.rel.MetaRelations.files]]). */
   def resolvePath(p: String): String = resolve(p)
 
-  /** Manifest-list entries of a snapshot (default: current). */
+  // Manifest lists are immutable too. Keyed by the RESOLVED snapshot, so
+  // None and Some(current) share one parse, as in entriesMemo.
+  private val manifestsMemo =
+    new java.util.concurrent.ConcurrentHashMap[Long, Seq[ManifestFile]]()
+
+  /** Manifest-list entries of a snapshot (default: current). Memoized. */
   def manifests(snapshotId: Option[Long] = None): Seq[ManifestFile] = {
     val snap = snapshotId.map(id =>
         metadata.snapshot(id).getOrElse(
           throw new NoSuchElementException(s"Snapshot $id not found")))
       .orElse(metadata.currentSnapshot)
-    snap.map(s => AvroManifests.readManifestList(resolve(s.manifestList)))
+    snap.map(s => manifestsMemo.computeIfAbsent(s.snapshotId,
+        _ => AvroManifests.readManifestList(resolve(s.manifestList))))
       .getOrElse(Seq.empty)
   }
 
@@ -50,24 +56,18 @@ final class IcebergTable(val tableDir: String, val metadata: TableMetadata) {
     * position/equality delete files live in delete manifests (content 1)
     * and are deliberately NOT listed here — they are not data; see
     * [[deleteFiles]]. */
-  def files(snapshotId: Option[Long] = None): Seq[DataFileEntry] =
-    memo(0, snapshotId) {
-      manifests(snapshotId)
-        .filter(_.content == 0)
-        .flatMap(m => AvroManifests.readManifest(resolve(m.manifestPath)))
-        .filter(_.status != 2)
-    }
+  def files(snapshotId: Option[Long] = None): Seq[DataFileEntry] = live(0, snapshotId)
 
   /** Live v2 delete-file entries (position/equality deletes) of a
     * snapshot: entries of delete manifests (content 1). A non-empty
     * result means scans must apply delete filtering and compaction is
     * recommended (ref `formatters.py:452-462` counts them in the census). */
-  def deleteFiles(snapshotId: Option[Long] = None): Seq[DataFileEntry] =
-    memo(1, snapshotId) {
-      manifests(snapshotId)
-        .filter(_.content == 1)
-        .flatMap(m => AvroManifests.readManifest(resolve(m.manifestPath)))
-        .filter(_.status != 2)
+  def deleteFiles(snapshotId: Option[Long] = None): Seq[DataFileEntry] = live(1, snapshotId)
+
+  private def live(content: Int, snapshotId: Option[Long]): Seq[DataFileEntry] =
+    memo(content, snapshotId) {
+      manifests(snapshotId).filter(_.content == content)
+        .flatMap(m => AvroManifests.readManifest(resolve(m.manifestPath))).filter(_.status != 2)
     }
 
   // Per-manifest entry memo (same immutability argument as entriesMemo):

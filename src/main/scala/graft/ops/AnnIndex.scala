@@ -179,7 +179,6 @@ final class AnnIndex(
       clusters: Seq[Int]): DataFrame =
     ScanPlanner.readTableWhereIn(engine.spark, t,
       "cluster", clusters.map(_.toString))
-      .filter(col("cluster").isin(clusters: _*))
 
   /** The index restricted to `clusters`' inverted lists: file pruning
     * through the identity partition spec ([[ScanPlanner.readTableWhereIn]])

@@ -8,10 +8,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.expr.IcebergDecode
-import graft.meta.{AvroManifests, DataFileEntry, IcebergTable, ManifestFile}
+import graft.meta.{DataFileEntry, IcebergTable}
 import graft.rel.MetaRelations
 
 /** The multi-section table-health report (ref `collect_table_health`,
@@ -100,21 +99,18 @@ object MetaHealth {
     if (lo == hi) lo.toDouble else (pos.ceil - pos) * lo + (pos - pos.floor) * hi
   }
 
-  /** Spark's string order: UTF-8 bytes, not UTF-16 units. */
-  private def utf8Less(a: String, b: String): Boolean =
-    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
-
   /** Exact overlapping-pair count (the reference's O(N²) loop). */
   private def pairCount(lo: Array[Double], hi: Array[Double], k: Array[String]): Long =
     lo.indices.map(a => lo.indices.count(b => compareDoubles(lo(a), hi(b)) <= 0 &&
-      compareDoubles(lo(b), hi(a)) <= 0 && utf8Less(k(a), k(b))).toLong).sum
+      compareDoubles(lo(b), hi(a)) <= 0 &&
+      MetaRelations.sparkStringOrder.lt(k(a), k(b))).toLong).sum
 
   /** Sweep line in `(lo, file_path)` order: intervals that start at or
     * before the running max of the ones ahead of them. */
   private def sweepCount(lo: Array[Double], hi: Array[Double], k: Array[String]): Long = {
     val order = lo.indices.sortWith { (a, b) =>
       val c = compareDoubles(lo(a), lo(b))
-      if (c != 0) c < 0 else utf8Less(k(a), k(b))
+      if (c != 0) c < 0 else MetaRelations.sparkStringOrder.lt(k(a), k(b))
     }
     var runMax = Option.empty[Double]
     order.count { i =>
@@ -139,27 +135,6 @@ object MetaHealth {
   private def typeOf(t: IcebergTable, id: Int): Option[String] =
     t.metadata.currentSchema.fields.find(_.id == id).map(_.fieldType)
 
-  /** Fold the live entries on the driver over the memoized listing (no
-    * Spark job) up to `distributeThreshold` of them, else in one job that
-    * parses each manifest on an executor and merges the task folds. */
-  private def fold(spark: SparkSession, t: IcebergTable, data: Seq[ManifestFile], live: Long,
-      overlapSrc: Option[(Int, String)], distributeThreshold: Int): HealthAcc = {
-    val types = t.metadata.currentSchema.fields.map(f => f.id -> f.fieldType).toMap
-    if (data.isEmpty || live <= distributeThreshold)
-      t.files().foldLeft(new HealthAcc(types, overlapSrc))(_ add _)
-    else {
-      val paths = data.map(m => t.resolvePath(m.manifestPath))
-      spark.sparkContext
-        .parallelize(paths, math.min(paths.size, spark.sparkContext.defaultParallelism))
-        .mapPartitions { it =>
-          val acc = new HealthAcc(types, overlapSrc)
-          it.foreach(p => AvroManifests.readManifest(p).foreach(e => if (e.status != 2) acc.add(e)))
-          Iterator(acc)
-        }
-        .reduce(_ merge _)
-    }
-  }
-
   /** A driver-side relation of `rows` under a DDL schema. */
   private def local(spark: SparkSession, ddl: String, rows: Iterable[Row]): DataFrame =
     spark.createDataFrame(rows.toSeq.asJava, StructType.fromDDL(ddl))
@@ -176,9 +151,11 @@ object MetaHealth {
     val live = data.map(m => m.addedFilesCount.toLong + m.existingFilesCount).sum
     val distRows = spark.conf.get("spark.graft.overlap.distributedSweepRows", "4000000").toLong
     val src = t.metadata.currentSpec.fields.headOption.map(_.sourceId)
-    val acc = fold(spark, t, data, live,
-      src.filter(_ => live <= distRows).map(id => id -> typeOf(t, id).getOrElse("long")),
-      distributeThreshold)
+    val types = t.metadata.currentSchema.fields.map(f => f.id -> f.fieldType).toMap
+    val overlapSrc =
+      src.filter(_ => live <= distRows).map(id => id -> typeOf(t, id).getOrElse("long"))
+    val acc = MetaRelations.fold(spark, t, data, None, distributeThreshold,
+      () => new HealthAcc(types, overlapSrc))((a, _, e) => a.add(e), _ merge _)
 
     // A1/A2 — file-size stats + small-file count
     val sizes = acc.sizes.result().sorted

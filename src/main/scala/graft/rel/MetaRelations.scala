@@ -1,11 +1,15 @@
 package graft.rel
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.meta.IcebergTable
+import graft.meta.{AvroManifests, DataFileEntry, IcebergTable, ManifestFile}
 
 /** The Iceberg metadata tree as Spark relations — the analog of
   * Spark-Iceberg's `t.files` / `t.snapshots` / `t.manifests` /
@@ -14,16 +18,17 @@ import graft.meta.IcebergTable
   *
   * Metadata volumes are small (thousands of rows for thousands of data
   * files), so rows are parsed driver-side (Jackson + core Avro) and lifted
-  * with `createDataFrame`; the analytics over them stay distributed,
-  * declarative DataFrame transforms. The one exception is the health
-  * report ([[graft.ops.MetaHealth]]): it is a single mergeable aggregate,
-  * like the reference's one pass over `inspect.files()`, so it folds the
-  * entries directly — on the driver, or in one job past
-  * [[DistributeEntriesThreshold]] — instead of planning seven relations
-  * over this one. At 100 TB of *data* the metadata tree
-  * is still MB-scale — this boundary is deliberate and documented
-  * (SURVEY §7.3): a DSv2 connector would add complexity with no pruning or
-  * parallelism to win at these row counts.
+  * as local relations; past [[DistributeEntriesThreshold]] live entries
+  * the Avro parse moves to executors, one task per manifest. Verbs whose
+  * answer is an aggregate of the entries — the health report
+  * ([[graft.ops.MetaHealth]]), [[summary]], [[tree]] and the snapshot
+  * diff's path guard ([[graft.ops.MetaDiff]]) — do not lift a listing at
+  * all: they run one mergeable [[fold]] over the live entries, decoding
+  * only the Avro fields they read, and emit `LocalRelation`s, like the
+  * reference's one pass over `inspect.files()`. At 100 TB of *data* the
+  * metadata tree is still MB-scale — this boundary is deliberate and
+  * documented (SURVEY §7.3): a DSv2 connector would add complexity with
+  * no pruning or parallelism to win at these row counts.
   */
 object MetaRelations {
 
@@ -50,7 +55,7 @@ object MetaRelations {
     * next to where the rows are consumed. */
   val DistributeEntriesThreshold: Int = 2000
 
-  private def entryRow(e: graft.meta.DataFileEntry): Row =
+  private def entryRow(e: DataFileEntry): Row =
     Row(e.filePath, e.fileFormat, e.snapshotId, e.status, e.partition,
       e.recordCount, e.fileSizeInBytes, e.columnSizes, e.valueCounts,
       e.nullValueCounts, e.lowerBounds, e.upperBounds, e.equalityIds)
@@ -63,7 +68,7 @@ object MetaRelations {
       // manifest-level pruning (ManifestSummaries): a caller that has
       // already ruled out manifests via their partition summaries passes
       // the survivors — only THEIR Avro is ever parsed, driver or executor
-      onlyManifests: Option[Seq[graft.meta.ManifestFile]] = None): DataFrame = {
+      onlyManifests: Option[Seq[ManifestFile]] = None): DataFrame = {
     val allDataManifests = t.manifests(snapshotId).filter(_.content == 0)
     val dataManifests = onlyManifests.getOrElse(allDataManifests)
     val approxEntries = dataManifests
@@ -77,20 +82,60 @@ object MetaRelations {
           .filter(_.status != 2).map(entryRow)
       spark.createDataFrame(rows.asJava, filesSchema)
         .coalesce(math.max(1, rows.size / 50000))
-    } else {
-      // executor-parallel scan: ship only the manifest PATHS (bytes per
-      // task ~ a path string), parse Avro next to the consumer. One task
-      // per manifest up to the session's default parallelism.
-      val paths = dataManifests.map(m => t.resolvePath(m.manifestPath))
-      val ds = spark.createDataset(paths)(org.apache.spark.sql.Encoders.STRING)
-        .repartition(math.min(paths.size, spark.sparkContext.defaultParallelism))
-      ds.mapPartitions { it =>
-        it.flatMap { p =>
-          graft.meta.AvroManifests.readManifest(p).iterator
-            .filter(_.status != 2).map(entryRow)
-        }
-      }(org.apache.spark.sql.Encoders.row(filesSchema))
-        .toDF()
+    } else decode(spark, t, dataManifests, approxEntries, filesSchema)(liveRow)
+  }
+
+  private def liveRow(e: DataFileEntry, manifest: String): Option[Row] =
+    if (e.status != 2) Some(entryRow(e)) else None
+
+  /** Rows of `schema` from `manifests`' entries (`row` also gets each
+    * entry's manifest path as listed): parsed on the driver up to
+    * [[DistributeEntriesThreshold]] `approx` entries, else on executors —
+    * only the manifest PATHS ship (bytes per task ~ a path string) and the
+    * Avro is parsed next to the consumer; a local scan splits its rows one
+    * per task up to the default parallelism, so no shuffle is needed. */
+  private def decode(spark: SparkSession, t: IcebergTable, manifests: Seq[ManifestFile],
+      approx: Long, schema: StructType)(row: (DataFileEntry, String) => Option[Row]): DataFrame =
+    if (approx <= DistributeEntriesThreshold)
+      spark.createDataFrame(manifests.flatMap(m => AvroManifests.readManifest(
+        t.resolvePath(m.manifestPath)).flatMap(row(_, m.manifestPath))).asJava, schema)
+    else spark.createDataset(manifests.map(m => (t.resolvePath(m.manifestPath), m.manifestPath)))(
+        Encoders.tuple(Encoders.STRING, Encoders.STRING))
+      .mapPartitions(_.flatMap { case (abs, rel) =>
+        AvroManifests.readManifest(abs).iterator.flatMap(row(_, rel))
+      })(Encoders.row(schema))
+      .toDF()
+
+  /** Fold the live (status 0/1) entries of `manifests` into one value: on
+    * the driver when their manifest-list counts total at most `threshold`
+    * entries, else in ONE `parallelize(paths).mapPartitions(fold)
+    * .reduce(merge)` job — no shuffle, no cache. `add` also gets the index
+    * into `manifests` of the entry's manifest. With a `projection`
+    * ([[AvroManifests.readManifest]]) only those `data_file` fields are
+    * decoded and nothing is memoized; without one the driver reads through
+    * the table's per-manifest memo. */
+  private[graft] def fold[A: ClassTag](spark: SparkSession, t: IcebergTable,
+      manifests: Seq[ManifestFile], projection: Option[Seq[String]], threshold: Int,
+      zero: () => A)(
+      add: (A, Int, DataFileEntry) => A, merge: (A, A) => A): A = {
+    def foldAll(acc: A, ms: Iterator[(Seq[DataFileEntry], Int)]): A =
+      ms.foldLeft(acc) { case (a, (es, i)) =>
+        es.foldLeft(a)((b, e) => if (e.status != 2) add(b, i, e) else b)
+      }
+    val live = manifests.map(m => m.addedFilesCount.toLong + m.existingFilesCount).sum
+    if (manifests.isEmpty || live <= threshold)
+      foldAll(zero(), manifests.iterator.zipWithIndex.map { case (m, i) =>
+        (projection.fold(t.manifestEntries(m.manifestPath))(
+          AvroManifests.readManifest(t.resolvePath(m.manifestPath), _)), i)
+      })
+    else {
+      val sc = spark.sparkContext
+      sc.parallelize(manifests.map(m => t.resolvePath(m.manifestPath)).zipWithIndex,
+          math.min(manifests.size, sc.defaultParallelism))
+        .mapPartitions(it => Iterator(foldAll(zero(), it.map { case (p, i) =>
+          (projection.fold(AvroManifests.readManifest(p))(AvroManifests.readManifest(p, _)), i)
+        })))
+        .reduce(merge)
     }
   }
 
@@ -201,7 +246,7 @@ object MetaRelations {
       StructField("upper_bound", StringType, nullable = true)))),
       nullable = false)))
 
-  private def summaryRows(m: graft.meta.ManifestFile): Seq[Row] =
+  private def summaryRows(m: ManifestFile): Seq[Row] =
     m.partitions.map(s => Row(s.name, s.containsNull, s.lower.orNull, s.upper.orNull))
 
   def manifests(spark: SparkSession, t: IcebergTable, snapshotId: Option[Long] = None): DataFrame = {
@@ -239,7 +284,7 @@ object MetaRelations {
       StructField("content", IntegerType, nullable = false),
       StructField("manifest_path", StringType, nullable = false)))
 
-  private def entryRowFull(e: graft.meta.DataFileEntry, manifest: String): Row =
+  private def entryRowFull(e: DataFileEntry, manifest: String): Row =
     Row(e.filePath, e.fileFormat, e.snapshotId, e.status, e.partition,
       e.recordCount, e.fileSizeInBytes, e.columnSizes, e.valueCounts,
       e.nullValueCounts, e.lowerBounds, e.upperBounds, e.equalityIds,
@@ -254,24 +299,7 @@ object MetaRelations {
     val ms = t.manifests(snapshotId)
     val approx = ms.map(m =>
       m.addedFilesCount + m.existingFilesCount + m.deletedFilesCount).sum
-    if (approx <= DistributeEntriesThreshold) {
-      val rows = ms.flatMap(m =>
-        graft.meta.AvroManifests.readManifest(t.resolvePath(m.manifestPath))
-          .map(entryRowFull(_, m.manifestPath)))
-      spark.createDataFrame(rows.asJava, entriesSchema)
-    } else {
-      val paths = ms.map(m => (t.resolvePath(m.manifestPath), m.manifestPath))
-      val ds = spark.createDataset(paths)(
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.STRING))
-        .repartition(math.min(paths.size, spark.sparkContext.defaultParallelism))
-      ds.mapPartitions { it =>
-        it.flatMap { case (abs, rel) =>
-          graft.meta.AvroManifests.readManifest(abs).iterator
-            .map(entryRowFull(_, rel))
-        }
-      }(org.apache.spark.sql.Encoders.row(entriesSchema)).toDF()
-    }
+    decode(spark, t, ms, approx, entriesSchema)((e, rel) => Some(entryRowFull(e, rel)))
   }
 
   /** `all_files` — live data-file entries referenced by ANY snapshot
@@ -290,23 +318,7 @@ object MetaRelations {
     // executors instead of the driver.
     val approx = distinctManifests
       .map(m => m.addedFilesCount + m.existingFilesCount).sum
-    if (approx <= DistributeEntriesThreshold) {
-      val rows = distinctManifests.flatMap(m =>
-        graft.meta.AvroManifests.readManifest(t.resolvePath(m.manifestPath))
-          .filter(_.status != 2).map(entryRow))
-      spark.createDataFrame(rows.asJava, filesSchema)
-    } else {
-      val paths = distinctManifests.map(m => t.resolvePath(m.manifestPath))
-      spark.createDataset(paths)(org.apache.spark.sql.Encoders.STRING)
-        .repartition(math.min(paths.size, spark.sparkContext.defaultParallelism))
-        .mapPartitions { it =>
-          it.flatMap { p =>
-            graft.meta.AvroManifests.readManifest(p).iterator
-              .filter(_.status != 2).map(entryRow)
-          }
-        }(org.apache.spark.sql.Encoders.row(filesSchema))
-        .toDF()
-    }
+    decode(spark, t, distinctManifests, approx, filesSchema)(liveRow)
   }
 
   val allManifestsSchema: StructType = StructType(
@@ -330,12 +342,88 @@ object MetaRelations {
 
   /** S4 — per-partition stats derived from `files` (one shuffle on the
     * partition key, ref `formatters.py:307-320`). */
-  def partitions(files: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
+  def partitions(files: DataFrame): DataFrame =
     files.groupBy(map_entries(col("partition")).cast("string").as("partition"))
       .agg(
         sum(col("record_count")).as("record_count"),
         count(lit(1)).as("file_count"),
         sum(col("file_size_in_bytes")).as("total_data_file_size_in_bytes"))
+
+  /** Spark's string order — UTF-8 bytes, not UTF-16 units — for local
+    * rows that stand in for an `orderBy`. */
+  val sparkStringOrder: Ordering[String] = Ordering.fromLessThan((a, b) =>
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
+
+  /** Count `e` into `(files, records, bytes)` at `a(at)`; sums overflow
+    * loudly, as Spark's ANSI `sum` does. */
+  private[graft] def count3(a: Array[Long], at: Int, e: DataFileEntry): Array[Long] = {
+    a(at) += 1
+    a(at + 1) = Math.addExact(a(at + 1), e.recordCount)
+    a(at + 2) = Math.addExact(a(at + 2), e.fileSizeInBytes)
+    a
+  }
+
+  private def sumInto(a: Array[Long], b: Array[Long]): Array[Long] = {
+    a.indices.foreach(i => a(i) = Math.addExact(a(i), b(i)))
+    a
+  }
+
+  /** A8 — one-row table summary (ref `formatters.py:940-979`): live data
+    * file count, record and byte totals and distinct partition maps, from one
+    * [[fold]] that decodes only `partition`, `record_count` and
+    * `file_size_in_bytes`. */
+  def summary(spark: SparkSession, t: IcebergTable, tableName: String): DataFrame =
+    summary(spark, t, tableName, DistributeEntriesThreshold)
+
+  private[graft] def summary(spark: SparkSession, t: IcebergTable, tableName: String,
+      threshold: Int): DataFrame = {
+    val (sums, parts) = fold(spark, t, t.manifests().filter(_.content == 0),
+        Some(Seq("partition", "record_count", "file_size_in_bytes")), threshold,
+        () => (new Array[Long](3), mutable.HashSet.empty[Seq[(String, String)]]))(
+      // keyed by entry list: Spark's distinct tells apart maps whose
+      // entries differ only in order, as a foreign writer may store them
+      (acc, _, e) => { count3(acc._1, 0, e); acc._2 += e.partition.toSeq; acc },
+      (a, b) => { sumInto(a._1, b._1); a._2 ++= b._2; a })
+    val md = t.metadata
+    spark.createDataFrame(java.util.List.of(Row(sums(0), sums(1), sums(2), parts.size.toLong,
+        tableName, md.formatVersion, md.snapshots.size, md.currentSchema.fields.size,
+        md.lastUpdatedMs)),
+      StructType.fromDDL("file_count BIGINT NOT NULL, total_records BIGINT NOT NULL, " +
+        "total_bytes BIGINT NOT NULL, partition_count BIGINT NOT NULL, " +
+        "table_name STRING NOT NULL, format_version INT NOT NULL, snapshot_count INT NOT NULL, " +
+        "field_count INT NOT NULL, last_updated_ms BIGINT NOT NULL"))
+  }
+
+  /** The TUI metadata-tree data (ref `formatters.py:1195-1307`): one row
+    * per manifest, ordered by path, with its live entry stats, its share
+    * of all rows (A13 "45% of rows") and its size-color class vs the
+    * average file size (W8). One [[fold]] decodes only `record_count` and
+    * `file_size_in_bytes`; the table-wide totals ride along as columns, so
+    * the derived columns stay Spark expressions over local rows and a
+    * collect runs no job. */
+  def tree(spark: SparkSession, t: IcebergTable, snapshotId: Option[Long] = None): DataFrame =
+    tree(spark, t, snapshotId, DistributeEntriesThreshold)
+
+  private[graft] def tree(spark: SparkSession, t: IcebergTable, snapshotId: Option[Long],
+      threshold: Int): DataFrame = {
+    val ms = t.manifests(snapshotId)
+    val sums = fold(spark, t, ms, Some(Seq("record_count", "file_size_in_bytes")), threshold,
+      () => new Array[Long](3 * ms.size))((a, i, e) => count3(a, 3 * i, e), sumInto)
+    val all = sums.grouped(3).foldLeft(new Array[Long](3))(sumInto)
+    val rows = ms.indices.sortBy(ms(_).manifestPath)(sparkStringOrder).map { i =>
+      Row(ms(i).manifestPath, ms(i).content, sums(3 * i), sums(3 * i + 1), sums(3 * i + 2),
+        all(1), all(2), all(0))
+    }
+    val avgBytes = col("all_bytes") / col("all_files")
+    spark.createDataFrame(rows.asJava, StructType.fromDDL("manifest_path STRING, " +
+        "content INT NOT NULL, file_count BIGINT NOT NULL, row_count BIGINT NOT NULL, " +
+        "total_bytes BIGINT NOT NULL, all_rows BIGINT, all_bytes BIGINT, all_files BIGINT"))
+      .select(col("manifest_path"), col("content"), col("file_count"), col("row_count"),
+        col("total_bytes"),
+        round(lit(100.0) * col("row_count") / col("all_rows"), 2).as("pct_of_rows"),
+        when(col("file_count") === 0, "green")
+          .when(col("total_bytes") / col("file_count") <= avgBytes * 0.5, "green")
+          .when(col("total_bytes") / col("file_count") <= avgBytes * 1.5, "yellow")
+          .otherwise(lit("red")).as("size_color"))
   }
 }

@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, count, lit, sum}
 
 import graft.Sessions
 import graft.fixtures.FixtureWriter
@@ -49,11 +48,8 @@ object MetaBench {
     }
 
     // summary: load latest snapshot + schema + current-state totals
-    val (_, tSummary) = time {
-      val t = IcebergTable.load(dir)
-      MetaRelations.files(spark, t)
-        .agg(count(lit(1)), sum(col("record_count")), sum(col("file_size_in_bytes"))).collect()
-    }
+    val (_, tSummary) =
+      time(MetaRelations.summary(spark, IcebergTable.load(dir), "monster").collect())
 
     // health: the seven sections from one fold over the live entries
     def runHealth(): Unit = {
