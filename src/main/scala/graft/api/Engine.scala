@@ -1901,15 +1901,25 @@ class Engine(val spark: SparkSession, warehouseDir: String,
     * sequentially); view registration itself stays on the calling thread
     * (catalog mutation, kept single-threaded by design). Tables whose
     * data files are not materialized (metadata-only fixtures,
-    * foreign-written tables with unreachable paths) are skipped. */
+    * foreign-written tables with unreachable paths) are skipped: reads
+    * are planned from the manifests and never stat a file, so one live
+    * file per table is probed for existence here. */
   def createAllViews(): Seq[String] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     val refs = listTables().collect().toSeq
       .map(r => s"${r.getString(0)}.${r.getString(1)}")
+    def materialized(t: IcebergTable): Boolean = t.files().headOption.forall { e =>
+      val p = new org.apache.hadoop.fs.Path(t.resolvePath(e.filePath))
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    }
     val frames = Await.result(
       Future.traverse(refs.toList) { ref =>
-        Future(scala.util.Try((ref, readTable(ref))).toOption)
+        Future(scala.util.Try {
+          val t = load(ref)
+          require(materialized(t), s"$ref: data files not materialized")
+          (ref, ScanPlanner.readTable(spark, t))
+        }.toOption)
       }, scala.concurrent.duration.Duration.Inf).flatten
     frames.map { case (ref, df) =>
       val name = ref.replace('.', '_')

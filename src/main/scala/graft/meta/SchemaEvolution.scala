@@ -101,8 +101,19 @@ object SchemaEvolution {
     }
     val newSpecId = md.partitionSpecs.map(_.specId).max + 1
     val nextFieldId = (999 +: md.partitionSpecs.flatMap(_.fields.map(_.fieldId))).max + 1
+    // a re-declared transform of an already-partitioned column (bucket[8]
+    // → bucket[16]) gets its own field name, as Iceberg's spec update
+    // names it: name-keyed pruning must never see two transforms under
+    // one name (it could prune neither)
+    val earlier = md.partitionSpecs.flatMap(_.fields)
+    def nameOf(src: String, transform: String): String = {
+      val plain = Transforms.fieldName(src, transform)
+      if (earlier.exists(sf => sf.name == plain && sf.transform != transform))
+        Transforms.argFieldName(src, transform)
+      else plain
+    }
     val spec = PartitionSpec(newSpecId, fields.zipWithIndex.map { case ((f, transform), i) =>
-      SpecField(Transforms.fieldName(f.name, transform), transform, f.id, nextFieldId + i)
+      SpecField(nameOf(f.name, transform), transform, f.id, nextFieldId + i)
     })
     val newMd = md.copy(
       lastUpdatedMs = System.currentTimeMillis(),

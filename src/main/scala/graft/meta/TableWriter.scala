@@ -1057,40 +1057,6 @@ object TableWriter {
         extraSummary = extraSummary, extraProperties = extraProperties) }
   }
 
-  /** Read many individual parquet ROOT paths as one DataFrame without
-    * tripping Spark's one-task-per-root parallel-listing job: above
-    * `parallelPartitionDiscovery.threshold` (32) Spark stats each root
-    * in its OWN task — a 10k-file commit would pay a 10k-task job just
-    * to list files the caller already knows. Sets (≤ ~100k roots) list
-    * driver-side (O(files) local syscalls, the scale the adoption link
-    * pass already does); beyond that the listing job's parallelism is
-    * bounded so tasks stat thousands of files, not one. The listing
-    * confs are SESSION-GLOBAL, so the override is serialized under a
-    * JVM-wide lock and restored before returning — listing happens
-    * eagerly inside `.parquet(...)`, so nothing escapes the scope —
-    * and two racing committers can never restore each other's
-    * transient value. */
-  private val listingConfLock = new Object
-  private def readManyRoots(spark: SparkSession,
-      schema: Option[org.apache.spark.sql.types.StructType],
-      paths: Seq[String]): DataFrame = listingConfLock.synchronized {
-    val conf = spark.sessionState.conf
-    val thresholdKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val parallelismKey = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
-    val oldThreshold = conf.getConfString(thresholdKey, "32")
-    val oldParallelism = conf.getConfString(parallelismKey, "10000")
-    try {
-      if (paths.size <= 100000)
-        conf.setConfString(thresholdKey, (paths.size + 1).toString)
-      else conf.setConfString(parallelismKey, "256")
-      val reader = schema.fold(spark.read)(spark.read.schema)
-      reader.parquet(paths: _*)
-    } finally {
-      conf.setConfString(thresholdKey, oldThreshold)
-      conf.setConfString(parallelismKey, oldParallelism)
-    }
-  }
-
   /** [[DataFileEntry]]s for final (already-placed) parquet files, from
     * their FOOTERS — the gate pass's already-collected facts, or one
     * metadata pass here; the data itself is never re-read (the Iceberg
@@ -1151,8 +1117,11 @@ object TableWriter {
         val readSchema = org.apache.spark.sql.types.StructType(aggFs.map(f =>
           org.apache.spark.sql.types.StructField(f.name,
             graft.ops.ScanPlanner.sparkType(f.fieldType).get, nullable = true)))
+        // the files are placed and final but not yet in any manifest: the
+        // relation's file index takes their local sizes (no listing job)
         val df = graft.api.Engine.adoptTimed("stats-list") {
-          readManyRoots(spark, Some(readSchema), byAbs.keys.toSeq) }
+          org.apache.spark.sql.GraftParquetBridge.readParquet(spark,
+            byAbs.keys.toSeq.map(p => p -> Files.size(Paths.get(p))), readSchema) }
         graft.api.Engine.adoptTimed("stats-agg") {
           df.groupBy(input_file_name().as("__file"))
             .agg(count(lit(1)).as("nrows"), statAggsFor(aggFs): _*)
@@ -1315,10 +1284,13 @@ object TableWriter {
       // frame, and the empty-input edge (no staged files to read), keep
       // the direct evaluation.
       val keySource =
-        if (equalityFromData && newEntries.nonEmpty)
-          readManyRoots(spark, None,
-            newEntries.map(e => dir.resolve(e.filePath).toString))
-        else keyData
+        if (equalityFromData && newEntries.nonEmpty) {
+          val files = newEntries.map(e =>
+            dir.resolve(e.filePath).toString -> e.fileSizeInBytes)
+          org.apache.spark.sql.GraftParquetBridge.readParquet(spark, files,
+            org.apache.spark.sql.execution.datasources.parquet.GraftSchemaInference
+              .schemaOfFile(spark, files.map(_._1).min))
+        } else keyData
       val keysDf = FieldIds.attributeColumns(
         keySource.select(keys.map(col): _*).distinct().coalesce(1), keyFields)
       val stage = Files.createTempDirectory("graft-upsert")

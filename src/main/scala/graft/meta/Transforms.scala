@@ -87,6 +87,16 @@ object Transforms {
     case other => throw new IllegalArgumentException(s"unsupported transform $other")
   }
 
+  /** The field name carrying the transform's argument —
+    * `<col>_bucket_<N>` / `<col>_trunc_<W>` — what spec evolution names a
+    * transform whose plain [[fieldName]] an earlier spec already gave a
+    * different transform. */
+  def argFieldName(source: String, transform: String): String = transform match {
+    case BucketRe(n) => s"${source}_bucket_$n"
+    case TruncRe(w) => s"${source}_trunc_$w"
+    case other => fieldName(source, other)
+  }
+
   def isSupported(transform: String): Boolean = transform match {
     case "identity" | BucketRe(_) | TruncRe(_) => true
     case _ => false

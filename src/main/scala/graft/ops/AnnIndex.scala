@@ -735,8 +735,8 @@ object AnnIndex {
     * Current per-cluster occupancy comes from partition values × record
     * counts (the partition IS the inverted list), the bootstrap
     * occupancy from the persisted property; admissions are their
-    * difference. Metadata-SMALL snapshots (summary-gated, the same
-    * `total-data-files` contract as [[ScanPlanner]]'s driver prune) walk
+    * difference. Metadata-SMALL snapshots (summary-gated on
+    * `total-data-files`, [[ScanPlanner.DriverPruneMaxFiles]]) walk
     * `t.files()` on the driver — zero Spark actions; above the gate the
     * files RELATION aggregates executor-parallel (the >2000-entry
     * contract), collecting one row per inverted list. The signal is the

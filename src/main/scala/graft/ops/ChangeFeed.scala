@@ -79,10 +79,9 @@ object ChangeFeed {
     // (no-op for every other table — see ScanPlanner.fillPathPartitionsEntries)
     def readFiles(entries: Seq[graft.meta.DataFileEntry], ids: Boolean): DataFrame =
       ScanPlanner.fillPathPartitionsEntries(spark, t,
-        spark.read.schema(
+        ScanPlanner.readEntries(spark, t, entries, Some(
           if (ids && graft.meta.FieldIds.tableHasIds(t.metadata)) attributedSchema
-          else tableSchema)
-          .parquet(entries.map(e => t.resolvePath(e.filePath)): _*),
+          else tableSchema)),
         entries, schemaSnap = None)
     def stamp(df: DataFrame, change: String, s: Snapshot): DataFrame =
       df.select(tableSchema.fieldNames.toIndexedSeq.map(col): _*)
@@ -152,8 +151,7 @@ object ChangeFeed {
         val posDeletes =
           if (newPos.isEmpty) None
           else {
-            val targets = spark.read
-              .parquet(newPos.map(e => t.resolvePath(e.filePath)): _*)
+            val targets = ScanPlanner.readPositionDeletes(spark, t, newPos)
               .select(col("file_path").as("__del_path"), col("pos").as("__del_pos"))
             val parentRows = ScanPlanner.readTableLineageCurrentSchema(spark, t, parentId)
             Some(stamp(
@@ -178,8 +176,7 @@ object ChangeFeed {
               // data-file reads apply via addedIds above — an
               // id-attributed read of an id-less file has no name
               // fallback and would error or null the keys)
-              val keys = ScanPlanner.readEqDeleteFiles(spark, t, ids,
-                  files.map(e => t.resolvePath(e.filePath)),
+              val keys = ScanPlanner.readEqDeleteFiles(spark, t, ids, files,
                   fileSnap = Some(s.snapshotId))
                 .select(cols.map(c => col(c).as(s"__del_$c")): _*).distinct()
               val cond = cols.map(c => parentRows(c) <=> keys(s"__del_$c")).reduce(_ && _)

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -64,8 +62,7 @@ object Compact {
       .values.flatten.toSeq
     if (candidates.isEmpty) return None
 
-    val paths = candidates.map(e => t.resolvePath(e.filePath))
-    val df = ScanPlanner.readFiles(spark, t, paths)
+    val df = ScanPlanner.readFiles(spark, t, candidates)
     val schemaFields = t.metadata.currentSchema.fields
     val partCols = t.metadata.currentSpec.fields.map { sf =>
       schemaFields.find(_.id == sf.sourceId).map(_.name).getOrElse(sf.name)
@@ -179,10 +176,6 @@ object Compact {
       .values.flatten.toSeq
     if (candidates.isEmpty) return None
 
-    val paths = candidates.map { e =>
-      val p = e.filePath
-      if (Paths.get(p).isAbsolute) p else s"$tableDir/$p"
-    }
     // resolve identity sources by field id (partition field names can
     // differ from source column names in general Iceberg metadata)
     val schemaFields = t.metadata.currentSchema.fields
@@ -199,10 +192,8 @@ object Compact {
     // partition maps, or the rewrite would MATERIALIZE nulls (silent
     // partition-value loss)
     val df0 = ScanPlanner.fillPathPartitionsEntries(spark, t,
-      ScanPlanner.readSchema(spark, t) match {
-        case Some(st) => spark.read.schema(st).parquet(paths: _*)
-        case None => spark.read.parquet(paths: _*)
-      }, candidates, schemaSnap = None)
+      ScanPlanner.readEntries(spark, t, candidates, ScanPlanner.readSchema(spark, t)),
+      candidates, schemaSnap = None)
     if (partCols.isEmpty) {
       val df = df0.coalesce(
         math.max(1, (candidates.map(_.fileSizeInBytes).sum / targetBytes).toInt))

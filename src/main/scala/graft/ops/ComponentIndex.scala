@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,8 +14,13 @@ import graft.api.Engine
   * edges fold in through [[Dedup.incrementalComponents]] and the table
   * is updated by one MERGE-style row-delta commit over exactly the
   * affected docs. A 100 TB corpus never re-runs global label propagation
-  * after bootstrap — the per-batch cost is two passes over this table
-  * (one pruned) plus a batch-bounded contracted-graph clustering.
+  * after bootstrap — the per-batch cost is two reads of this table (the
+  * batch's endpoint rows with the id set pushed down, then the
+  * bucket-pruned rows of the merged-away components) plus a
+  * batch-bounded contracted-graph clustering. A batch whose distinct
+  * endpoints fit [[Dedup.LiteralMaxIds]] does all of it on the driver:
+  * the two reads are collects, the clustering a union-find, and the
+  * delta commits from a local relation (see [[fold]] / [[retire]]).
   *
   * Lifecycle mirrors [[NearDupIndex]] (the two compose: `NearDupIndex
   * .admit` gates a batch and its collision pairs are exactly the new
@@ -69,9 +76,9 @@ final class ComponentIndex(
     * fresh or fully-singleton index has no snapshot or no files). */
   private def storeOf(t: graft.meta.IcebergTable): DataFrame = {
     if (t.metadata.currentSnapshotId.isEmpty) return emptyStore
-    val paths = t.files().map(e => t.resolvePath(e.filePath))
-    if (paths.isEmpty) emptyStore
-    else ScanPlanner.readFiles(engine.spark, t, paths)
+    val files = t.files()
+    if (files.isEmpty) emptyStore
+    else ScanPlanner.readFiles(engine.spark, t, files)
   }
 
   /** The standing sparse assignment (non-trivial memberships only). */
@@ -112,8 +119,14 @@ final class ComponentIndex(
     * nothing. CAS-guarded against concurrent folds: the commit carries
     * the pinned snapshot id, so a racing fold surfaces as
     * [[graft.meta.CommitConflictException]] (rerun; it picks up the
-    * winner's rows) instead of silently erasing the winner's merges. */
-  def fold(newEdges: DataFrame): DataFrame = {
+    * winner's rows) instead of silently erasing the winner's merges.
+    * A batch within [[Dedup.LiteralMaxIds]] distinct endpoints takes the
+    * driver tier: its delta is a local relation, committed as is. */
+  def fold(newEdges: DataFrame): DataFrame = fold(newEdges, Dedup.LiteralMaxIds)
+
+  /** [[fold]] at an explicit driver-tier bound (0 forces the distributed
+    * tier — the tier-equivalence switch). */
+  private[graft] def fold(newEdges: DataFrame, resolveInMaxIds: Int): DataFrame = {
     // ONE load pins the whole fold: resolution scan and pruned relabel
     // read — and the commit below is CAS-CONDITIONAL on that same
     // snapshot still being current. The delta was DERIVED from the
@@ -125,16 +138,25 @@ final class ComponentIndex(
     // has no id to pin; the first concurrent folds of an EMPTY ledger
     // are the one window this cannot guard.)
     val t = engine.load(ref)
-    val store = storeOf(t)
-    val delta = Dedup.incrementalComponents(store, newEdges,
-      sparseAssign = true,
+    def commit(upserts: DataFrame): Unit = {
+      engine.upsert(ref, upserts, Seq("doc_id"),
+        expectedCurrentSnapshotId = t.metadata.currentSnapshotId)
+      ()
+    }
+    Dedup.incrementalDelta(storeOf(t), newEdges, sparseAssign = true,
       relabelSource = Some(labels => ScanPlanner.readTableWhereIn(
-        engine.spark, t, "component", labels.map(_.toString))))
-      .localCheckpoint()
-    val upserts = delta.filter(col("doc_id") =!= col("component"))
-    if (!upserts.isEmpty) engine.upsert(ref, upserts, Seq("doc_id"),
-      expectedCurrentSnapshotId = t.metadata.currentSnapshotId)
-    delta
+        engine.spark, t, "component", labels.map(_.toString))),
+      resolveInMaxIds) match {
+      case Left(rows) =>
+        val upserts = rows.filter { case (d, c) => d != c }
+        if (upserts.nonEmpty) commit(Dedup.pairFrame(engine.spark, upserts))
+        Dedup.pairFrame(engine.spark, rows)
+      case Right(plan) =>
+        val delta = plan.localCheckpoint()
+        val upserts = delta.filter(col("doc_id") =!= col("component"))
+        if (!upserts.isEmpty) commit(upserts)
+        delta
+    }
   }
 
   /** [[fold]] with a bounded reload-and-rerun on CAS conflict: a racing
@@ -200,71 +222,103 @@ final class ComponentIndex(
 
   /** [[retire]] with the retired ids as a DataFrame (`doc_id` column) —
     * the corpus-scale form. Sets at or under `inMaxIds` distinct ids
-    * (one fused size-probe-and-collect job, the
-    * [[Dedup.incrementalComponents]] `resolveInMaxIds` idiom) keep the
-    * literal path: pushed-down `isin` predicates reach the parquet
-    * readers and the relabel prune hashes a driver-known label list.
-    * Above the threshold every retired-id filter switches to a
-    * broadcast semi/anti-join and the relabel prune's bucket census
-    * runs distributed ([[ScanPlanner.readTableWhereInFrame]]) — a
-    * compliance batch of millions of ids never inflates a plan or the
-    * driver. Same final table state either way (spec-pinned with the
-    * threshold forced to 0). */
+    * (collected from a local frame, else one fused size-probe-and-collect
+    * job, the [[Dedup.incrementalComponents]] `resolveInMaxIds` idiom)
+    * take the DRIVER tier: the retired docs' rows (pushed-down `isin`)
+    * and the affected components' rows (the relabel prune hashes a
+    * driver-known label list) are collected, the residual pairs too, the
+    * re-clustering is a union-find, and the one commit is built from
+    * local relations. Above the threshold every retired-id filter
+    * switches to a broadcast semi/anti-join and the relabel prune's
+    * bucket census runs distributed
+    * ([[ScanPlanner.readTableWhereInFrame]]) — a compliance batch of
+    * millions of ids never inflates a plan or the driver. Same final
+    * table state either way (spec-pinned with the threshold forced to
+    * 0). */
   def retire(retired: DataFrame, pairsAmong: DataFrame => DataFrame,
-      inMaxIds: Int = 1000): DataFrame = {
-    val rids = retired.select(col("doc_id")).distinct().localCheckpoint()
-    retireImpl(rids, Dedup.literalIds(rids, inMaxIds), pairsAmong)
+      inMaxIds: Int = Dedup.LiteralMaxIds): DataFrame = {
+    val ids = retired.select(col("doc_id"))
+    if (retired.isLocal) {
+      val lits = ids.collect().map(_.getLong(0)).distinct.toIndexedSeq
+      if (inMaxIds > 0 && lits.size <= inMaxIds) return retireOnDriver(lits, pairsAmong)
+    }
+    val rids = ids.distinct().localCheckpoint()
+    Dedup.literalIds(rids, inMaxIds) match {
+      case Some(lits) => retireOnDriver(lits, pairsAmong)
+      case None => retireDistributed(rids, pairsAmong)
+    }
   }
 
-  private def retireImpl(rids: DataFrame, lits: Option[IndexedSeq[Long]],
+  /** The driver tier of [[retire]]: the same steps and the same commit
+    * as [[retireDistributed]], over collected rows. */
+  private def retireOnDriver(lits: IndexedSeq[Long],
+      pairsAmong: DataFrame => DataFrame): DataFrame = {
+    val spark = engine.spark
+    val t = engine.load(ref)
+    val gone = lits.toSet
+    // components of retired MEMBER docs, then every stored row of the
+    // affected components (members plus rows labeled by a retired id)
+    val retiredRows = Dedup.longPairs(
+      storeOf(t).filter(col("doc_id").isin(lits: _*)), "doc_id", "component")
+    val affectedLabels = (retiredRows.map(_._2) ++ lits).distinct
+    val affectedRows = Dedup.longPairs(ScanPlanner.readTableWhereIn(spark, t,
+      "component", affectedLabels.map(_.toString)), "doc_id", "component")
+    val remaining = affectedRows.flatMap { case (d, c) => Seq(d, c) }
+      .distinct.filterNot(gone).sorted
+    val kept = remaining.toSet
+    val residual = Dedup.longPairs(
+      pairsAmong(ids(remaining)), "a_id", "b_id")
+      .filter { case (a, b) => kept(a) && kept(b) }
+    val labels = Dedup.minLabels(residual)
+    if (affectedRows.nonEmpty)
+      engine.rowDelta(ref,
+        Dedup.pairFrame(spark, labels.toSeq.sorted.filter { case (d, c) => d != c }),
+        Seq("doc_id"), ids(affectedRows.map(_._1)),
+        expectedCurrentSnapshotId = t.metadata.currentSnapshotId)
+    Dedup.pairFrame(spark, remaining.map(d => d -> labels.getOrElse(d, d)))
+  }
+
+  /** A local `doc_id` frame. */
+  private def ids(xs: Seq[Long]): DataFrame =
+    engine.spark.createDataFrame(xs.map(Row(_)).asJava,
+      StructType(Seq(StructField("doc_id", LongType, nullable = false))))
+
+  /** The distributed tier of [[retire]] over the checkpointed distinct
+    * retired ids `rids`. */
+  private def retireDistributed(rids: DataFrame,
       pairsAmong: DataFrame => DataFrame): DataFrame = {
     val t = engine.load(ref)
     val store = storeOf(t)
-    // join-tier hint ceiling: the explicit broadcast hints below are the
+    // hint ceiling: the explicit broadcast hints below are the
     // mass-deletion form, but a hint FORCES the broadcast regardless of
-    // size — probe the checkpointed frame once (join path only: the
-    // literal path never evaluates this) and drop the hint above the
-    // ceiling, letting AQE pick the join
-    lazy val ridsFit = Dedup.fitsBroadcast(rids)
-    // components of retired MEMBER docs (their own stored rows): the
-    // pushed-down literal reaches the parquet scan for bounded sets; a
-    // corpus-scale set probes through a broadcast semi-join instead
-    val retiredRows = (lits match {
-      case Some(seq) => store.filter(col("doc_id").isin(seq: _*))
-      case None => store.join(Dedup.hintIf(ridsFit)(rids),
-        Seq("doc_id"), "left_semi")
-    }).localCheckpoint()
+    // size — probe the checkpointed frame once and drop the hint above
+    // the ceiling, letting AQE pick the join
+    val ridsFit = Dedup.fitsBroadcast(rids)
+    // components of retired MEMBER docs (their own stored rows), probed
+    // through a broadcast semi-join
+    val retiredRows = store.join(Dedup.hintIf(ridsFit)(rids),
+      Seq("doc_id"), "left_semi").localCheckpoint()
     // all affected components' stored rows: members of those comps PLUS
     // rows labeled by a retired id (a retired LABEL's own row is
     // implicitly trivial — its members' rows are what the pruned read
     // finds). One bucket-pruned read covers both label sets.
-    val affectedRows = (lits match {
-      case Some(seq) =>
-        val memberComps = retiredRows.select("component").distinct()
-          .collect().map(_.getLong(0))
-        val affectedLabels = (memberComps ++ seq).distinct.toIndexedSeq
-        ScanPlanner.readTableWhereIn(engine.spark, t, "component",
-          affectedLabels.map(_.toString))
-      case None =>
-        val labels = retiredRows.select(col("component"))
-          .union(rids.select(col("doc_id").as("component")))
-          .distinct().localCheckpoint()
-        ScanPlanner.readTableWhereInFrame(engine.spark, t, "component", labels)
-          .join(Dedup.hintIf(Dedup.fitsBroadcast(labels))(labels),
-            Seq("component"), "left_semi")
-    }).localCheckpoint()
+    val affectedRows = {
+      val labels = retiredRows.select(col("component"))
+        .union(rids.select(col("doc_id").as("component")))
+        .distinct().localCheckpoint()
+      ScanPlanner.readTableWhereInFrame(engine.spark, t, "component", labels)
+        .join(Dedup.hintIf(Dedup.fitsBroadcast(labels))(labels),
+          Seq("component"), "left_semi")
+    }.localCheckpoint()
     // remaining members: stored members plus the (implicit) label docs
     // themselves, minus everything retired. (retiredRows ⊆ affectedRows
-    // — both read off the same pinned table and memberComps ⊆
-    // affectedLabels — so its labels are already covered here.)
+    // — both read off the same pinned table, and retiredRows' labels
+    // are among the affected labels — so they are already covered.)
     val remaining0 = affectedRows.select("doc_id")
       .union(affectedRows.select(col("component").as("doc_id")))
       .distinct()
-    val remaining = (lits match {
-      case Some(seq) => remaining0.filter(!col("doc_id").isin(seq: _*))
-      case None => remaining0.join(Dedup.hintIf(ridsFit)(rids),
-        Seq("doc_id"), "left_anti")
-    }).localCheckpoint()
+    val remaining = remaining0.join(Dedup.hintIf(ridsFit)(rids),
+      Seq("doc_id"), "left_anti").localCheckpoint()
     // residual candidate pairs among the remaining members only —
     // restricted defensively so a generous provider cannot leak edges
     // to retired or unaffected docs (one ceiling probe covers both

@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 
 /** Document deduplication for training-data pipelines: exact, MinHash+LSH,
@@ -236,25 +239,7 @@ object Dedup {
     if (driverEdges.isDefined) {
       val spark = p.sparkSession
       import spark.implicits._
-      val edges = driverEdges.get
-      // path-halving union-find, then relabel every root to the MIN id
-      // of its set (the label-propagation fixpoint computes exactly that)
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x0: Long): Long = {
-        var x = x0
-        while (parent.getOrElse(x, x) != x) {
-          val gp = parent.getOrElse(parent(x), parent(x))
-          parent(x) = gp; x = gp
-        }
-        x
-      }
-      edges.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val rows = parent.keys.toSeq.sorted.map(id => (id, find(id)))
-      return rows.toDF("doc_id", "component")
+      return minLabels(driverEdges.get).toSeq.sorted.toDF("doc_id", "component")
     }
     val rawEdges = p.select(col("a_id").as("src"), col("b_id").as("dst"))
       .union(p.select(col("b_id").as("src"), col("a_id").as("dst")))
@@ -332,6 +317,42 @@ object Dedup {
     labels.select(col("id").as("doc_id"), col("label").as("component"))
   }
 
+  /** Path-halving union-find over `edges`: every endpoint → the MIN id
+    * of its connected set (the label-propagation fixpoint computes
+    * exactly that). A self edge makes its node its own label. */
+  private[graft] def minLabels(edges: Iterable[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      while (parent.getOrElse(x, x) != x) {
+        val gp = parent.getOrElse(parent(x), parent(x))
+        parent(x) = gp; x = gp
+      }
+      x
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(id => id -> find(id)).toMap
+  }
+
+  /** The default literal-vs-join bound on a batch's distinct ids — the
+    * [[incrementalComponents]] `resolveInMaxIds` / retire `inMaxIds`
+    * default, and where the ledger's driver tiers end. */
+  private[graft] val LiteralMaxIds = 1000
+
+  /** `(doc_id, component)`-shaped rows as a local relation. */
+  private[graft] def pairFrame(spark: SparkSession, rows: Seq[(Long, Long)]): DataFrame =
+    spark.createDataFrame(rows.map { case (d, c) => Row(d, c) }.asJava,
+      StructType(Seq(StructField("doc_id", LongType, nullable = false),
+        StructField("component", LongType, nullable = false))))
+
+  /** Two long columns of `df` collected as pairs. */
+  private[graft] def longPairs(df: DataFrame, a: String, b: String): Seq[(Long, Long)] =
+    df.select(col(a), col(b)).collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+
   /** INCREMENTAL connected components: fold a batch of NEW candidate
     * edges into a STANDING component assignment without re-running the
     * corpus-wide label propagation — the missing piece between
@@ -384,28 +405,102 @@ object Dedup {
     * (row-group min/max skipping on doc_id-clustered files), where a
     * semi-join's build side never reaches the reader. Same
     * literal-vs-join threshold idiom as the eq-delete sequence map
-    * (`ScanPlanner`); 0 disables the literal path. */
+    * (`ScanPlanner`).
+    *
+    * TIERS: a batch at or under `resolveInMaxIds` distinct endpoints
+    * (the bound that already decides the literal resolution) runs on
+    * the DRIVER — edges collected once, `touched` and then the
+    * merged-away labels' rows read as two pushed-down collects, the
+    * contraction and union-find over rows ([[minLabels]]), the delta
+    * returned as a local relation. Above the bound the plans above run
+    * distributed; 0 forces that tier. Both tiers emit the same rows. */
   def incrementalComponents(assign: DataFrame, newEdges: DataFrame,
       sparseAssign: Boolean = false,
       relabelSource: Option[Seq[Long] => DataFrame] = None,
-      resolveInMaxIds: Int = 1000): DataFrame = {
-    // batch-bounded and consumed twice (resolution + new-doc anti) —
+      resolveInMaxIds: Int = LiteralMaxIds): DataFrame =
+    incrementalDelta(assign, newEdges, sparseAssign, relabelSource,
+      resolveInMaxIds) match {
+      case Left(rows) => pairFrame(assign.sparkSession, rows)
+      case Right(delta) => delta
+    }
+
+  /** [[incrementalComponents]] with the tier visible: `Left` is the
+    * driver tier's delta rows, `Right` the distributed tier's plan. */
+  private[graft] def incrementalDelta(assign: DataFrame, newEdges: DataFrame,
+      sparseAssign: Boolean,
+      relabelSource: Option[Seq[Long] => DataFrame],
+      resolveInMaxIds: Int): Either[Seq[(Long, Long)], DataFrame] = {
+    // a local edge frame is driver rows already (no job to read it);
+    // any other plan is batch-bounded and consumed more than once —
     // materialize once (skipped when the caller already checkpointed
-    // exactly this shape, e.g. the semantic gate's edge set)
-    val e = materializedAs(newEdges, Seq("a_id", "b_id")).getOrElse(
-      newEdges.select(col("a_id"), col("b_id")).localCheckpoint())
-    val ids = e.select(col("a_id").as("doc_id"))
+    // exactly this shape, e.g. the semantic gate's edge set) and probe
+    // its distinct endpoints in ONE bounded job ([[literalIds]])
+    val local = if (newEdges.isLocal) Some(longPairs(newEdges, "a_id", "b_id")) else None
+    val e = if (local.isDefined) newEdges.select(col("a_id"), col("b_id"))
+      else materializedAs(newEdges, Seq("a_id", "b_id")).getOrElse(
+        newEdges.select(col("a_id"), col("b_id")).localCheckpoint())
+    val idFrame = e.select(col("a_id").as("doc_id"))
       .union(e.select(col("b_id").as("doc_id"))).distinct()
+    val lits = local match {
+      case Some(ps) =>
+        val ids = ps.flatMap { case (a, b) => Seq(a, b) }.distinct.toIndexedSeq
+        if (resolveInMaxIds > 0 && ids.size <= resolveInMaxIds) Some(ids) else None
+      case None => literalIds(idFrame, resolveInMaxIds)
+    }
+    lits match {
+      case Some(ids) => Left(driverDelta(assign,
+        local.getOrElse(longPairs(e, "a_id", "b_id")), ids, sparseAssign, relabelSource))
+      case None => Right(distributedDelta(assign, e, idFrame.localCheckpoint(),
+        sparseAssign, relabelSource))
+    }
+  }
+
+  /** The driver tier of [[incrementalComponents]]: the same row sets as
+    * [[distributedDelta]], over collected rows. */
+  private def driverDelta(assign: DataFrame, edges: Seq[(Long, Long)],
+      ids: IndexedSeq[Long], sparseAssign: Boolean,
+      relabelSource: Option[Seq[Long] => DataFrame]): Seq[(Long, Long)] = {
+    val touched = longPairs(assign.filter(col("doc_id").isin(ids: _*)),
+      "doc_id", "component").toMap
+    def label(x: Long) = touched.getOrElse(x, x)
+    val m = minLabels(edges.map { case (a, b) => (label(a), label(b)) }
+      .filter { case (a, b) => a != b })
+    val mergedAway = m.filter { case (node, comp) => node != comp }
+    val relabeled =
+      if (mergedAway.isEmpty) Seq.empty
+      else {
+        val labels = mergedAway.keys.toIndexedSeq.sorted
+        val rows = relabelSource match {
+          case Some(read) => read(labels)
+          case None => assign.filter(col("component").isin(labels: _*))
+        }
+        longPairs(rows, "doc_id", "component").collect {
+          case (d, c) if mergedAway.contains(c) => d -> mergedAway(c)
+        }
+      }
+    val newIds = ids.filterNot(touched.contains)
+    val newRows = newIds.flatMap(d => m.get(d).map(d -> _))
+    val ownRows =
+      if (!sparseAssign) Seq.empty
+      else {
+        val standing = touched.values.toSet
+        val fresh = newIds.toSet
+        mergedAway.toSeq.sorted.collect {
+          case (l, c) if standing(l) && !fresh(l) => l -> c
+        }
+      }
+    relabeled ++ newRows ++ ownRows
+  }
+
+  /** The distributed tier of [[incrementalComponents]] over the
+    * materialized edges `e` and their distinct endpoints `ids`. */
+  private def distributedDelta(assign: DataFrame, e: DataFrame, ids: DataFrame,
+      sparseAssign: Boolean,
+      relabelSource: Option[Seq[Long] => DataFrame]): DataFrame = {
+    // the batch's footprint in the standing assignment: a broadcast
+    // semi-join — the corpus side is scan-only (no shuffle, no wide row)
+    val touched = assign.join(broadcast(ids), Seq("doc_id"), "left_semi")
       .localCheckpoint()
-    // the batch's footprint in the standing assignment: a pushed-down
-    // IN literal for small batches, a broadcast semi-join above the
-    // threshold — either way the corpus side is scan-only (no shuffle,
-    // no wide row). Size probe and id collect fuse into ONE job
-    // ([[literalIds]] — the shared clamp + non-exhaustion guard).
-    val touched = (literalIds(ids, resolveInMaxIds) match {
-      case Some(seq) => assign.filter(col("doc_id").isin(seq: _*))
-      case None => assign.join(broadcast(ids), Seq("doc_id"), "left_semi")
-    }).localCheckpoint()
     // contract edges onto the component graph: endpoint → its standing
     // label, absent endpoint → itself (implicit singleton). `touched` is
     // batch-bounded, so both resolution joins broadcast it.

@@ -53,14 +53,12 @@ object Delete {
       .collect().map(_.getString(0)).toSet
     if (matchedRel.isEmpty) return None
 
-    val matchedAbs = t.files()
-      .filter(e => matchedRel.contains(e.filePath))
-      .map(e => t.resolvePath(e.filePath))
+    val matched = t.files().filter(e => matchedRel.contains(e.filePath))
     val hit = coalesce(predicate, lit(false))
     // single projection: every assignment's right-hand side evaluates
     // against the ORIGINAL row (SQL UPDATE semantics — assignments never
     // see each other's new values)
-    val rewritten = ScanPlanner.readFiles(spark, t, matchedAbs)
+    val rewritten = ScanPlanner.readFiles(spark, t, matched)
       .select(schemaCols.map { c =>
         assignments.get(c) match {
           case Some(v) => when(hit, v).otherwise(col(c)).as(c)
@@ -86,10 +84,8 @@ object Delete {
       .collect().map(_.getString(0)).toSet
     if (matchedRel.isEmpty) return None
 
-    val matchedAbs = t.files()
-      .filter(e => matchedRel.contains(e.filePath))
-      .map(e => t.resolvePath(e.filePath))
-    val survivors = ScanPlanner.readFiles(spark, t, matchedAbs)
+    val matched = t.files().filter(e => matchedRel.contains(e.filePath))
+    val survivors = ScanPlanner.readFiles(spark, t, matched)
       .filter(not(coalesce(predicate, lit(false))))
     Some(TableWriter.replaceFiles(spark, tableDir, matchedRel, survivors,
       carryDeletes = t.deleteFiles().nonEmpty, operation = "overwrite"))

@@ -322,7 +322,7 @@ object Maintenance {
       else {
         import org.apache.spark.sql.functions._
         val prefix = s"file:$tableDir/"
-        spark.read.parquet(posDels.map(e => t.resolvePath(e.filePath)): _*)
+        ScanPlanner.readPositionDeletes(spark, t, posDels)
           .select(
             expr(s"substring(_metadata.file_path, ${prefix.length + 1})").as("del_file"),
             col("file_path"))

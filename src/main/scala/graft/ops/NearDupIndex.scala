@@ -83,11 +83,13 @@ final class NearDupIndex(
     * The batch's signatures are materialized ONCE (they feed both the
     * bucket-prune census and the collision join), and the index side is
     * the bucket-pruned file subset, not the whole table. */
-  def check(increment: DataFrame): DataFrame = {
-    val batchSigs = Dedup.bandSignatures(increment, numPerm, rowsPerBand)
-      .localCheckpoint()
+  def check(increment: DataFrame): DataFrame =
+    collisions(Dedup.bandSignatures(increment, numPerm, rowsPerBand)
+      .localCheckpoint())
+
+  /** [[check]] over already-materialized band signatures. */
+  private def collisions(batchSigs: DataFrame): DataFrame =
     Dedup.bandCollisions(batchSigs, probeSignatures(batchSigs))
-  }
 
   /** Gate one ingest batch: return the docs that do NOT collide with the
     * index, and append exactly those docs' band signatures (one commit)
@@ -103,14 +105,17 @@ final class NearDupIndex(
     * pipeline), and only the kept docs face the index gate — so the
     * very first post-bootstrap batch can't seed the index with its own
     * internal duplicates. The intra-batch pair join is band-bucketed
-    * (equi-join on `(band, band_sig)`), never all-pairs. */
+    * (equi-join on `(band, band_sig)`), never all-pairs.
+    *
+    * The batch is hashed ONCE: its band signatures feed the gate probe
+    * and the survivors' append (a semi-join on the survivors' ids). */
   def admit(
       increment: DataFrame, dedupWithinBatch: Boolean = false): DataFrame = {
-    val batch =
-      if (!dedupWithinBatch) increment
+    val sigs = Dedup.bandSignatures(increment, numPerm, rowsPerBand)
+      .localCheckpoint()
+    val (batch, batchSigs) =
+      if (!dedupWithinBatch) (increment, sigs)
       else {
-        val sigs = Dedup.bandSignatures(increment, numPerm, rowsPerBand)
-          .localCheckpoint()
         val pairs = sigs
           .select(col("doc_id").as("a_id"), col("band"), col("band_sig"))
           .join(sigs.select(col("doc_id").as("b_id"), col("band"), col("band_sig")),
@@ -119,13 +124,15 @@ final class NearDupIndex(
           .select("a_id", "b_id").distinct()
         val drop = Dedup.connectedComponents(pairs)
           .filter(col("doc_id") =!= col("component")).select("doc_id")
-        increment.join(drop, Seq("doc_id"), "left_anti")
+          .localCheckpoint()
+        (increment.join(drop, Seq("doc_id"), "left_anti"),
+          sigs.join(drop, Seq("doc_id"), "left_anti").localCheckpoint())
       }
-    val flagged = check(batch).select(col("doc_id"))
+    val flagged = collisions(batchSigs).select(col("doc_id"))
     val survivors = batch.join(flagged, Seq("doc_id"), "left_anti")
       // one evaluation feeds both the signature append and the caller
       .localCheckpoint()
-    engine.append(ref, Dedup.bandSignatures(survivors, numPerm, rowsPerBand)
+    engine.append(ref, batchSigs.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("band"), col("band_sig")))
     survivors
   }

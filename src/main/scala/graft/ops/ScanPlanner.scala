@@ -2,9 +2,13 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import org.apache.spark.sql.GraftParquetBridge
+import org.apache.spark.sql.execution.datasources.parquet.GraftSchemaInference
 
 import graft.expr.IcebergDecode
-import graft.meta.{FieldIds, IcebergTable}
+import graft.meta.{DataFileEntry, FieldIds, IcebergTable}
 
 /** Metadata-pruned DATA reads — the read half of "DataFrame read/write
   * over Iceberg tables": plan a scan by pruning the snapshot's file list
@@ -16,10 +20,11 @@ import graft.meta.{FieldIds, IcebergTable}
   * Scale shape: pruning runs on the `files` metadata relation (thousands
   * of rows at 100 TB), entirely as DataFrame transforms over the decoded
   * bound bytes — the expensive thing it saves is the DATA scan: a
-  * predicate touching 1% of the id range reads ~1% of the files. The
-  * returned reader is a plain `spark.read.parquet(paths)` so Catalyst
-  * still pushes residual filters into the row groups of the files that
-  * do get read. */
+  * predicate touching 1% of the id range reads ~1% of the files. Every
+  * read is planned from the manifest entries it already holds
+  * ([[readEntries]]: a file-source relation whose file index IS the entry
+  * list — no directory listing, no listing job), so Catalyst still pushes
+  * residual filters into the row groups of the files that do get read. */
 object ScanPlanner {
 
   /** Above this many live data files, the equality-delete per-file
@@ -32,10 +37,11 @@ object ScanPlanner {
       .map(_.toInt).getOrElse(1000)
 
   /** Snapshots at or under this many data files (per the snapshot
-    * summary) prune partition IN-probes driver-side with no Spark
-    * action; larger snapshots go through the executor-parallel files
-    * relation. Mirrors [[graft.rel.MetaRelations]]'s >2000-entry
-    * distributed-parse contract. */
+    * summary) are walked on the driver by the metadata folds that have an
+    * executor-parallel twin ([[AnnIndex.drift]]). Mirrors
+    * [[graft.rel.MetaRelations]]'s >2000-entry distributed-parse
+    * contract. (Partition probes always prune on the driver: the read
+    * that follows is planned from the kept entries.) */
   private[graft] val DriverPruneMaxFiles = 2000L
 
   /** Ceiling (total on-disk bytes, per the manifests' metadata-known
@@ -161,45 +167,63 @@ object ScanPlanner {
     * `_metadata.file_path` / `_metadata.row_index` columns — one
     * broadcast anti-join when delete files exist, a plain scan when they
     * don't (delete sets are metadata-small next to the data). */
-  def readTable(spark: SparkSession, t: IcebergTable, snapshotId: Option[Long] = None): DataFrame = {
-    val paths = t.files(snapshotId).map(e => t.resolvePath(e.filePath))
-    require(paths.nonEmpty, s"snapshot has no data files under ${t.tableDir}")
-    readSplit(spark, t, snapshotId, paths)
+  def readTable(spark: SparkSession, t: IcebergTable, snapshotId: Option[Long] = None): DataFrame =
+    readSplit(spark, t, snapshotId, liveFiles(t, snapshotId))
+
+  /** The snapshot's live data entries; a read of none is an error. */
+  private def liveFiles(t: IcebergTable, snapshotId: Option[Long]): Seq[DataFileEntry] = {
+    val entries = t.files(snapshotId)
+    require(entries.nonEmpty, s"snapshot has no data files under ${t.tableDir}")
+    entries
   }
 
   /** Merge-on-read scan of an explicit SUBSET of the snapshot's data
-    * files: the same delete application as [[readTable]] (position
-    * anti-join; sequence-scoped equality), restricted to `paths` — what
-    * incremental compaction reads so a partial rewrite can never
-    * resurrect deleted rows. */
-  def readFiles(spark: SparkSession, t: IcebergTable, paths: Seq[String],
-      snapshotId: Option[Long] = None,
-      // manifest subset a pruned planner already narrowed to — the
-      // split's classification listing then parses only those
-      manifestsHint: Option[Seq[graft.meta.ManifestFile]] = None): DataFrame = {
-    require(paths.nonEmpty, "readFiles needs at least one path")
-    readSplit(spark, t, snapshotId, paths, manifestsHint = manifestsHint)
+    * files (`entries`, live in `snapshotId`): the same delete
+    * application as [[readTable]] (position anti-join; sequence-scoped
+    * equality), restricted to those files — what incremental compaction
+    * reads so a partial rewrite can never resurrect deleted rows. */
+  def readFiles(spark: SparkSession, t: IcebergTable, entries: Seq[DataFileEntry],
+      snapshotId: Option[Long] = None): DataFrame = {
+    require(entries.nonEmpty, "readFiles needs at least one file")
+    readSplit(spark, t, snapshotId, entries)
   }
+
+  /** THE read of table parquet: a file-source relation over exactly
+    * `entries`' files, indexed from their manifest facts (absolute path,
+    * `file_size_in_bytes` — [[GraftParquetBridge.readParquet]]), so no
+    * read lists a directory or stats a file. `schema` is the read schema;
+    * without one (legacy tables whose schema is not Spark-expressible)
+    * it is the footer schema of the first file in path order — what
+    * parquet inference over the same paths picks — read on the driver. */
+  private[graft] def readEntries(spark: SparkSession, t: IcebergTable,
+      entries: Seq[DataFileEntry], schema: Option[StructType]): DataFrame = {
+    val files = entries.map(e => t.resolvePath(e.filePath) -> e.fileSizeInBytes)
+    GraftParquetBridge.readParquet(spark, files, schema.getOrElse(
+      GraftSchemaInference.schemaOfFile(spark, files.map(_._1).min)))
+  }
+
+  /** Position-delete files' `(file_path, pos)` rows. */
+  private[graft] def readPositionDeletes(spark: SparkSession, t: IcebergTable,
+      posDels: Seq[DataFileEntry]): DataFrame =
+    readEntries(spark, t, posDels, Some(PositionDeleteSchema))
+
+  private val PositionDeleteSchema = StructType(Seq(
+    StructField("file_path", StringType), StructField("pos", LongType)))
 
   /** [[readTable]] pinned to `snapshotId`'s FILE SET but rendered in
     * the CURRENT schema — what the change feed needs: CDC output is a
     * current-schema view even when the commits predate evolution. */
   def readTableCurrentSchema(spark: SparkSession, t: IcebergTable,
-      snapshotId: Option[Long]): DataFrame = {
-    val paths = t.files(snapshotId).map(e => t.resolvePath(e.filePath))
-    require(paths.nonEmpty, s"snapshot has no data files under ${t.tableDir}")
-    readSplit(spark, t, snapshotId, paths, schemaSnapOverride = Some(None))
-  }
+      snapshotId: Option[Long]): DataFrame =
+    readSplit(spark, t, snapshotId, liveFiles(t, snapshotId),
+      schemaSnapOverride = Some(None))
 
   /** [[readTableLineage]], current-schema rendering (see
     * [[readTableCurrentSchema]]). */
   def readTableLineageCurrentSchema(spark: SparkSession, t: IcebergTable,
-      snapshotId: Option[Long]): DataFrame = {
-    val paths = t.files(snapshotId).map(e => t.resolvePath(e.filePath))
-    require(paths.nonEmpty, s"snapshot has no data files under ${t.tableDir}")
-    readSplit(spark, t, snapshotId, paths, keepLineage = true,
+      snapshotId: Option[Long]): DataFrame =
+    readSplit(spark, t, snapshotId, liveFiles(t, snapshotId), keepLineage = true,
       schemaSnapOverride = Some(None))
-  }
 
   /** [[readTable]] with row lineage kept: two extra columns `__gr_path`
     * (table-relative file path) and `__gr_pos` (row index within the
@@ -208,11 +232,8 @@ object ScanPlanner {
     * against already-deleted rows is impossible because the deletes are
     * applied before the caller's predicate. */
   def readTableLineage(spark: SparkSession, t: IcebergTable,
-      snapshotId: Option[Long] = None): DataFrame = {
-    val paths = t.files(snapshotId).map(e => t.resolvePath(e.filePath))
-    require(paths.nonEmpty, s"snapshot has no data files under ${t.tableDir}")
-    readSplit(spark, t, snapshotId, paths, keepLineage = true)
-  }
+      snapshotId: Option[Long] = None): DataFrame =
+    readSplit(spark, t, snapshotId, liveFiles(t, snapshotId), keepLineage = true)
 
   /** FILE-SCOPED merge-on-read: split the requested files into the
     * DELETE-UNTOUCHED set (scanned bare — vectorized parquet read, no
@@ -229,53 +250,29 @@ object ScanPlanner {
     * does); an equality delete hits every file whose commit sequence is
     * strictly below the delete's (Iceberg v2 scoping), so files at or
     * above the NEWEST equality-delete sequence escape it structurally. */
-  /** Live data entries, from a pruned-planner MANIFEST subset when one
-    * is known: the classification/fill listings of a pruned read then
-    * parse only the manifests its probe kept, instead of every manifest
-    * of the snapshot. The hint must COVER the requested paths (it does
-    * by construction — the paths came from those manifests); the
-    * containment check downstream falls back safely regardless. */
-  private def liveEntriesOf(t: IcebergTable, snapshotId: Option[Long],
-      manifestsHint: Option[Seq[graft.meta.ManifestFile]]): Seq[graft.meta.DataFileEntry] =
-    manifestsHint match {
-      case Some(ms) =>
-        val all = t.manifests(snapshotId).filter(_.content == 0)
-        if (ms.size == all.size) t.files(snapshotId) // memoized
-        else ms.filter(_.content == 0)
-          .flatMap(m => t.manifestEntries(t.resolvePath(m.manifestPath)))
-          .filter(_.status != 2)
-      case None => t.files(snapshotId)
-    }
-
   private def readSplit(
       spark: SparkSession,
       t: IcebergTable,
       snapshotId: Option[Long],
-      paths: Seq[String],
+      entries: Seq[DataFileEntry],
       keepLineage: Boolean = false,
       // None = render in the snapshot's own schema (time-travel
       // semantics); Some(s) = render in the schema at `s` (the change
       // feed pins the FILE SET to a parent commit but must present the
       // CURRENT schema)
-      schemaSnapOverride: Option[Option[Long]] = None,
-      // manifest subset a pruned planner already narrowed to (see
-      // [[liveEntriesOf]])
-      manifestsHint: Option[Seq[graft.meta.ManifestFile]] = None): DataFrame = {
+      schemaSnapOverride: Option[Option[Long]] = None): DataFrame = {
     val schemaSnap = schemaSnapOverride.getOrElse(snapshotId)
-    lazy val hintEntries = liveEntriesOf(t, snapshotId, manifestsHint)
+    def scan(es: Seq[DataFileEntry]) = scanFiles(spark, t, es, schemaSnap, snapshotId)
     val allDels = t.deleteFiles(snapshotId)
     if (allDels.isEmpty)
-      return applyDeletes(spark, t, snapshotId,
-        scanFiles(spark, t, paths, schemaSnap, snapshotId,
-          entriesHint = manifestsHint.map(_ => hintEntries)),
-        keepLineage, schemaSnap)
+      return applyDeletes(spark, t, snapshotId, scan(entries), keepLineage, schemaSnap)
 
     val (eqDels, posDels) = allDels.partition(_.content == 2)
     val seqBySnapshot = t.metadata.snapshots
       .map(s => s.snapshotId -> s.sequenceNumber).toMap
     val posTargets: Set[String] =
       if (posDels.isEmpty) Set.empty
-      else spark.read.parquet(posDels.map(e => t.resolvePath(e.filePath)): _*)
+      else readPositionDeletes(spark, t, posDels)
         .select("file_path").distinct()
         .collect().map(_.getString(0)).toSet
     // a data file escapes ALL equality deletes iff its sequence is >= the
@@ -283,15 +280,6 @@ object ScanPlanner {
     // (-1 → snapshot-log fallback, else 0) conservatively read as hit
     val maxEqSeq = eqDels.map(_.resolvedSeq(seqBySnapshot, Long.MaxValue))
       .maxOption.getOrElse(Long.MinValue)
-    val requested = paths.toSet
-    val entries = hintEntries
-      .filter(e => requested.contains(t.resolvePath(e.filePath)))
-    // a requested path OUTSIDE the snapshot's live set has no entry to
-    // classify — splitting would silently DROP its rows. Engine call
-    // sites always pass live paths, but fall back to the unsplit read
-    // (which scans every given path) whenever containment is partial.
-    if (entries.size != requested.size)
-      return applyDeletes(spark, t, snapshotId, scanFiles(spark, t, paths, schemaSnap, snapshotId), keepLineage, schemaSnap)
     val (hit, clean) = entries.partition(e =>
       posTargets.contains(e.filePath) ||
         e.resolvedSeq(seqBySnapshot, 0L) < maxEqSeq)
@@ -300,42 +288,27 @@ object ScanPlanner {
       if (!keepLineage) df
       else df.withColumn("__gr_path", relPathFromMetadata(t))
         .withColumn("__gr_pos", col("_metadata.row_index"))
-    val parts = Seq(
-      if (clean.isEmpty) None
-      else Some(lineaged(scanFiles(spark, t, clean.map(e => t.resolvePath(e.filePath)),
-        schemaSnap, snapshotId, entriesHint = Some(entries)))),
+    Seq(
+      if (clean.isEmpty) None else Some(lineaged(scan(clean))),
       if (hit.isEmpty) None
-      else Some(applyDeletes(spark, t, snapshotId,
-        scanFiles(spark, t, hit.map(e => t.resolvePath(e.filePath)),
-          schemaSnap, snapshotId, entriesHint = Some(entries)),
-        keepLineage, schemaSnap))
-    ).flatten
-    // a caller-supplied path outside the snapshot's live set (shouldn't
-    // happen from engine call sites) falls back to the unsplit read
-    if (parts.isEmpty)
-      applyDeletes(spark, t, snapshotId, scanFiles(spark, t, paths, schemaSnap, snapshotId), keepLineage, schemaSnap)
-    else parts.reduce(_.unionByName(_))
+      else Some(applyDeletes(spark, t, snapshotId, scan(hit), keepLineage, schemaSnap))
+    ).flatten.reduce(_.unionByName(_))
   }
 
-  /** Scan `paths` through the table's CURRENT schema when it is
+  /** Scan `entries`' files through the table's CURRENT schema when it is
     * expressible: under metadata-only evolution files differ per schema
     * version — an explicit read schema makes later-added columns surface
     * as nulls from older files, dropped columns disappear, and the
     * column order follow the schema (plain inference would pick one
-    * file's shape). */
-  private def scanFiles(spark: SparkSession, t: IcebergTable, paths: Seq[String],
-      schemaSnap: Option[Long] = None,
-      fileSnap: Option[Long] = None,
-      // already-listed entries covering `paths` (pruned planners) — the
-      // fill then avoids its own full manifest listing
-      entriesHint: Option[Seq[graft.meta.DataFileEntry]] = None): DataFrame = {
-    val reader = readSchemaForFiles(spark, t, schemaSnap, fileSnap) match {
-      case Some(st) => spark.read.schema(st)
-      case None => spark.read
-    }
-    fillPathPartitions(spark, t, reader.parquet(paths: _*), paths, schemaSnap,
-      fileSnap, entriesHint)
-  }
+    * file's shape). Hive-adopted partition columns are filled from the
+    * entries ([[fillPathPartitionsEntries]]). */
+  private def scanFiles(spark: SparkSession, t: IcebergTable,
+      entries: Seq[DataFileEntry],
+      schemaSnap: Option[Long],
+      fileSnap: Option[Long]): DataFrame =
+    fillPathPartitionsEntries(spark, t,
+      readEntries(spark, t, entries, readSchemaForFiles(spark, t, schemaSnap, fileSnap)),
+      entries, schemaSnap)
 
   /** Fill HIVE-ADOPTED identity-partition columns from the manifests'
     * per-file constants: hive-layout `add_files` sources don't contain
@@ -354,30 +327,9 @@ object ScanPlanner {
     * relation joined on `_metadata.file_path` for ALL fill columns,
     * broadcast to the same 2M-file ceiling. `migrate-field-ids`' full
     * rewrite materializes the columns into the files, after which the
-    * coalesce never fires. */
-  private def fillPathPartitions(
-      spark: SparkSession,
-      t: IcebergTable,
-      df0: DataFrame,
-      paths: Seq[String],
-      schemaSnap: Option[Long],
-      fileSnap: Option[Long],
-      entriesHint: Option[Seq[graft.meta.DataFileEntry]] = None): DataFrame = {
-    if (graft.meta.Transforms.pathPartitionCols(t.metadata).isEmpty) return df0
-    val requested = paths.toSet
-    fillPathPartitionsEntries(spark, t, df0,
-      entriesHint.getOrElse(t.files(fileSnap))
-        .filter(e => requested.contains(t.resolvePath(e.filePath))),
-      schemaSnap)
-  }
-
-  /** Entries-based core of the fill, for callers that already hold the
-    * scanned files' [[graft.meta.DataFileEntry]]s (compaction's
-    * small-file read, the change feed's per-commit slices, the
-    * streaming source — every surface that reads table parquet outside
-    * [[readTable]]'s path list). No-op unless the table declares
-    * path-partition columns AND some entry is an un-rewritten adopted
-    * file. */
+    * coalesce never fires. `allEntries` are the scanned files' entries;
+    * no-op unless the table declares path-partition columns AND some
+    * entry is an un-rewritten adopted file. */
   private[graft] def fillPathPartitionsEntries(
       spark: SparkSession,
       t: IcebergTable,
@@ -484,10 +436,10 @@ object ScanPlanner {
       spark: SparkSession,
       t: IcebergTable,
       ids: Seq[Int],
-      paths: Seq[String],
+      files: Seq[DataFileEntry],
       schemaSnap: Option[Long] = None,
       fileSnap: Option[Long] = None): DataFrame =
-    if (!FieldIds.idsAtSnapshot(t.metadata, fileSnap)) spark.read.parquet(paths: _*)
+    if (!FieldIds.idsAtSnapshot(t.metadata, fileSnap)) readEntries(spark, t, files, None)
     else {
       FieldIds.ensureReadEnabled(spark)
       val byId = schemaAt(t, schemaSnap).fields.map(f => f.id -> f).toMap
@@ -499,7 +451,7 @@ object ScanPlanner {
             s"equality-delete key ${f.name} has non-primitive type ${f.fieldType}")),
           nullable = true, FieldIds.idMetadata(id))
       })
-      spark.read.schema(st).parquet(paths: _*)
+      readEntries(spark, t, files, Some(st))
     }
 
   /** The qualified-URI prefix `_metadata.file_path` carries for files
@@ -601,7 +553,7 @@ object ScanPlanner {
 
     val afterPos = if (posDels.isEmpty) df
     else {
-      val dels = spark.read.parquet(posDels.map(e => t.resolvePath(e.filePath)): _*)
+      val dels = readPositionDeletes(spark, t, posDels)
         .select(col("file_path").as("__del_path"), col("pos").as("__del_pos"))
       df.join(hintIfDeleteFits(spark, posDels)(dels),
           df("__gr_path") === dels("__del_path") && df("__gr_pos") === dels("__del_pos"),
@@ -613,7 +565,9 @@ object ScanPlanner {
     // only rows of data files whose commit sequence is STRICTLY SMALLER
     // than the delete's apply (Iceberg v2 semantics — a row re-appended
     // after the delete survives it). One broadcast anti-join per distinct
-    // (id set, sequence) group; the per-file sequence rides along as a
+    // equality-id set, whatever the number of commits that wrote its
+    // delete files: each delete row carries its file's sequence. The
+    // per-file data sequence rides along as a
     // literal path→sequence map (metadata-scale; at very large file
     // counts this moves to a broadcast join against the files relation).
     // The hint on the delete VALUES is ceilinged on their metadata-known
@@ -621,21 +575,23 @@ object ScanPlanner {
     val afterEq = if (eqDels.isEmpty) afterPos
     else {
       val nameById = schemaAt(t, schemaSnap).fields.map(f => f.id -> f.name).toMap
-      val applied = eqDels
-        .groupBy(e => (e.equalityIds, entrySeq(e, Long.MaxValue)))
-        .foldLeft(afterPos) { case (acc, ((ids, delSeq), files)) =>
+      val applied = eqDels.groupBy(_.equalityIds).toSeq.sortBy(_._1.mkString(","))
+        .foldLeft(afterPos) { case (acc, (ids, files)) =>
           require(ids.nonEmpty,
             s"equality delete file without equality_ids: ${files.head.filePath}")
           val cols = ids.map(id => nameById.getOrElse(id,
             throw new NoSuchElementException(s"equality id $id not in current schema")))
-          val delVals = readEqDeleteFiles(spark, t, ids,
-              files.map(e => t.resolvePath(e.filePath)), schemaSnap, snapshotId)
-            .select(cols.map(c => col(c).as(s"__del_$c")): _*).distinct()
+          val delVals = files.groupBy(e => entrySeq(e, Long.MaxValue)).toSeq.sortBy(_._1)
+            .map { case (delSeq, fs) =>
+              readEqDeleteFiles(spark, t, ids, fs, schemaSnap, snapshotId)
+                .select(cols.map(c => col(c).as(s"__del_$c")) :+
+                  lit(delSeq).as("__del_seq"): _*)
+            }.reduce(_.unionByName(_))
           // null-safe equality: Iceberg equality deletes match null keys
           // to null values (a delete row with key=null removes rows whose
           // key is null), which === would silently never do
           val cond = cols.map(c => acc(c) <=> delVals(s"__del_$c"))
-            .reduce(_ && _) && acc("__seq") < lit(delSeq)
+            .reduce(_ && _) && acc("__seq") < delVals("__del_seq")
           acc.join(hintIfDeleteFits(spark, files)(delVals), cond, "left_anti")
         }
       applied.drop("__seq")
@@ -643,8 +599,6 @@ object ScanPlanner {
     if (keepLineage || !needLineage) afterEq
     else afterEq.drop("__gr_path", "__gr_pos")
   }
-
-  import org.apache.spark.sql.types._
 
   private val PrimitiveSparkTypes: Map[String, DataType] = Map(
     "long" -> LongType, "int" -> IntegerType, "double" -> DoubleType,
@@ -748,10 +702,10 @@ object ScanPlanner {
     * inference — still raise, now with the reason named). */
   private def emptyOrPinned(
       spark: SparkSession, t: IcebergTable,
-      anyFile: Option[String],
+      anyFile: Option[DataFileEntry],
       snapshotId: Option[Long] = None): DataFrame = anyFile match {
-    case Some(path) =>
-      scanFiles(spark, t, Seq(path), snapshotId, snapshotId).filter(lit(false))
+    case Some(e) =>
+      scanFiles(spark, t, Seq(e), snapshotId, snapshotId).filter(lit(false))
     case None => readSchema(spark, t, snapshotId) match {
       case Some(st) => spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), st)
@@ -778,7 +732,7 @@ object ScanPlanner {
       values: Seq[String],
       snapshotId: Option[Long] = None): DataFrame = {
     val groups = inGroups(t, column, values)
-    prunedRead(spark, t, snapshotId, prunePaths(spark, t, snapshotId, groups),
+    prunedRead(spark, t, snapshotId, pruneEntries(t, snapshotId, groups),
       col(column).isin(values.map(lit(_)): _*))
   }
 
@@ -786,7 +740,7 @@ object ScanPlanner {
   def pathsWhereIn(spark: SparkSession, t: IcebergTable, column: String,
       values: Seq[String]): Seq[String] = {
     val groups = inGroups(t, column, values)
-    prunePaths(spark, t, None, groups)._1
+    pruneEntries(t, None, groups).map(e => t.resolvePath(e.filePath))
   }
 
   /** The frame-keyed twin of [[readTableWhereIn]], for key sets that
@@ -801,12 +755,13 @@ object ScanPlanner {
   def readTableWhereInFrame(spark: SparkSession, t: IcebergTable,
       column: String, keys: DataFrame): DataFrame =
     prunedRead(spark, t, None,
-      prunePaths(spark, t, None, censusGroups(t, column, keys)), lit(true))
+      pruneEntries(t, None, censusGroups(t, column, keys)), lit(true))
 
   /** The data files a [[readTableWhereInFrame]] probe opens. */
   def pathsWhereInFrame(spark: SparkSession, t: IcebergTable,
       column: String, keys: DataFrame): Seq[String] =
-    prunePaths(spark, t, None, censusGroups(t, column, keys))._1
+    pruneEntries(t, None, censusGroups(t, column, keys))
+      .map(e => t.resolvePath(e.filePath))
 
   /** [[inGroups]] for a key FRAME, restricted to `bucket[N]` fields: one
     * job-bounded census of the distinct transformed keys (≤ the product
@@ -835,77 +790,67 @@ object ScanPlanner {
     * ([[graft.meta.ManifestSummaries.mayMatch]] — a manifest whose
     * partition summary excludes every allowed value is never OPENED;
     * summary-less manifests keep), then the FILE tier over the kept
-    * manifests. Metadata-SMALL snapshots (summary-gated, at or under
-    * [[DriverPruneMaxFiles]]) prune on the driver with zero Spark
-    * actions — the difference between ~0.1 s and ~0 for index probes on
-    * micro-batch streams; larger ones prune through the files RELATION's
-    * executor-parallel manifest parse. Returns the kept data-file paths
-    * and the kept manifests (the scan's classification-listing hint).
+    * manifests' entries, on the driver with zero Spark actions — the
+    * read that follows is planned from those same entries anyway.
     * `groups` is only evaluated when the snapshot has data manifests. */
-  private def prunePaths(
-      spark: SparkSession,
+  private def pruneEntries(
       t: IcebergTable,
       snapshotId: Option[Long],
-      groups: => Seq[(String, Option[Set[String]])])
-      : (IndexedSeq[String], Seq[graft.meta.ManifestFile]) = {
+      groups: => Seq[(String, Option[Set[String]])]): IndexedSeq[DataFileEntry] = {
     val allManifests = t.manifests(snapshotId).filter(_.content == 0)
-    if (allManifests.isEmpty) return (IndexedSeq.empty, Seq.empty)
+    if (allManifests.isEmpty) return IndexedSeq.empty
     val gs = groups
     val kept = allManifests.filter(m =>
       graft.meta.ManifestSummaries.mayMatch(t.metadata, m, gs))
-    val totalFiles: Option[Long] = snapshotId
-      .flatMap(id => t.metadata.snapshot(id))
-      .orElse(t.metadata.currentSnapshot)
-      .flatMap(_.summary.get("total-data-files"))
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-    val paths =
-      if (totalFiles.exists(_ <= DriverPruneMaxFiles))
-        (if (kept.size == allManifests.size) t.files(snapshotId) // memoized
-         else kept.flatMap(m => t.manifestEntries(t.resolvePath(m.manifestPath)))
-           .filter(_.status != 2)).iterator
-          .filter(e => gs.forall { case (pname, allowed) =>
-            allowed.forall(av => e.partition.get(pname).forall(av.contains))
-          })
-          .map(e => t.resolvePath(e.filePath)).toIndexedSeq
-      else
-        graft.rel.MetaRelations.files(spark, t, snapshotId,
-            onlyManifests = Some(kept))
-          .filter(groupsFilter(gs)).select("file_path")
-          .collect().map(r => t.resolvePath(r.getString(0))).toIndexedSeq
-    (paths, kept)
+    entriesOf(t, snapshotId, kept).iterator
+      .filter(e => gs.forall { case (pname, allowed) =>
+        allowed.forall(av => e.partition.get(pname).forall(av.contains))
+      }).toIndexedSeq
   }
 
-  /** The one pruned-scan tail: the kept paths go through the file-scoped
+  /** Live entries of the `kept` data manifests of a snapshot — the
+    * snapshot's memoized listing when nothing was pruned. */
+  private def entriesOf(t: IcebergTable, snapshotId: Option[Long],
+      kept: Seq[graft.meta.ManifestFile]): Seq[DataFileEntry] =
+    if (kept.size == t.manifests(snapshotId).count(_.content == 0)) t.files(snapshotId)
+    else kept.flatMap(m => t.manifestEntries(t.resolvePath(m.manifestPath)))
+      .filter(_.status != 2)
+
+  /** The one pruned-scan tail: the kept files go through the file-scoped
     * merge-on-read split (deletes apply to a pruned subset too; surviving
-    * delete-untouched files scan bare), hinted with the kept manifests,
-    * then `resid` re-applies the exact predicate row-level. Nothing kept:
-    * the correct result is EMPTY with the table's schema, scanning
-    * nothing. */
+    * delete-untouched files scan bare), then `resid` re-applies the exact
+    * predicate row-level. Nothing kept: the correct result is EMPTY with
+    * the table's schema, scanning nothing. */
   private def prunedRead(
       spark: SparkSession,
       t: IcebergTable,
       snapshotId: Option[Long],
-      pruned: (Seq[String], Seq[graft.meta.ManifestFile]),
-      resid: Column): DataFrame = {
-    val (paths, kept) = pruned
-    if (paths.isEmpty)
+      kept: Seq[DataFileEntry],
+      resid: Column): DataFrame =
+    if (kept.isEmpty)
       emptyOrPinned(spark, t, anyLiveFile(t, snapshotId), snapshotId)
-    else
-      readSplit(spark, t, snapshotId, paths.toIndexedSeq,
-        manifestsHint = Some(kept)).filter(resid)
-  }
+    else readSplit(spark, t, snapshotId, kept).filter(resid)
 
   /** ONE live data file of the snapshot, parsing manifests lazily until
     * an entry turns up — what the pruned-to-empty read paths pin their
     * result schema on. [[IcebergTable.files]] would parse EVERY manifest
     * for the same answer, defeating the manifest-level prune that just
     * emptied the scan. */
-  private def anyLiveFile(t: IcebergTable, snapshotId: Option[Long]): Option[String] =
+  private def anyLiveFile(t: IcebergTable, snapshotId: Option[Long]): Option[DataFileEntry] =
     t.manifests(snapshotId).iterator.filter(_.content == 0)
       .flatMap(m => t.manifestEntries(t.resolvePath(m.manifestPath))
         .iterator.filter(_.status != 2))
-      .map(e => t.resolvePath(e.filePath))
       .nextOption()
+
+  /** The entries among the `kept` manifests' whose path the bounds prune
+    * over the files relation (`pruned`) kept. */
+  private def keptEntries(t: IcebergTable, snapshotId: Option[Long],
+      kept: Seq[graft.meta.ManifestFile], pruned: DataFrame): Seq[DataFileEntry] = {
+    // metadata-scale collect: the surviving PATH LIST parameterizes the
+    // scan, exactly like any Iceberg planner's task list
+    val paths = pruned.select("file_path").collect().map(_.getString(0)).toSet
+    entriesOf(t, snapshotId, kept).filter(e => paths.contains(e.filePath))
+  }
 
   /** Read the data with metadata pruning: only files whose bounds may
     * hold `column ∈ [lo, hi]` are opened; the exact range predicate is
@@ -933,12 +878,8 @@ object ScanPlanner {
             t.metadata, m, id, lo, hi)))
     val files = graft.rel.MetaRelations.files(spark, t, snapshotId,
       onlyManifests = Some(keptManifests))
-    val pruned = pruneFiles(spark, t, files, column, lo, hi, partitionEquals)
-      .select("file_path")
-      // metadata-scale collect: the surviving PATH LIST (not data) comes
-      // back to the driver to parameterize the scan, exactly like any
-      // Iceberg planner's task list
-      .collect().map(r => t.resolvePath(r.getString(0)))
+    val pruned = keptEntries(t, snapshotId, keptManifests,
+      pruneFiles(spark, t, files, column, lo, hi, partitionEquals))
     // lo/hi are in the BOUNDS' numeric domain (timestamps = micros,
     // dates = epoch days — [[graft.expr.IcebergDecode.decodeNumeric]]);
     // the row-level re-filter must compare in the same domain, and a
@@ -964,7 +905,7 @@ object ScanPlanner {
       // to the column type, so the comparison stays pushdown-eligible
       acc && col(k) === lit(v)
     }
-    prunedRead(spark, t, snapshotId, (pruned.toIndexedSeq, keptManifests), resid)
+    prunedRead(spark, t, snapshotId, pruned, resid)
   }
 
   /** Read the data pruned to `column ∈ points` through the files' COLUMN
@@ -1009,13 +950,9 @@ object ScanPlanner {
       .filter(m => srcIdent.forall(id => sorted.exists(p =>
         graft.meta.ManifestSummaries.mayIntersect(
           t.metadata, m, id, Some(p.toDouble), Some(p.toDouble)))))
-    val pruned = graft.rel.MetaRelations.files(spark, t, snapshotId,
-        onlyManifests = Some(keptManifests))
-      .filter(keep).select("file_path")
-      // metadata-scale collect: the surviving PATH LIST parameterizes
-      // the scan, exactly like readTableWhere
-      .collect().map(r => t.resolvePath(r.getString(0)))
-    prunedRead(spark, t, snapshotId, (pruned.toIndexedSeq, keptManifests),
-      col(column).isin(sorted: _*))
+    val pruned = keptEntries(t, snapshotId, keptManifests,
+      graft.rel.MetaRelations.files(spark, t, snapshotId,
+        onlyManifests = Some(keptManifests)).filter(keep))
+    prunedRead(spark, t, snapshotId, pruned, col(column).isin(sorted: _*))
   }
 }

@@ -567,9 +567,7 @@ final class GraftMorV1Scan(
         ScanPlanner.readTable(spark, t, snapshotId)
           .filter(org.apache.spark.sql.functions.lit(false))
       else
-        ScanPlanner.readFiles(spark, t,
-          pruned.entries.map(e => t.resolvePath(e.filePath)), snapshotId,
-          manifestsHint = Some(pruned.keptManifests))
+        ScanPlanner.readFiles(spark, t, pruned.entries, snapshotId)
     FilterColumns.conjunction(pushed).map(df0.filter).getOrElse(df0)
   }) with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 

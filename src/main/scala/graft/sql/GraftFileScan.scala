@@ -130,13 +130,13 @@ final class GraftFileScan(
     }
 
   private def keyGroups(dims: Seq[(String, SchemaField, String)])
-    : Seq[(InternalRow, Seq[String])] =
+    : Seq[(InternalRow, Seq[(String, Long)])] =
     entries.groupBy(e => dims.map { case (p, src, tr) =>
       keyValue(e.partition(p), src.fieldType, tr) })
       .toSeq.sortBy(_._1.mkString("|"))
       .map { case (key, es) =>
         (new GenericInternalRow(key.toArray): InternalRow,
-          es.map(e => t.resolvePath(e.filePath)))
+          es.map(fileOf))
       }
 
   override def outputPartitioning(): Partitioning = {
@@ -157,9 +157,12 @@ final class GraftFileScan(
         SparkSession.active, keyGroups(dims), dataSchema, required, pushed)
     else GraftParquetBridge.scan(
       SparkSession.active,
-      entries.map(e => t.resolvePath(e.filePath)),
-      dataSchema, required, pushed).toBatch
+      entries.map(fileOf), dataSchema, required, pushed).toBatch
   }
+
+  /** An entry as the (absolute path, byte length) the scan indexes. */
+  private def fileOf(e: DataFileEntry): (String, Long) =
+    t.resolvePath(e.filePath) -> e.fileSizeInBytes
 
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): OptionalLong =

@@ -159,7 +159,8 @@ final class TableStreamStream(
                 "partition columns live in table metadata, not the files — " +
                 "run migrate-field-ids (rewrites and materializes them) " +
                 "before streaming this range")
-            val added = addedEntries.map(e => t.resolvePath(e.filePath))
+            val added = addedEntries.map(e =>
+              t.resolvePath(e.filePath) -> e.fileSizeInBytes)
             if (added.isEmpty) Seq.empty
             else org.apache.spark.sql.GraftParquetBridge
               .scan(spark, added, schema, schema, Seq.empty)

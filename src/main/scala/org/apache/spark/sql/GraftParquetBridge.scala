@@ -1,9 +1,10 @@
 package org.apache.spark.sql
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.connector.read.Scan
-import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -29,6 +30,24 @@ private[sql] class GraftKeyedFilePartition(
   override def partitionKey(): org.apache.spark.sql.catalyst.InternalRow = key
 }
 
+/** A [[FileIndex]] over files the manifests already describe: each
+  * `FileStatus` is built from the entry's absolute path and
+  * `file_size_in_bytes`, so nothing is listed or stat'ed — Iceberg
+  * planning never lists directories, the manifests are the file index.
+  * A file that is gone fails the scan that opens it (the parquet reader's
+  * `FileNotFoundException`), not the planning. No block locations and no
+  * modification time (`_metadata.file_modification_time` reads 0). */
+private[sql] final class GraftManifestFileIndex(
+    spark: classic.SparkSession, files: Seq[FileStatus])
+  extends PartitioningAwareFileIndex(spark, Map.empty, None) {
+  override val rootPaths: Seq[Path] = files.map(_.getPath)
+  override val leafFiles: scala.collection.mutable.LinkedHashMap[Path, FileStatus] =
+    scala.collection.mutable.LinkedHashMap.from(files.map(f => f.getPath -> f))
+  override def leafDirToChildrenFiles: Map[Path, Array[FileStatus]] = Map.empty
+  override def partitionSpec(): PartitionSpec = PartitionSpec.emptySpec
+  override def refresh(): Unit = ()
+}
+
 object GraftParquetBridge {
 
   /** Is storage-partitioned-join planning enabled
@@ -47,7 +66,7 @@ object GraftParquetBridge {
     * balancing — the Iceberg SPJ trade). */
   def keyGroupedBatch(
       spark: SparkSession,
-      groups: Seq[(org.apache.spark.sql.catalyst.InternalRow, Seq[String])],
+      groups: Seq[(org.apache.spark.sql.catalyst.InternalRow, Seq[(String, Long)])],
       dataSchema: StructType,
       readSchema: StructType,
       pushed: Seq[Filter]): org.apache.spark.sql.connector.read.Batch = {
@@ -59,7 +78,7 @@ object GraftParquetBridge {
     def canon(p: String): String =
       "/" + new Path(p).toUri.getPath.dropWhile(_ == '/')
     val groupOf: Map[String, Int] = groups.zipWithIndex.flatMap {
-      case ((_, paths), i) => paths.map(p => canon(p) -> i)
+      case ((_, files), i) => files.map { case (p, _) => canon(p) -> i }
     }.toMap
     val delegate = scan(spark, groups.flatMap(_._2), dataSchema, readSchema, pushed)
       .toBatch
@@ -95,20 +114,58 @@ object GraftParquetBridge {
     : Array[Filter] =
     org.apache.spark.sql.internal.connector.PredicateUtils.toV1(predicates)
 
+  /** The manifest-backed index over `files` — (absolute path, byte length)
+    * pairs, the entries' `file_path` / `file_size_in_bytes`. Paths are
+    * qualified against their filesystem (the form `_metadata.file_path`
+    * carries) and de-duplicated, as a listing index would. */
+  private def manifestIndex(
+      cs: classic.SparkSession, files: Seq[(String, Long)]): GraftManifestFileIndex = {
+    // qualification needs only each filesystem's URI: the shared
+    // context conf, not a per-read copy of the session's
+    val conf = cs.sparkContext.hadoopConfiguration
+    val fsOf = scala.collection.mutable.Map.empty[(String, String), org.apache.hadoop.fs.FileSystem]
+    val statuses = files.map { case (p, len) =>
+      val path = new Path(p)
+      val uri = path.toUri
+      val fs = fsOf.getOrElseUpdate((uri.getScheme, uri.getAuthority),
+        path.getFileSystem(conf))
+      new FileStatus(len, false, 1, 0L, 0L, fs.makeQualified(path))
+    }.distinctBy(_.getPath)
+    new GraftManifestFileIndex(cs, statuses)
+  }
+
+  /** A DataFrame over exactly `files` ((absolute path, byte length) pairs
+    * from the manifests) read as parquet at `dataSchema`: a
+    * `HadoopFsRelation` over [[GraftManifestFileIndex]], lifted with
+    * `Dataset.ofRows` — the plan `spark.read.schema(dataSchema).parquet`
+    * builds, minus the listing (above 32 roots, a parallel listing JOB).
+    * Hidden `_metadata` columns (`file_path`, `row_index`) resolve as on
+    * any file-source relation. */
+  def readParquet(
+      spark: SparkSession,
+      files: Seq[(String, Long)],
+      dataSchema: StructType): DataFrame = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val relation = HadoopFsRelation(manifestIndex(cs, files), new StructType(),
+      dataSchema.asNullable, None, new ParquetFileFormat, Map.empty)(cs)
+    classic.Dataset.ofRows(cs, LogicalRelation(relation))
+  }
+
   /** A vectorized parquet [[Scan]] over an explicit (already pruned) file
-    * list. `dataSchema` is the table's current schema — files written
-    * under older schema versions surface later-added columns as nulls;
-    * `readSchema` is the column-pruned projection; `pushed` reaches the
-    * parquet row-group/page index filters. */
+    * list of (absolute path, byte length) pairs, indexed from the
+    * manifests ([[manifestIndex]] — no listing). `dataSchema` is the
+    * table's current schema — files written under older schema versions
+    * surface later-added columns as nulls; `readSchema` is the
+    * column-pruned projection; `pushed` reaches the parquet
+    * row-group/page index filters. */
   def scan(
       spark: SparkSession,
-      paths: Seq[String],
+      files: Seq[(String, Long)],
       dataSchema: StructType,
       readSchema: StructType,
       pushed: Seq[Filter]): Scan = {
     val cs = spark.asInstanceOf[classic.SparkSession]
-    val index = new InMemoryFileIndex(
-      cs, paths.map(new Path(_)), Map.empty[String, String], Some(dataSchema))
+    val index = manifestIndex(cs, files)
     ParquetScan(
       cs,
       cs.sessionState.newHadoopConf(),

@@ -139,6 +139,10 @@ class ComponentIndexSpec extends SparkSpec {
     idx.fold(batch2.toDF("a_id", "b_id"))
     val edges = boot ++ batch1 ++ batch2
     assert(asMap(idx.assignments) == closure(edges))
+    // the re-declared transform has its own field name, so a relabel
+    // read prunes under both layouts
+    assert(idx.relabelPaths(Seq(1L)).size <
+      e.load("ns.rebucket_comps").files().size)
 
     // retire: the literal path, then the frame-keyed (threshold 0) path
     var retired = Set.empty[Long]

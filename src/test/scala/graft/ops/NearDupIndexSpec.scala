@@ -192,6 +192,11 @@ class NearDupIndexSpec extends SparkSpec {
     val specs = e.load("ns.rebucket_index").manifests()
       .filter(_.content == 0).map(_.partitionSpecId).distinct
     assert(specs.size == 2, s"expected files under both specs, got $specs")
+    // the re-declared transform has its own field name, so a probe
+    // prunes under both layouts
+    val oneDoc = Dedup.bandSignatures(fresh.filter(col("doc_id") === 500L))
+    assert(idx.probePaths(oneDoc).size <
+      e.load("ns.rebucket_index").files().size)
 
     // a batch colliding with both layouts, plus a clean doc
     val batch = Seq(
