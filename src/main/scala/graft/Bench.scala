@@ -1,20 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.cpus("4")
     // numeric view for JSON fields / file suffixes (local[N*] forms and
     // garbage map to 0 rather than emitting unparseable JSON)
     val cpusNum = scala.util.Try(cpus.trim.toInt).getOrElse(0)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    Sessions.required.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
 
     // Untimed warmup: exercise the scan/agg/join/window code paths once so
     // per-query timings measure steady state, not first-use JIT + codegen

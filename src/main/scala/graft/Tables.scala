@@ -69,8 +69,30 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }
 
-/** Session defaults shared by Verify / Bench / tests. */
+/** Session defaults shared by Verify / Bench / tests, and the one
+  * session factory of the mains. */
 object Sessions {
+  /** `SPARK_GRAFT_CPUS`, else `default` (every core). */
+  def cpus(default: => String = Runtime.getRuntime.availableProcessors.toString): String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
+
+  /** A session on `master` with `partitions` shuffle partitions, AQE on
+    * unless `aqe` is false, the UI off, [[required]] set and WARN logs. */
+  def create(master: String, partitions: String, aqe: Boolean = true): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", partitions)
+      .config("spark.sql.adaptive.enabled", aqe.toString)
+      .config("spark.ui.enabled", "false")
+    required.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** [[create]] on `local[cpus]` with `cpus` shuffle partitions. */
+  def local(cpus: String): SparkSession = create(s"local[$cpus]", cpus)
+
   /** Configs that query semantics depend on (must be set before first read). */
   val required: Seq[(String, String)] = Seq(
     // events.ts is parquet TIMESTAMP(NANOS) which Spark cannot represent;

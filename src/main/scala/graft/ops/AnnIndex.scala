@@ -623,7 +623,7 @@ final class AnnIndex(
     * ([[admitIfNovel]]'s `components`) also records REJECTED vectors
     * that were never admitted; for those use [[pairsFromVecs]] over the
     * raw embedding store. */
-  def pairsAmong(threshold: Double, inMaxIds: Int = 1000)(
+  def pairsAmong(threshold: Double, inMaxIds: Int = Dedup.LiteralMaxIds)(
       ids: DataFrame): DataFrame = {
     // literal-vs-join threshold, the [[NearDupIndex.pairsAmong]] twin:
     // a bounded member set point-set-prunes through driver-known

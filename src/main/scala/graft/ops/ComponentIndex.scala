@@ -177,7 +177,7 @@ final class ComponentIndex(
     * affected-component surgery re-derives from the fresh snapshot on
     * each attempt. */
   def retireWithRetry(retired: DataFrame,
-      pairsAmong: DataFrame => DataFrame, inMaxIds: Int = 1000,
+      pairsAmong: DataFrame => DataFrame, inMaxIds: Int = Dedup.LiteralMaxIds,
       maxAttempts: Int = 7): DataFrame =
     ComponentIndex.retryOnConflict(maxAttempts)(
       retire(retired, pairsAmong, inMaxIds))

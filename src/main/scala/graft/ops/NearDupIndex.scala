@@ -188,7 +188,7 @@ final class NearDupIndex(
     * would degrade them to singletons (their provenance edges are
     * invisible here). For such ledgers derive the residual pairs from
     * the raw document store instead ([[Dedup.pairsFromDocs]]). */
-  def pairsAmong(ids: DataFrame): DataFrame = pairsAmong(ids, 1000)
+  def pairsAmong(ids: DataFrame): DataFrame = pairsAmong(ids, Dedup.LiteralMaxIds)
 
   /** [[pairsAmong]] with an explicit literal-vs-join threshold: at or
     * under `inMaxIds` distinct ids the read point-set-prunes through

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.Sessions
 import graft.api.{Engine, Errors}
@@ -95,13 +95,7 @@ object Cli {
         cfgPath.map(java.nio.file.Paths.get(_))
           .getOrElse(graft.meta.CatalogConfig.defaultPath))
 
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-    Sessions.required.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create(sys.env.getOrElse("SPARK_MASTER", "local[8]"), "8")
     // a catalog URI, `-`, or an explicit --catalog routes through the
     // FULL config resolution chain (file entry + env + dotenv + uri arg)
     // into Engine.forConfig — the same path library users take; a plain

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Sessions
 import graft.api.Engine
 import graft.fixtures.FixtureWriter
@@ -15,13 +13,7 @@ import graft.fixtures.FixtureWriter
   */
 object EngineDemo {
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-    Sessions.required.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("8")
 
     val wh = if (args.nonEmpty) args(0)
       else Files.createTempDirectory("graft-demo-wh").toString

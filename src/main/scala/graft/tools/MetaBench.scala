@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Sessions
 import graft.fixtures.FixtureWriter
 import graft.meta.IcebergTable
@@ -21,19 +19,11 @@ import graft.rel.MetaRelations
   */
 object MetaBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Metadata-scale frames are small; fewer shuffle partitions cut
-      // task overhead. AQE is OFF: its per-stage re-planning is pure
-      // overhead on KB-scale frames.
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    Sessions.required.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cpus()
+    // Metadata-scale frames are small; fewer shuffle partitions cut task
+    // overhead. AQE is OFF: its per-stage re-planning is pure overhead on
+    // KB-scale frames.
+    val spark = Sessions.create(s"local[$cpus]", "4", aqe = false)
 
     val dir = if (args.nonEmpty) args(0) else "/tmp/graft-monster"
     if (!Files.exists(Paths.get(s"$dir/metadata/v1.metadata.json")))

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Sessions
 import graft.queries.Registry
 
@@ -24,15 +22,7 @@ object PlanDump {
       else None
     val execute = args.contains("execute")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    Sessions.required.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus())
     // GRAFT_PLAN_CONF="k=v;k=v" — session confs for dumping a conf-gated
     // tier's plan (e.g. forcing the funnel's materialized-levels gate)
     sys.env.get("GRAFT_PLAN_CONF").foreach(_.split(";").foreach { kv =>

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.io.{InputStream, PrintStream}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.Sessions
 import graft.api.Engine
@@ -342,14 +342,7 @@ object Tui {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Tui <warehouseDir>")
-    val spark = {
-      val b = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-      Sessions.required.foreach { case (k, v) => b.config(k, v) }
-      b.getOrCreate()
-    }
+    val spark = Sessions.local("4")
     spark.sparkContext.setLogLevel("ERROR")
     try runInteractive(new Engine(spark, args(0)))
     finally spark.stop()

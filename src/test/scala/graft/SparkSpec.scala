@@ -9,26 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
-  /** Spark jobs started while `body` runs. The listener bus is async:
-    * the count settles before and after, so events still queued from
-    * earlier work are not counted. */
-  def jobsDuring(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def settled(): Int = {
-      var last = -1
-      while (last != jobs.get()) { last = jobs.get(); Thread.sleep(300) }
-      last
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { val before = settled(); body; settled() - before }
-    finally spark.sparkContext.removeSparkListener(listener)
-  }
+  /** Spark jobs started while `body` runs (settled, see
+    * [[graft.obs.JobCensus.during]]). */
+  def jobsDuring(body: => Unit): Int = graft.obs.JobCensus.during(spark)(body)._2.size
 }
 
 object SparkSpec {

@@ -90,22 +90,9 @@ class FooterStatsSpec extends SparkSpec {
     val src = Files.createTempDirectory("graft-fstats-src").toString
     zoo.coalesce(2).write.mode("overwrite").parquet(src)
     val jobCounts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     def counted[A](label: String)(body: => A): A = {
-      spark.sparkContext.addSparkListener(listener)
-      val before = { Thread.sleep(200); jobs.get() }
-      val r = body
-      // the listener bus is async — settle before reading
-      var last = -1; var cur = jobs.get()
-      while (last != cur) { Thread.sleep(200); last = cur; cur = jobs.get() }
-      spark.sparkContext.removeSparkListener(listener)
-      jobCounts.put(label, cur - before); r
+      val (r, jobs) = graft.obs.JobCensus.during(spark)(body)
+      jobCounts.put(label, jobs.size); r
     }
     val eF = new Engine(spark, wh()); val eA = new Engine(spark, wh())
     withSource("footer") { counted("footer") { eF.registerParquet("z.a", src) } }
@@ -136,26 +123,10 @@ class FooterStatsSpec extends SparkSpec {
       "and still stamp agg-identical entries") {
     val df = (1L to 200L).map(i => (i, s"name-$i", i * 0.5, Seq(i, i + 1)))
       .toDF("id", "name", "score", "tags")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def counted[A](body: => A): Int = {
-      spark.sparkContext.addSparkListener(listener)
-      val before = { Thread.sleep(200); jobs.get() }
-      body
-      var last = -1; var cur = jobs.get()
-      while (last != cur) { Thread.sleep(200); last = cur; cur = jobs.get() }
-      spark.sparkContext.removeSparkListener(listener)
-      cur - before
-    }
     val eF = new Engine(spark, wh()); val eA = new Engine(spark, wh())
-    val jF = counted {
+    val jF = jobsDuring {
       withSource("footer") { eF.createTable("z.u", df.schema); eF.append("z.u", df) } }
-    val jA = counted {
+    val jA = jobsDuring {
       withSource("agg") { eA.createTable("z.u", df.schema); eA.append("z.u", df) } }
     assert(comparable(eF.load("z.u")) == comparable(eA.load("z.u")))
     // footer mode: the staging write is the ONLY job; agg mode adds the
@@ -177,29 +148,13 @@ class FooterStatsSpec extends SparkSpec {
       .toDF("id", "k", "score")
     val dfDate = Seq((1L, "2024-01-05", 1.0), (2L, "2024-01-07", 2.0))
       .toDF("id", "k", "score")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def counted[A](body: => A): Int = {
-      spark.sparkContext.addSparkListener(listener)
-      val before = { Thread.sleep(200); jobs.get() }
-      body
-      var last = -1; var cur = jobs.get()
-      while (last != cur) { Thread.sleep(200); last = cur; cur = jobs.get() }
-      spark.sparkContext.removeSparkListener(listener)
-      cur - before
-    }
     def commit(e: Engine, d: org.apache.spark.sql.DataFrame): Unit = {
       e.createTable("z.p", d.schema, partitionDecls = Seq("k"))
       e.append("z.p", d); ()
     }
     val eF = new Engine(spark, wh()); val eA = new Engine(spark, wh())
-    val jF = counted { withSource("footer") { commit(eF, df) } }
-    val jA = counted { withSource("agg") { commit(eA, df) } }
+    val jF = jobsDuring { withSource("footer") { commit(eF, df) } }
+    val jA = jobsDuring { withSource("agg") { commit(eA, df) } }
     val (got, want) = (comparable(eF.load("z.p")), comparable(eA.load("z.p")))
     assert(got.nonEmpty && got == want)
     // inference is GLOBAL per column: "abc x" forces k to string, so the

@@ -250,42 +250,16 @@ class AnnIndexSpec extends SparkSpec {
     // appends, so every action it runs is gate overhead; the fused
     // formulation pins that at 3 (census, survivor checkpoint,
     // emptiness probe).
-    val execIds = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val id = js.properties.getProperty("spark.sql.execution.id")
-        execIds.putIfAbsent(if (id == null) s"rdd-${js.jobId}" else id, "?"); ()
-      }
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            execIds.put(s.executionId.toString, s.description); ()
-          case _ => ()
-        }
-    }
-    // the listener bus is async — poll until the count is stable
-    def stableCount(): Int = {
-      var prev = -1
-      var cur = execIds.size()
-      var spins = 0
-      while (cur != prev && spins < 100) {
-        prev = cur; Thread.sleep(100); cur = execIds.size(); spins += 1
-      }
-      cur
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // let any straggler events from the setup phase drain, then zero
-      Thread.sleep(500); execIds.clear()
+    val (_, jobs) = graft.obs.JobCensus.during(spark) {
       val rejected = idx.admitIfNovel(
         Seq((10L, 0, v(1, 0, 0, 0))).toDF("vec_id", "label", "embedding"), 0.95)
       assert(rejected.isEmpty)
-      val gateActions = stableCount() - 1 // minus the isEmpty assert's own action
-      assert(gateActions <= 3,
-        s"gate ran $gateActions driver actions — fused plumbing regressed: " +
-          execIds.toString)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // minus the isEmpty assert's own action
+    val gateActions = graft.obs.JobCensus.actions(jobs) - 1
+    assert(gateActions <= 3,
+      s"gate ran $gateActions driver actions — fused plumbing regressed: " +
+        jobs.mkString("; "))
     assert(idx.signatures.count() == 4) // nothing appended
   }
 

@@ -188,55 +188,28 @@ class BpeSpec extends SparkSpec {
     // count executions that RUN at least one job — a lazy checkpoint
     // registers a (job-less) SQL execution, which is plan-only overhead,
     // not a driver action
-    val execIds = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    val descs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val id = js.properties.getProperty("spark.sql.execution.id")
-        val key = if (id == null) s"rdd-${js.jobId}" else id
-        execIds.putIfAbsent(key, descs.getOrDefault(key, "?")); ()
-      }
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            descs.put(s.executionId.toString, s.description)
-            execIds.computeIfPresent(s.executionId.toString,
-              (_, _) => s.description); ()
-          case _ => ()
-        }
-    }
-    def stableCount(): Int = {
-      var prev = -1; var cur = execIds.size(); var spins = 0
-      while (cur != prev && spins < 100) {
-        prev = cur; Thread.sleep(100); cur = execIds.size(); spins += 1
-      }
-      cur
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def measure(): (Int, String) = {
-        // let straggler events from earlier work drain, then zero
-        Thread.sleep(500); execIds.clear(); descs.clear()
-        val m = Bpe.trainMerges(docs, nMerges = 5, driverVocabThreshold = 0L,
+    def measure(): (Int, String) = {
+      val (m, jobs) = graft.obs.JobCensus.during(spark) {
+        Bpe.trainMerges(docs, nMerges = 5, driverVocabThreshold = 0L,
           batchK = 8).collect()
-        assert(m.length == 5)
-        assert(m.map(r => (r.getString(1), r.getString(2))).toSet ==
-          Set(("x", "y"), ("z", "a"), ("q", "r"), ("m", "n"), ("u", "v")))
-        (stableCount() - 1, execIds.toString) // minus the final collect
       }
-      // the listener bus is async and shared: a straggler event from an
-      // earlier suite (or a GC pause mid-poll) can inflate one reading,
-      // so a failed first measurement gets ONE clean re-measure before
-      // the contract is declared broken
-      val (a1, d1) = measure()
-      if (a1 > 4) {
-        val (a2, d2) = measure()
-        assert(a2 <= 4,
-          s"tracked run took $a1 then $a2 driver actions — the zero-job " +
-            s"argmax regressed: first $d1, then $d2")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+      assert(m.length == 5)
+      assert(m.map(r => (r.getString(1), r.getString(2))).toSet ==
+        Set(("x", "y"), ("z", "a"), ("q", "r"), ("m", "n"), ("u", "v")))
+      // minus the final collect
+      (graft.obs.JobCensus.actions(jobs) - 1, jobs.mkString("; "))
+    }
+    // the listener bus is async and shared: a straggler event from an
+    // earlier suite (or a GC pause mid-poll) can inflate one reading,
+    // so a failed first measurement gets ONE clean re-measure before
+    // the contract is declared broken
+    val (a1, d1) = measure()
+    if (a1 > 4) {
+      val (a2, d2) = measure()
+      assert(a2 <= 4,
+        s"tracked run took $a1 then $a2 driver actions — the zero-job " +
+          s"argmax regressed: first $d1, then $d2")
+    }
   }
 
   test("driver vocab probe re-splits words by code point (non-BMP safe)") {

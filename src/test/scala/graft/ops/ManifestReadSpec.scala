@@ -13,24 +13,9 @@ import graft.api.Engine
 class ManifestReadSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Descriptions of the Spark jobs started while `body` runs (settled
-    * like [[jobsDuring]]). */
-  private def jobDescriptions(body: => Unit): Seq[String] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        seen.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      jobsDuring(body)
-      seen.toArray(Array.empty[String]).toSeq
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  /** Descriptions of the Spark jobs started while `body` runs. */
+  private def jobDescriptions(body: => Unit): Seq[String] =
+    graft.obs.JobCensus.during(spark)(body)._2.map(_.description)
 
   private def listing(ds: Seq[String]) = ds.filter(_.startsWith("Listing leaf files"))
 
