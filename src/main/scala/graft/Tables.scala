@@ -93,7 +93,10 @@ object Sessions {
   /** [[create]] on `local[cpus]` with `cpus` shuffle partitions. */
   def local(cpus: String): SparkSession = create(s"local[$cpus]", cpus)
 
-  /** Configs that query semantics depend on (must be set before first read). */
+  /** Configs every engine session sets before its first read: the ones
+    * query semantics depend on, and the local filesystem the engine writes
+    * through. [[create]], the spec session and the benchmark session all
+    * apply this list; a user-built session should too. */
   val required: Seq[(String, String)] = Seq(
     // events.ts is parquet TIMESTAMP(NANOS) which Spark cannot represent;
     // read it as epoch-nanos LongType instead of failing the scan.
@@ -110,5 +113,8 @@ object Sessions {
     // future default flip can't silently produce id-less files from
     // attributed write schemas (the engine's id guarantee depends on it).
     "spark.sql.parquet.fieldId.write.enabled" -> "true",
+    // Local writes set file and directory modes without forking `chmod`
+    // (graft.meta.LocalFs); without it writes stay correct but slower.
+    "spark.hadoop.fs.file.impl" -> classOf[graft.meta.LocalFs].getName,
   )
 }

@@ -172,18 +172,21 @@ object TableWriter {
     val snapId = md.snapshots.map(_.snapshotId).maxOption.getOrElse(999L) + 1L
     val tok = java.util.UUID.randomUUID().toString.take(8)
     // stage the position-delete parquet and move it under data/
-    val stage = Files.createTempDirectory("graft-delete")
-    FieldIds.attributeExplicit(delRows, Seq(
-        "file_path" -> FieldIds.PosDeletePathId, "pos" -> FieldIds.PosDeletePosId))
-      .write.mode("overwrite").parquet(stage.toString)
-    val stagedOpt = scala.util.Using.resource(Files.list(stage))(
-      _.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")))
-    val nDeleted = stagedOpt.fold(0L)(footerRowCount)
-    if (nDeleted == 0) { stagedOpt.foreach(Files.deleteIfExists(_)); return None }
-    val staged = stagedOpt.get
     val relPath = s"data/delete-$snapId-$tok.parquet"
-    Files.createDirectories(dir.resolve("data"))
-    Files.move(staged, dir.resolve(relPath), StandardCopyOption.REPLACE_EXISTING)
+    val nDeleted = withStage("graft-delete") { stage =>
+      FieldIds.attributeExplicit(delRows, Seq(
+          "file_path" -> FieldIds.PosDeletePathId, "pos" -> FieldIds.PosDeletePosId))
+        .write.mode("overwrite").parquet(stage.toString)
+      val stagedOpt = scala.util.Using.resource(Files.list(stage))(
+        _.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")))
+      val n = stagedOpt.fold(0L)(footerRowCount(spark, _))
+      if (n > 0) {
+        Files.createDirectories(dir.resolve("data"))
+        Files.move(stagedOpt.get, dir.resolve(relPath), StandardCopyOption.REPLACE_EXISTING)
+      }
+      n
+    }
+    if (nDeleted == 0) return None
 
     val delSeq = md.snapshots.map(_.sequenceNumber).maxOption.getOrElse(0L) + 1L
     val entry = DataFileEntry(
@@ -551,13 +554,25 @@ object TableWriter {
   /** Exact row count off one file's footer — commits that just wrote a
     * single staged file (position/equality deletes) read their record
     * count here instead of paying a Spark job. */
-  private def footerRowCount(p: java.nio.file.Path): Long = {
-    val conf = new org.apache.hadoop.conf.Configuration()
+  private def footerRowCount(spark: SparkSession, p: java.nio.file.Path): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
       .fromPath(new org.apache.hadoop.fs.Path(p.toString), conf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in,
       org.apache.parquet.HadoopReadOptions.builder(conf, in.getPath).build())
     try r.getRecordCount finally r.close()
+  }
+
+  /** Runs `body` on a fresh temp directory named `prefix…`, then deletes
+    * the whole tree whether `body` returns or throws: what a staging write
+    * leaves once its parquet moved into the table (`_SUCCESS`, `.crc`
+    * sidecars, emptied partition directories) or a failed write's
+    * `_temporary`. The delete is best effort: it never hides `body`'s own
+    * failure. */
+  private def withStage[A](prefix: String)(body: Path => A): A = {
+    val stage = Files.createTempDirectory(prefix)
+    try body(stage)
+    finally scala.util.Try(graft.api.Engine.deleteRecursively(stage))
   }
 
   /** Footer facts for a batch of files. Small batches (the per-commit
@@ -572,13 +587,13 @@ object TableWriter {
     if (paths.size <= DriverFooterBatchMax) {
       val out = new Array[(String, graft.api.FooterFacts.FooterInfo)](paths.size)
       val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-      // one Configuration per worker thread, not per footer — its lazy
-      // XML-resource parse is the very cost this path exists to dodge
-      val confs = ThreadLocal.withInitial[org.apache.hadoop.conf.Configuration](
-        () => new org.apache.hadoop.conf.Configuration())
+      // the session's conf, read-only from every worker: a fresh
+      // Configuration's lazy XML-resource parse is the very cost this
+      // path exists to dodge
+      val conf = spark.sparkContext.hadoopConfiguration
       java.util.stream.IntStream.range(0, paths.size).parallel().forEach { i =>
         if (failure.get() == null) try {
-          out(i) = paths(i) -> footerInfoOf(paths(i), confs.get())
+          out(i) = paths(i) -> footerInfoOf(paths(i), conf)
         } catch { case t: Throwable => failure.compareAndSet(null, t) }
       }
       if (failure.get() != null) throw failure.get()
@@ -760,185 +775,186 @@ object TableWriter {
         // column's Iceberg field id, so id-stamped tables read
         // rename-safely by id ([[FieldIds]]; write conf is default-on)
         val ordered = FieldIds.attributeColumns(df0.select(names.map(col): _*), fields)
-        val stage = Files.createTempDirectory("graft-commit")
-        // the optional bin is a STAGING partition column: partitionBy
-        // splits by directory value inside each task, so bins become
-        // separate files deterministically (task-boundary splitting would
-        // be undone by partitionBy's per-value file merge + AQE coalescing)
-        val staged0 = binExpr.foldLeft(
-          partDims.foldLeft(ordered) { case (d, (pname, src, transform)) =>
-            d.withColumn(s"__p_$pname",
-              Transforms.column(transform, col(src.name), src.fieldType))
-          })(
-          (d, e) => d.withColumn("__bin", e))
-        val stagingParts = partDims.map { case (pname, _, _) => s"__p_$pname" } ++
-          (if (binExpr.isDefined) Seq("__bin") else Nil)
-        // hash-distribute by the staging partition dims before the write —
-        // the Iceberg default (write.distribution-mode=hash): each
-        // (value, bin) lands in one task; one shuffle either way.
-        // declared write sort order (Iceberg sort-orders): sort INSIDE
-        // each task — no extra shuffle — so every file holds a sorted run
-        // and its min/max bounds on the sort keys are tight (range
-        // predicates then prune files instead of scanning them)
-        val sortCols: Seq[org.apache.spark.sql.Column] =
-          md.defaultSortOrder.toSeq.flatMap(_.fields).flatMap { sf =>
-            fields.find(_.id == sf.sourceId).map { f =>
-              val c = col(f.name)
-              (sf.direction, sf.nullOrder) match {
-                case ("desc", "nulls-first") => c.desc_nulls_first
-                case ("desc", _) => c.desc_nulls_last
-                case (_, "nulls-last") => c.asc_nulls_last
-                case _ => c.asc_nulls_first
+        withStage("graft-commit") { stage =>
+          // the optional bin is a STAGING partition column: partitionBy
+          // splits by directory value inside each task, so bins become
+          // separate files deterministically (task-boundary splitting would
+          // be undone by partitionBy's per-value file merge + AQE coalescing)
+          val staged0 = binExpr.foldLeft(
+            partDims.foldLeft(ordered) { case (d, (pname, src, transform)) =>
+              d.withColumn(s"__p_$pname",
+                Transforms.column(transform, col(src.name), src.fieldType))
+            })(
+            (d, e) => d.withColumn("__bin", e))
+          val stagingParts = partDims.map { case (pname, _, _) => s"__p_$pname" } ++
+            (if (binExpr.isDefined) Seq("__bin") else Nil)
+          // hash-distribute by the staging partition dims before the write —
+          // the Iceberg default (write.distribution-mode=hash): each
+          // (value, bin) lands in one task; one shuffle either way.
+          // declared write sort order (Iceberg sort-orders): sort INSIDE
+          // each task — no extra shuffle — so every file holds a sorted run
+          // and its min/max bounds on the sort keys are tight (range
+          // predicates then prune files instead of scanning them)
+          val sortCols: Seq[org.apache.spark.sql.Column] =
+            md.defaultSortOrder.toSeq.flatMap(_.fields).flatMap { sf =>
+              fields.find(_.id == sf.sourceId).map { f =>
+                val c = col(f.name)
+                (sf.direction, sf.nullOrder) match {
+                  case ("desc", "nulls-first") => c.desc_nulls_first
+                  case ("desc", _) => c.desc_nulls_last
+                  case (_, "nulls-last") => c.asc_nulls_last
+                  case _ => c.asc_nulls_first
+                }
               }
             }
+          // `write.distribution-mode` table property (Iceberg): `hash`
+          // (default) clusters each partition value into one task; `range`
+          // range-partitions on (partition dims ++ sort keys) so files
+          // carry NON-OVERLAPPING sort-key ranges table-wide (the best
+          // pruning layout); `none` keeps the incoming distribution (no
+          // shuffle — for pre-distributed pipelines).
+          val distMode = md.properties.getOrElse("write.distribution-mode", "hash")
+          val rangeCols = stagingParts.map(col) ++ sortCols
+          val staged1 = distMode match {
+            case "none" => staged0
+            case "range" if rangeCols.nonEmpty =>
+              staged0.repartitionByRange(rangeCols: _*)
+            case _ =>
+              if (stagingParts.isEmpty) staged0
+              else staged0.repartition(stagingParts.map(col): _*)
           }
-        // `write.distribution-mode` table property (Iceberg): `hash`
-        // (default) clusters each partition value into one task; `range`
-        // range-partitions on (partition dims ++ sort keys) so files
-        // carry NON-OVERLAPPING sort-key ranges table-wide (the best
-        // pruning layout); `none` keeps the incoming distribution (no
-        // shuffle — for pre-distributed pipelines).
-        val distMode = md.properties.getOrElse("write.distribution-mode", "hash")
-        val rangeCols = stagingParts.map(col) ++ sortCols
-        val staged1 = distMode match {
-          case "none" => staged0
-          case "range" if rangeCols.nonEmpty =>
-            staged0.repartitionByRange(rangeCols: _*)
-          case _ =>
-            if (stagingParts.isEmpty) staged0
-            else staged0.repartition(stagingParts.map(col): _*)
-        }
-        val staged2 =
-          if (sortCols.isEmpty) staged1
-          else staged1.sortWithinPartitions(
-            stagingParts.map(col) ++ sortCols: _*)
-        if (stagingParts.isEmpty) staged2.write.mode("overwrite").parquet(stage.toString)
-        else staged2.write.mode("overwrite")
-          .partitionBy(stagingParts: _*).parquet(stage.toString)
+          val staged2 =
+            if (sortCols.isEmpty) staged1
+            else staged1.sortWithinPartitions(
+              stagingParts.map(col) ++ sortCols: _*)
+          if (stagingParts.isEmpty) staged2.write.mode("overwrite").parquet(stage.toString)
+          else staged2.write.mode("overwrite")
+            .partitionBy(stagingParts: _*).parquet(stage.toString)
 
-        // an EMPTY input staged no parquet files (only _SUCCESS): same
-        // no-new-entries commit the old isEmpty probe produced, decided
-        // from a driver walk instead of an extra evaluation of the plan
-        val anyStaged = {
-          val walk = Files.walk(stage)
-          try walk.iterator().asScala.exists(p =>
-            p.getFileName.toString.endsWith(".parquet"))
-          finally walk.close()
-        }
-        if (!anyStaged) Seq.empty
-        else {
-        // ---- 2. per-file stats, FOOTER-FIRST (never re-read what was
-        // just written): the footers — opened for column sizes anyway —
-        // carry bounds, null counts and row counts; the one grouped
-        // count below reads ZERO columns (served from row-group
-        // metadata) and exists to key files to their partition values
-        // through Spark's own directory read-back. Columns a footer
-        // cannot serve exactly ride the same job as a column-pruned agg.
-        val source = statsSource(spark)
-        val stagedPaths: Seq[String] = {
-          val walk = Files.walk(stage)
-          try walk.iterator().asScala.map(_.toString)
-            .filter(_.endsWith(".parquet")).toSeq.sorted
-          finally walk.close()
-        }
-        val infos = footerInfos(spark, stagedPaths)
-        val resolved: Map[String, (Map[Int, FieldStat], Seq[SchemaField])] =
-          if (source == "agg")
-            stagedPaths.map(p => p -> (Map.empty[Int, FieldStat], fields)).toMap
-          else stagedPaths.map(p => p -> footerFieldStats(fields, infos(p))).toMap
-        val aggFs: Seq[SchemaField] = fields.filter(f =>
-          resolved.values.exists(_._2.exists(_.id == f.id)))
-        val aggSet = aggFs.map(_.id).toSet
-        // Commits with full footer coverage need no Spark job at all:
-        // the file set comes from the walk, row counts from the footers,
-        // and PARTITION VALUES — previously the last reason a clean
-        // partitioned commit paid a (zero-column) read-back job — come
-        // from Spark's own partition-inference code run DRIVER-SIDE over
-        // the staged leaf dirs (GraftPartitionParse.parsePartitionDirs:
-        // the same parsePartitions entry point and session confs the
-        // read-back used, so `__p_x=0123` still canonicalizes to `123`).
-        // Only a commit with footer-unservable columns keeps the one
-        // column-pruned agg job, which carries the partition read-back
-        // with it as before. (A __bin staging dim never lands in the
-        // partition map on either path.)
-        val partValsByDir: Map[String, Map[String, Option[String]]] =
-          if (partDims.isEmpty || aggFs.nonEmpty) Map.empty
-          else org.apache.spark.sql.execution.datasources.GraftPartitionParse
-            .parsePartitionDirs(spark, stage.toString,
-            stagedPaths.map(p =>
-              new org.apache.hadoop.fs.Path(p).getParent.toString).distinct)
-        def partValsOf(walkKey: String): Map[String, Option[String]] = {
-          val dir = new org.apache.hadoop.fs.Path(walkKey).getParent.toString
-          partValsByDir.getOrElse(dir, throw new IllegalStateException(
-            s"staged dir $dir missing from the driver-side partition parse"))
-        }
-        val perFile: Seq[(String, Option[org.apache.spark.sql.Row])] =
-          if (aggFs.isEmpty)
-            // mirror the agg-keyed shape: a zero-row staged file (never
-            // produced by current Spark writers, but cheap to guard)
-            // yields no agg group and thus no entry
-            stagedPaths.filter(p => infos(p).rowCount > 0L).map(p => p -> None)
+          // an EMPTY input staged no parquet files (only _SUCCESS): same
+          // no-new-entries commit the old isEmpty probe produced, decided
+          // from a driver walk instead of an extra evaluation of the plan
+          val anyStaged = {
+            val walk = Files.walk(stage)
+            try walk.iterator().asScala.exists(p =>
+              p.getFileName.toString.endsWith(".parquet"))
+            finally walk.close()
+          }
+          if (!anyStaged) Seq.empty
           else {
-            val staged = spark.read.option("basePath", stage.toString)
-              .parquet(stage.toString)
-            val partKeys = partDims.map { case (pname, _, _) =>
-              col(s"__p_$pname").cast("string").as(s"__p_$pname") }
-            staged
-              .groupBy(input_file_name().as("__file") +: partKeys: _*)
-              .agg(count(lit(1)).as("nrows"), statAggsFor(aggFs): _*)
-              .collect()
-              .toSeq.sortBy(_.getAs[String]("__file")).map { row =>
-                // `input_file_name()` URIs decode to `///abs/path`;
-                // collapse leading slashes to the walked key form
-                val p = plainPath(row.getAs[String]("__file"))
-                ("/" + p.dropWhile(_ == '/'), Some(row))
-              }
+          // ---- 2. per-file stats, FOOTER-FIRST (never re-read what was
+          // just written): the footers — opened for column sizes anyway —
+          // carry bounds, null counts and row counts; the one grouped
+          // count below reads ZERO columns (served from row-group
+          // metadata) and exists to key files to their partition values
+          // through Spark's own directory read-back. Columns a footer
+          // cannot serve exactly ride the same job as a column-pruned agg.
+          val source = statsSource(spark)
+          val stagedPaths: Seq[String] = {
+            val walk = Files.walk(stage)
+            try walk.iterator().asScala.map(_.toString)
+              .filter(_.endsWith(".parquet")).toSeq.sorted
+            finally walk.close()
           }
+          val infos = footerInfos(spark, stagedPaths)
+          val resolved: Map[String, (Map[Int, FieldStat], Seq[SchemaField])] =
+            if (source == "agg")
+              stagedPaths.map(p => p -> (Map.empty[Int, FieldStat], fields)).toMap
+            else stagedPaths.map(p => p -> footerFieldStats(fields, infos(p))).toMap
+          val aggFs: Seq[SchemaField] = fields.filter(f =>
+            resolved.values.exists(_._2.exists(_.id == f.id)))
+          val aggSet = aggFs.map(_.id).toSet
+          // Commits with full footer coverage need no Spark job at all:
+          // the file set comes from the walk, row counts from the footers,
+          // and PARTITION VALUES — previously the last reason a clean
+          // partitioned commit paid a (zero-column) read-back job — come
+          // from Spark's own partition-inference code run DRIVER-SIDE over
+          // the staged leaf dirs (GraftPartitionParse.parsePartitionDirs:
+          // the same parsePartitions entry point and session confs the
+          // read-back used, so `__p_x=0123` still canonicalizes to `123`).
+          // Only a commit with footer-unservable columns keeps the one
+          // column-pruned agg job, which carries the partition read-back
+          // with it as before. (A __bin staging dim never lands in the
+          // partition map on either path.)
+          val partValsByDir: Map[String, Map[String, Option[String]]] =
+            if (partDims.isEmpty || aggFs.nonEmpty) Map.empty
+            else org.apache.spark.sql.execution.datasources.GraftPartitionParse
+              .parsePartitionDirs(spark, stage.toString,
+              stagedPaths.map(p =>
+                new org.apache.hadoop.fs.Path(p).getParent.toString).distinct)
+          def partValsOf(walkKey: String): Map[String, Option[String]] = {
+            val dir = new org.apache.hadoop.fs.Path(walkKey).getParent.toString
+            partValsByDir.getOrElse(dir, throw new IllegalStateException(
+              s"staged dir $dir missing from the driver-side partition parse"))
+          }
+          val perFile: Seq[(String, Option[org.apache.spark.sql.Row])] =
+            if (aggFs.isEmpty)
+              // mirror the agg-keyed shape: a zero-row staged file (never
+              // produced by current Spark writers, but cheap to guard)
+              // yields no agg group and thus no entry
+              stagedPaths.filter(p => infos(p).rowCount > 0L).map(p => p -> None)
+            else {
+              val staged = spark.read.option("basePath", stage.toString)
+                .parquet(stage.toString)
+              val partKeys = partDims.map { case (pname, _, _) =>
+                col(s"__p_$pname").cast("string").as(s"__p_$pname") }
+              staged
+                .groupBy(input_file_name().as("__file") +: partKeys: _*)
+                .agg(count(lit(1)).as("nrows"), statAggsFor(aggFs): _*)
+                .collect()
+                .toSeq.sortBy(_.getAs[String]("__file")).map { row =>
+                  // `input_file_name()` URIs decode to `///abs/path`;
+                  // collapse leading slashes to the walked key form
+                  val p = plainPath(row.getAs[String]("__file"))
+                  ("/" + p.dropWhile(_ == '/'), Some(row))
+                }
+            }
 
-        Files.createDirectories(dir.resolve("data"))
-        perFile.zipWithIndex.map { case ((walkKey, rowOpt), i) =>
-          val relPath = f"data/data-$snapId-$tok-$i%05d.parquet"
-          Files.move(Paths.get(walkKey), dir.resolve(relPath),
-            StandardCopyOption.REPLACE_EXISTING)
-          val info = infos.getOrElse(walkKey, throw new IllegalStateException(
-            s"staged file $walkKey missing from the footer pass"))
-          val nrows = rowOpt.map(_.getAs[Long]("nrows")).getOrElse(info.rowCount)
-          val fstats = resolved(walkKey)._1
-          def aggRow = rowOpt.getOrElse(throw new IllegalStateException(
-            s"$walkKey missing from the fallback stats agg"))
-          val lower = fields.filter(f => statable(f.fieldType)).flatMap { f =>
-            if (aggSet(f.id))
-              Option(aggRow.getAs[Any](s"lo_${f.id}")).map(v => f.id -> loBoundBytes(f.fieldType, v))
-            else fstats.get(f.id).flatMap(_.lo).map(f.id -> _)
-          }.toMap
-          val upper = fields.filter(f => statable(f.fieldType)).flatMap { f =>
-            if (aggSet(f.id))
-              Option(aggRow.getAs[Any](s"hi_${f.id}")).map(v => f.id -> hiBoundBytes(f.fieldType, v))
-            else fstats.get(f.id).flatMap(_.hi).map(f.id -> _)
-          }.toMap
-          val (vCounts, nvCounts) =
-            countStatsMixed(fields, sid, rowOpt.orNull, nrows, fstats, aggSet)
-          DataFileEntry(
-            status = 1, snapshotId = snapId, content = 0,
-            filePath = relPath, fileFormat = "PARQUET",
-            // Spark reads a __HIVE_DEFAULT_PARTITION__ staging dir back
-            // as null — restore the sentinel (manifest strings are
-            // non-nullable). Footer-complete commits take the values from
-            // the driver-side parse of the file's own directory instead
-            // of an agg row (no job ran).
-            partition = partDims.map { case (pname, _, _) =>
-              val v = rowOpt match {
-                case Some(row) => Option(row.getAs[String](s"__p_$pname"))
-                case None => partValsOf(walkKey)(s"__p_$pname")
-              }
-              pname -> v.getOrElse(Transforms.NullPartitionValue) }.toMap,
-            recordCount = nrows,
-            fileSizeInBytes = Files.size(dir.resolve(relPath)),
-            columnSizes = sizeStats(fields, sid, info.columnBytes),
-            valueCounts = vCounts,
-            nullValueCounts = nvCounts,
-            lowerBounds = lower, upperBounds = upper)
-        }
+          Files.createDirectories(dir.resolve("data"))
+          perFile.zipWithIndex.map { case ((walkKey, rowOpt), i) =>
+            val relPath = f"data/data-$snapId-$tok-$i%05d.parquet"
+            Files.move(Paths.get(walkKey), dir.resolve(relPath),
+              StandardCopyOption.REPLACE_EXISTING)
+            val info = infos.getOrElse(walkKey, throw new IllegalStateException(
+              s"staged file $walkKey missing from the footer pass"))
+            val nrows = rowOpt.map(_.getAs[Long]("nrows")).getOrElse(info.rowCount)
+            val fstats = resolved(walkKey)._1
+            def aggRow = rowOpt.getOrElse(throw new IllegalStateException(
+              s"$walkKey missing from the fallback stats agg"))
+            val lower = fields.filter(f => statable(f.fieldType)).flatMap { f =>
+              if (aggSet(f.id))
+                Option(aggRow.getAs[Any](s"lo_${f.id}")).map(v => f.id -> loBoundBytes(f.fieldType, v))
+              else fstats.get(f.id).flatMap(_.lo).map(f.id -> _)
+            }.toMap
+            val upper = fields.filter(f => statable(f.fieldType)).flatMap { f =>
+              if (aggSet(f.id))
+                Option(aggRow.getAs[Any](s"hi_${f.id}")).map(v => f.id -> hiBoundBytes(f.fieldType, v))
+              else fstats.get(f.id).flatMap(_.hi).map(f.id -> _)
+            }.toMap
+            val (vCounts, nvCounts) =
+              countStatsMixed(fields, sid, rowOpt.orNull, nrows, fstats, aggSet)
+            DataFileEntry(
+              status = 1, snapshotId = snapId, content = 0,
+              filePath = relPath, fileFormat = "PARQUET",
+              // Spark reads a __HIVE_DEFAULT_PARTITION__ staging dir back
+              // as null — restore the sentinel (manifest strings are
+              // non-nullable). Footer-complete commits take the values from
+              // the driver-side parse of the file's own directory instead
+              // of an agg row (no job ran).
+              partition = partDims.map { case (pname, _, _) =>
+                val v = rowOpt match {
+                  case Some(row) => Option(row.getAs[String](s"__p_$pname"))
+                  case None => partValsOf(walkKey)(s"__p_$pname")
+                }
+                pname -> v.getOrElse(Transforms.NullPartitionValue) }.toMap,
+              recordCount = nrows,
+              fileSizeInBytes = Files.size(dir.resolve(relPath)),
+              columnSizes = sizeStats(fields, sid, info.columnBytes),
+              valueCounts = vCounts,
+              nullValueCounts = nvCounts,
+              lowerBounds = lower, upperBounds = upper)
+          }
+          }
         }
       case _ => Seq.empty
     }
@@ -1293,15 +1309,16 @@ object TableWriter {
         } else keyData
       val keysDf = FieldIds.attributeColumns(
         keySource.select(keys.map(col): _*).distinct().coalesce(1), keyFields)
-      val stage = Files.createTempDirectory("graft-upsert")
-      keysDf.write.mode("overwrite").parquet(stage.toString)
-      val staged = scala.util.Using.resource(Files.list(stage))(
-        _.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get)
       val relPath = s"data/eqdelete-$snapId-$tok.parquet"
-      Files.move(staged, dir.resolve(relPath), StandardCopyOption.REPLACE_EXISTING)
+      withStage("graft-upsert") { stage =>
+        keysDf.write.mode("overwrite").parquet(stage.toString)
+        val staged = scala.util.Using.resource(Files.list(stage))(
+          _.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get)
+        Files.move(staged, dir.resolve(relPath), StandardCopyOption.REPLACE_EXISTING)
+      }
       // exact row count straight off the file's own footer — a
       // spark.read...count() here costs a whole job per upsert commit
-      val nKeys = footerRowCount(dir.resolve(relPath))
+      val nKeys = footerRowCount(spark, dir.resolve(relPath))
       val entry = DataFileEntry(
         status = 1, snapshotId = snapId, content = 2,
         filePath = relPath, fileFormat = "PARQUET", partition = Map.empty,

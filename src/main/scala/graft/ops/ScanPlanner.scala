@@ -464,10 +464,11 @@ object ScanPlanner {
     val p = new org.apache.hadoop.fs.Path(tableDir)
     // an explicit scheme (file:, hdfs://nn, s3a://bucket) is already the
     // reader's rendering — qualify only scheme-less paths, against the
-    // filesystem they actually resolve through
+    // filesystem they actually resolve through (the session's conf: a
+    // fresh Configuration costs an XML parse per call)
     val qualified =
       if (p.toUri.getScheme != null) p.toString
-      else p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      else p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
         .makeQualified(p).toString
     qualified.stripSuffix("/") + "/"
   }
