@@ -1298,17 +1298,25 @@ object TableWriter {
       // source (a filter over a corpus table) must not be computed
       // twice for a few key columns. rowDelta's independent delete-key
       // frame, and the empty-input edge (no staged files to read), keep
-      // the direct evaluation.
-      val keySource =
-        if (equalityFromData && newEntries.nonEmpty) {
+      // the direct evaluation. A key source over driver rows only (local
+      // relations) is deduplicated on the driver: no read-back, no
+      // distinct shuffle.
+      val projected = keyData.select(keys.map(col): _*)
+      val distinctKeys =
+        if (projected.queryExecution.analyzed.collectLeaves().forall(
+            _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]))
+          spark.createDataFrame(projected.collect().distinct.toSeq.asJava,
+            projected.schema)
+        else if (equalityFromData && newEntries.nonEmpty) {
           val files = newEntries.map(e =>
             dir.resolve(e.filePath).toString -> e.fileSizeInBytes)
           org.apache.spark.sql.GraftParquetBridge.readParquet(spark, files,
             org.apache.spark.sql.execution.datasources.parquet.GraftSchemaInference
               .schemaOfFile(spark, files.map(_._1).min))
-        } else keyData
-      val keysDf = FieldIds.attributeColumns(
-        keySource.select(keys.map(col): _*).distinct().coalesce(1), keyFields)
+            .select(keys.map(col): _*).distinct()
+        } else projected.distinct()
+      // one task, so the stage holds exactly one .parquet file to move
+      val keysDf = FieldIds.attributeColumns(distinctKeys.coalesce(1), keyFields)
       val relPath = s"data/eqdelete-$snapId-$tok.parquet"
       withStage("graft-upsert") { stage =>
         keysDf.write.mode("overwrite").parquet(stage.toString)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.api.Engine
+import graft.meta.IcebergTable
 
 /** PERSISTENT dedup component assignment — the `(doc_id, component)`
   * frame [[Dedup.connectedComponents]] produces, materialized as a Graft
@@ -14,13 +15,20 @@ import graft.api.Engine
   * edges fold in through [[Dedup.incrementalComponents]] and the table
   * is updated by one MERGE-style row-delta commit over exactly the
   * affected docs. A 100 TB corpus never re-runs global label propagation
-  * after bootstrap — the per-batch cost is two reads of this table (the
-  * batch's endpoint rows with the id set pushed down, then the
-  * bucket-pruned rows of the merged-away components) plus a
-  * batch-bounded contracted-graph clustering. A batch whose distinct
-  * endpoints fit [[Dedup.LiteralMaxIds]] does all of it on the driver:
-  * the two reads are collects, the clustering a union-find, and the
-  * delta commits from a local relation (see [[fold]] / [[retire]]).
+  * after bootstrap — the per-batch cost is two lookups in this table
+  * (the batch's endpoint rows, then the rows of the merged-away
+  * components) plus a batch-bounded contracted-graph clustering. A batch
+  * whose distinct endpoints fit [[Dedup.LiteralMaxIds]] does all of it
+  * on the driver: the clustering is a union-find and the delta commits
+  * from a local relation (see [[fold]] / [[retire]]). Those driver tiers
+  * serve both lookups from the instance's RESIDENT rows: a ledger of at
+  * most [[ComponentIndex.ResidentMaxRows]] rows is read once and moved
+  * forward along each of this instance's own CAS-pinned commits, so a
+  * warm driver-tier fold or retire reads no table. Any other commit
+  * (another instance or process, [[compact]], the distributed tier)
+  * moves the snapshot, and the next call reads the table again; above
+  * the bound the lookups stay two pushed-down collects (the id set, then
+  * the bucket-pruned read).
   *
   * Lifecycle mirrors [[NearDupIndex]] (the two compose: `NearDupIndex
   * .admit` gates a batch and its collision pairs are exactly the new
@@ -44,10 +52,14 @@ import graft.api.Engine
   * The update commit is merge-on-read ([[Engine.upsert]]): an equality
   * delete on `doc_id` plus the delta rows, no data-file rewrite.
   */
-final class ComponentIndex(
+final class ComponentIndex private[graft] (
     val engine: Engine,
     val ref: String,
-    val nBuckets: Int = 32) {
+    val nBuckets: Int,
+    residentMaxRows: Long) {
+
+  def this(engine: Engine, ref: String, nBuckets: Int = 32) =
+    this(engine, ref, nBuckets, ComponentIndex.ResidentMaxRows)
 
   val schema: StructType = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
@@ -74,15 +86,78 @@ final class ComponentIndex(
 
   /** The table's live rows off an already-pinned load — empty-safe (a
     * fresh or fully-singleton index has no snapshot or no files). */
-  private def storeOf(t: graft.meta.IcebergTable): DataFrame = {
+  private def storeOf(t: IcebergTable): DataFrame = {
     if (t.metadata.currentSnapshotId.isEmpty) return emptyStore
     val files = t.files()
     if (files.isEmpty) emptyStore
     else ScanPlanner.readFiles(engine.spark, t, files)
   }
 
-  /** The standing sparse assignment (non-trivial memberships only). */
-  def assignments: DataFrame = storeOf(engine.load(ref))
+  /** The ledger rows this instance keeps between calls, at the snapshot
+    * they were read or committed at. Guarded by the instance lock
+    * (`admitStream`'s batches may fold from another thread). */
+  private var resident: Option[ComponentIndex.Resident] = None
+
+  /** `t`'s current snapshot as (table uuid, snapshot id, manifest list).
+    * The manifest list's name carries a per-commit token: a snapshot id
+    * that a later commit reuses (ids are one past the newest live one,
+    * so rollback plus expiration can hand out an id again) never
+    * matches. */
+  private def keyOf(t: IcebergTable): Option[ComponentIndex.Key] =
+    t.metadata.currentSnapshotId.flatMap(id => t.metadata.snapshots.find(_.snapshotId == id))
+      .map(s => (t.metadata.tableUuid, s.snapshotId, s.manifestList))
+
+  /** The resident rows when they are at `t`'s current snapshot. */
+  private def residentOf(t: IcebergTable): Option[ComponentIndex.Resident] =
+    synchronized { resident.filter(r => keyOf(t).contains(r.key)) }
+
+  /** [[residentOf]], else one merge-on-read read of `t` kept as the new
+    * resident rows — unless `t` has no snapshot or its live files hold
+    * more than `residentMaxRows` rows by their manifest record counts,
+    * which keep the pushed-down reads. */
+  private def loadResident(t: IcebergTable): Option[ComponentIndex.Resident] =
+    synchronized {
+      residentOf(t).orElse {
+        resident = keyOf(t).filter(_ =>
+          t.files().map(_.recordCount).sum <= residentMaxRows).map(key =>
+          ComponentIndex.Resident(key, Dedup.longPairs(storeOf(t), "doc_id", "component")))
+        resident
+      }
+    }
+
+  /** `t`'s rows of the `labels` components, through the bucket-pruned
+    * read. */
+  private def labelRows(t: IcebergTable)(labels: Seq[Long]): DataFrame =
+    ScanPlanner.readTableWhereIn(engine.spark, t, "component", labels.map(_.toString))
+
+  /** The driver tiers' row lookups at pinned load `t`: the resident rows
+    * (read once on first use), else pushed-down reads of `t` — the
+    * batch's rows by `doc_id`, the components' rows through
+    * [[labelRows]]. `advance` moves the resident rows along this
+    * instance's commit `snapshotId`, CAS-pinned to `t`'s snapshot, while
+    * that commit is still the table's current snapshot. */
+  private final class RowsAt(t: IcebergTable) extends Dedup.AssignRows {
+    private lazy val kept = loadResident(t)
+    private val read = Dedup.readRows(storeOf(t), Some(labelRows(t)))
+    def ofDocs(ids: Seq[Long]): Seq[(Long, Long)] = kept.fold(read.ofDocs(ids))(_.ofDocs(ids))
+    def ofLabels(labels: Seq[Long]): Seq[(Long, Long)] =
+      kept.fold(read.ofLabels(labels))(_.ofLabels(labels))
+    def advance(snapshotId: Long, gone: Seq[Long], added: Seq[(Long, Long)]): Unit =
+      kept.foreach { k =>
+        val now = keyOf(engine.load(ref)).filter(_._2 == snapshotId)
+        ComponentIndex.this.synchronized {
+          if (resident.exists(_ eq k)) resident = now.map(k.advance(_, gone, added))
+        }
+      }
+  }
+
+  /** The standing sparse assignment (non-trivial memberships only): the
+    * resident rows as a local relation when this instance holds the
+    * current snapshot's, else a read of the table. */
+  def assignments: DataFrame = {
+    val t = engine.load(ref)
+    residentOf(t).fold(storeOf(t))(r => Dedup.pairFrame(engine.spark, r.rows))
+  }
 
   /** The corpus-dedup DROP list, for free — VALID ONLY when every doc
     * in the ledger is corpus-resident (bootstrap/fold over edges among
@@ -138,18 +213,16 @@ final class ComponentIndex(
     // has no id to pin; the first concurrent folds of an EMPTY ledger
     // are the one window this cannot guard.)
     val t = engine.load(ref)
-    def commit(upserts: DataFrame): Unit = {
+    def commit(upserts: DataFrame): Long =
       engine.upsert(ref, upserts, Seq("doc_id"),
-        expectedCurrentSnapshotId = t.metadata.currentSnapshotId)
-      ()
-    }
+        expectedCurrentSnapshotId = t.metadata.currentSnapshotId).snapshotId
+    val at = new RowsAt(t)
     Dedup.incrementalDelta(storeOf(t), newEdges, sparseAssign = true,
-      relabelSource = Some(labels => ScanPlanner.readTableWhereIn(
-        engine.spark, t, "component", labels.map(_.toString))),
-      resolveInMaxIds) match {
+      relabelSource = Some(labelRows(t)), resolveInMaxIds, Some(at)) match {
       case Left(rows) =>
         val upserts = rows.filter { case (d, c) => d != c }
-        if (upserts.nonEmpty) commit(Dedup.pairFrame(engine.spark, upserts))
+        if (upserts.nonEmpty)
+          at.advance(commit(Dedup.pairFrame(engine.spark, upserts)), Nil, upserts)
         Dedup.pairFrame(engine.spark, rows)
       case Right(plan) =>
         val delta = plan.localCheckpoint()
@@ -224,11 +297,12 @@ final class ComponentIndex(
     * the corpus-scale form. Sets at or under `inMaxIds` distinct ids
     * (collected from a local frame, else one fused size-probe-and-collect
     * job, the [[Dedup.incrementalComponents]] `resolveInMaxIds` idiom)
-    * take the DRIVER tier: the retired docs' rows (pushed-down `isin`)
-    * and the affected components' rows (the relabel prune hashes a
-    * driver-known label list) are collected, the residual pairs too, the
-    * re-clustering is a union-find, and the one commit is built from
-    * local relations. Above the threshold every retired-id filter
+    * take the DRIVER tier: the retired docs' rows and the affected
+    * components' rows come from the resident rows (else a pushed-down
+    * `isin` and the relabel prune over a driver-known label list,
+    * collected), the residual pairs are collected, the re-clustering is
+    * a union-find, and the one commit is built from local relations.
+    * Above the threshold every retired-id filter
     * switches to a broadcast semi/anti-join and the relabel prune's
     * bucket census runs distributed
     * ([[ScanPlanner.readTableWhereInFrame]]) — a compliance batch of
@@ -255,14 +329,13 @@ final class ComponentIndex(
       pairsAmong: DataFrame => DataFrame): DataFrame = {
     val spark = engine.spark
     val t = engine.load(ref)
+    val at = new RowsAt(t)
     val gone = lits.toSet
     // components of retired MEMBER docs, then every stored row of the
     // affected components (members plus rows labeled by a retired id)
-    val retiredRows = Dedup.longPairs(
-      storeOf(t).filter(col("doc_id").isin(lits: _*)), "doc_id", "component")
+    val retiredRows = at.ofDocs(lits)
     val affectedLabels = (retiredRows.map(_._2) ++ lits).distinct
-    val affectedRows = Dedup.longPairs(ScanPlanner.readTableWhereIn(spark, t,
-      "component", affectedLabels.map(_.toString)), "doc_id", "component")
+    val affectedRows = at.ofLabels(affectedLabels)
     val remaining = affectedRows.flatMap { case (d, c) => Seq(d, c) }
       .distinct.filterNot(gone).sorted
     val kept = remaining.toSet
@@ -270,11 +343,14 @@ final class ComponentIndex(
       pairsAmong(ids(remaining)), "a_id", "b_id")
       .filter { case (a, b) => kept(a) && kept(b) }
     val labels = Dedup.minLabels(residual)
-    if (affectedRows.nonEmpty)
-      engine.rowDelta(ref,
-        Dedup.pairFrame(spark, labels.toSeq.sorted.filter { case (d, c) => d != c }),
-        Seq("doc_id"), ids(affectedRows.map(_._1)),
-        expectedCurrentSnapshotId = t.metadata.currentSnapshotId)
+    if (affectedRows.nonEmpty) {
+      val inserts = labels.toSeq.sorted.filter { case (d, c) => d != c }
+      val deleted = affectedRows.map(_._1)
+      at.advance(engine.rowDelta(ref, Dedup.pairFrame(spark, inserts),
+        Seq("doc_id"), ids(deleted),
+        expectedCurrentSnapshotId = t.metadata.currentSnapshotId).snapshotId,
+        deleted, inserts)
+    }
     Dedup.pairFrame(spark, remaining.map(d => d -> labels.getOrElse(d, d)))
   }
 
@@ -355,6 +431,55 @@ final class ComponentIndex(
 }
 
 object ComponentIndex {
+  /** The largest ledger (live rows by manifest record counts) an
+    * instance keeps resident on the driver: 16 MB as two long arrays. */
+  private[graft] val ResidentMaxRows: Long = 1L << 20
+
+  /** A table snapshot: (table uuid, snapshot id, manifest list). */
+  private type Key = (String, Long, String)
+
+  /** Ledger rows at one snapshot, sorted by `doc_id` in two parallel
+    * arrays. */
+  private final class Resident(val key: Key, docs: Array[Long],
+      comps: Array[Long]) extends Dedup.AssignRows {
+    def rows: Seq[(Long, Long)] = docs.indices.map(i => docs(i) -> comps(i))
+
+    def ofDocs(ids: Seq[Long]): Seq[(Long, Long)] = ids.flatMap { d =>
+      val i = java.util.Arrays.binarySearch(docs, d)
+      if (i >= 0) Some(d -> comps(i)) else None
+    }
+
+    def ofLabels(labels: Seq[Long]): Seq[(Long, Long)] = {
+      val ls = labels.toSet
+      docs.indices.collect { case i if ls(comps(i)) => docs(i) -> comps(i) }
+    }
+
+    /** These rows at snapshot `to`: `gone` docs removed, then `added`
+      * laid over by `doc_id`. */
+    def advance(to: Key, gone: Seq[Long], added: Seq[(Long, Long)]): Resident = {
+      val adds = added.toMap.toArray.sortBy(_._1)
+      val drop = gone.toSet ++ adds.map(_._1)
+      val (d, c) = (Array.newBuilder[Long], Array.newBuilder[Long])
+      var (i, j) = (0, 0)
+      while (i < docs.length || j < adds.length) {
+        if (j < adds.length && (i == docs.length || adds(j)._1 < docs(i))) {
+          d += adds(j)._1; c += adds(j)._2; j += 1
+        } else {
+          if (!drop(docs(i))) { d += docs(i); c += comps(i) }
+          i += 1
+        }
+      }
+      new Resident(to, d.result(), c.result())
+    }
+  }
+
+  private object Resident {
+    def apply(key: Key, rows: Seq[(Long, Long)]): Resident = {
+      val sorted = rows.sortBy(_._1)
+      new Resident(key, sorted.map(_._1).toArray, sorted.map(_._2).toArray)
+    }
+  }
+
   /** Bounded rerun on [[graft.meta.CommitConflictException]] — the whole
     * BODY re-executes (reload, re-derive, re-commit), never just the
     * commit. */

@@ -424,12 +424,38 @@ object Dedup {
       case Right(delta) => delta
     }
 
+  /** A standing assignment's rows looked up on the driver: the rows of
+    * given doc ids, and the rows of given components. */
+  private[graft] trait AssignRows {
+    def ofDocs(ids: Seq[Long]): Seq[(Long, Long)]
+    def ofLabels(labels: Seq[Long]): Seq[(Long, Long)]
+  }
+
+  /** [[AssignRows]] as pushed-down collects: `assign` filtered on
+    * `doc_id`, and `relabelSource`'s read (else `assign` filtered on
+    * `component`). `assign` is built on first use. */
+  private[graft] def readRows(assign: => DataFrame,
+      relabelSource: Option[Seq[Long] => DataFrame]): AssignRows = new AssignRows {
+    private lazy val store = assign
+    def ofDocs(ids: Seq[Long]) = longPairs(
+      store.filter(col("doc_id").isin(ids: _*)), "doc_id", "component")
+    def ofLabels(labels: Seq[Long]) = longPairs(relabelSource match {
+      case Some(read) => read(labels)
+      case None => store.filter(col("component").isin(labels: _*))
+    }, "doc_id", "component")
+  }
+
   /** [[incrementalComponents]] with the tier visible: `Left` is the
-    * driver tier's delta rows, `Right` the distributed tier's plan. */
-  private[graft] def incrementalDelta(assign: DataFrame, newEdges: DataFrame,
+    * driver tier's delta rows, `Right` the distributed tier's plan.
+    * `driverRows` serves the driver tier's two lookups (default:
+    * [[readRows]] of `assign` and `relabelSource`); `assign` is only
+    * built if a tier reads it. */
+  private[graft] def incrementalDelta(assign: => DataFrame, newEdges: DataFrame,
       sparseAssign: Boolean,
       relabelSource: Option[Seq[Long] => DataFrame],
-      resolveInMaxIds: Int): Either[Seq[(Long, Long)], DataFrame] = {
+      resolveInMaxIds: Int,
+      driverRows: Option[AssignRows] = None): Either[Seq[(Long, Long)], DataFrame] = {
+    lazy val store = assign
     // a local edge frame is driver rows already (no job to read it);
     // any other plan is batch-bounded and consumed more than once —
     // materialize once (skipped when the caller already checkpointed
@@ -448,35 +474,27 @@ object Dedup {
       case None => literalIds(idFrame, resolveInMaxIds)
     }
     lits match {
-      case Some(ids) => Left(driverDelta(assign,
-        local.getOrElse(longPairs(e, "a_id", "b_id")), ids, sparseAssign, relabelSource))
-      case None => Right(distributedDelta(assign, e, idFrame.localCheckpoint(),
+      case Some(ids) => Left(driverDelta(
+        driverRows.getOrElse(readRows(store, relabelSource)),
+        local.getOrElse(longPairs(e, "a_id", "b_id")), ids, sparseAssign))
+      case None => Right(distributedDelta(store, e, idFrame.localCheckpoint(),
         sparseAssign, relabelSource))
     }
   }
 
   /** The driver tier of [[incrementalComponents]]: the same row sets as
-    * [[distributedDelta]], over collected rows. */
-  private def driverDelta(assign: DataFrame, edges: Seq[(Long, Long)],
-      ids: IndexedSeq[Long], sparseAssign: Boolean,
-      relabelSource: Option[Seq[Long] => DataFrame]): Seq[(Long, Long)] = {
-    val touched = longPairs(assign.filter(col("doc_id").isin(ids: _*)),
-      "doc_id", "component").toMap
+    * [[distributedDelta]], over rows looked up in `assign`. */
+  private def driverDelta(assign: AssignRows, edges: Seq[(Long, Long)],
+      ids: IndexedSeq[Long], sparseAssign: Boolean): Seq[(Long, Long)] = {
+    val touched = assign.ofDocs(ids).toMap
     def label(x: Long) = touched.getOrElse(x, x)
     val m = minLabels(edges.map { case (a, b) => (label(a), label(b)) }
       .filter { case (a, b) => a != b })
     val mergedAway = m.filter { case (node, comp) => node != comp }
     val relabeled =
       if (mergedAway.isEmpty) Seq.empty
-      else {
-        val labels = mergedAway.keys.toIndexedSeq.sorted
-        val rows = relabelSource match {
-          case Some(read) => read(labels)
-          case None => assign.filter(col("component").isin(labels: _*))
-        }
-        longPairs(rows, "doc_id", "component").collect {
-          case (d, c) if mergedAway.contains(c) => d -> mergedAway(c)
-        }
+      else assign.ofLabels(mergedAway.keys.toIndexedSeq.sorted).collect {
+        case (d, c) if mergedAway.contains(c) => d -> mergedAway(c)
       }
     val newIds = ids.filterNot(touched.contains)
     val newRows = newIds.flatMap(d => m.get(d).map(d -> _))

@@ -17,7 +17,8 @@ import graft.queries.Registry
   *    3), then the min;
   *  - `jobs`: `runs - 1` warm runs, then one measured run's wall, job
   *    count, summed job wall and driver gap (wall − job wall); each job's
-  *    wall and description follow unless `all` is profiled;
+  *    wall, engine call site and description follow unless `all` is
+  *    profiled;
   *  - `show`: the first 30 rows and the formatted plan. */
 object Profile {
   /** One run of a query: wall, rows counted and the jobs it ran. */
@@ -57,7 +58,7 @@ object Profile {
           out(f"[jobs] $name%-26s ${r.wallS}%6.2f s  ${r.jobs.size}%3d jobs  " +
             f"${r.jobWallS}%6.2f s jobwall  gap ${r.wallS - r.jobWallS}%6.2f s  (${r.rows} rows)")
           if (detail) r.jobs.foreach { j =>
-            out(f"[jobs]   job ${j.id}%4d ${j.wallMs / 1e3}%6.3f s  ${j.description.take(140)}")
+            out(f"[jobs]   job ${j.id}%4d ${j.wallMs / 1e3}%6.3f s  ${j.site}  ${j.description.take(140)}")
           }
         case "show" =>
           val df = Registry.queries(name)(spark, sfDir)
