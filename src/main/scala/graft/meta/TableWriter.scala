@@ -1298,13 +1298,12 @@ object TableWriter {
       // source (a filter over a corpus table) must not be computed
       // twice for a few key columns. rowDelta's independent delete-key
       // frame, and the empty-input edge (no staged files to read), keep
-      // the direct evaluation. A key source over driver rows only (local
-      // relations) is deduplicated on the driver: no read-back, no
-      // distinct shuffle.
+      // the direct evaluation. A key source of driver rows
+      // ([[graft.ops.Dedup.isDriverRows]]) is deduplicated on the
+      // driver: no read-back, no distinct shuffle.
       val projected = keyData.select(keys.map(col): _*)
       val distinctKeys =
-        if (projected.queryExecution.analyzed.collectLeaves().forall(
-            _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]))
+        if (graft.ops.Dedup.isDriverRows(projected))
           spark.createDataFrame(projected.collect().distinct.toSeq.asJava,
             projected.schema)
         else if (equalityFromData && newEntries.nonEmpty) {

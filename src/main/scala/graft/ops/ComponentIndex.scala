@@ -20,15 +20,16 @@ import graft.meta.IcebergTable
   * components) plus a batch-bounded contracted-graph clustering. A batch
   * whose distinct endpoints fit [[Dedup.LiteralMaxIds]] does all of it
   * on the driver: the clustering is a union-find and the delta commits
-  * from a local relation (see [[fold]] / [[retire]]). Those driver tiers
-  * serve both lookups from the instance's RESIDENT rows: a ledger of at
-  * most [[ComponentIndex.ResidentMaxRows]] rows is read once and moved
-  * forward along each of this instance's own CAS-pinned commits, so a
-  * warm driver-tier fold or retire reads no table. Any other commit
-  * (another instance or process, [[compact]], the distributed tier)
-  * moves the snapshot, and the next call reads the table again; above
-  * the bound the lookups stay two pushed-down collects (the id set, then
-  * the bucket-pruned read).
+  * from a local relation (see [[fold]] / [[retire]]). The first such
+  * call at a snapshot does the two lookups as pushed-down collects (the
+  * id set, then the bucket-pruned read). A further call at the snapshot
+  * the instance last worked at (typically its own last commit) reads a
+  * ledger of at most [[ComponentIndex.ResidentMaxRows]] rows once and
+  * keeps it RESIDENT, moved forward along each of the instance's own
+  * CAS-pinned commits, so a warm driver-tier fold or retire reads no
+  * table. Any other commit (another instance or process, [[compact]],
+  * the distributed tier) moves the snapshot, and the lookups go back to
+  * the pushed-down collects; so does a ledger above the bound.
   *
   * Lifecycle mirrors [[NearDupIndex]] (the two compose: `NearDupIndex
   * .admit` gates a batch and its collision pairs are exactly the new
@@ -94,9 +95,12 @@ final class ComponentIndex private[graft] (
   }
 
   /** The ledger rows this instance keeps between calls, at the snapshot
-    * they were read or committed at. Guarded by the instance lock
-    * (`admitStream`'s batches may fold from another thread). */
+    * they were read or committed at; and the snapshot it last worked at
+    * without them (a pushed-down read or its own commit). Guarded by the
+    * instance lock (`admitStream`'s batches may fold from another
+    * thread). */
   private var resident: Option[ComponentIndex.Resident] = None
+  private var seen: Option[ComponentIndex.Key] = None
 
   /** `t`'s current snapshot as (table uuid, snapshot id, manifest list).
     * The manifest list's name carries a per-commit token: a snapshot id
@@ -111,19 +115,28 @@ final class ComponentIndex private[graft] (
   private def residentOf(t: IcebergTable): Option[ComponentIndex.Resident] =
     synchronized { resident.filter(r => keyOf(t).contains(r.key)) }
 
-  /** [[residentOf]], else one merge-on-read read of `t` kept as the new
-    * resident rows — unless `t` has no snapshot or its live files hold
-    * more than `residentMaxRows` rows by their manifest record counts,
-    * which keep the pushed-down reads. */
+  /** [[residentOf]], else, on a further call at the snapshot this
+    * instance last worked at, one merge-on-read read of `t` kept as the
+    * new resident rows, unless `t`'s live files hold more than
+    * `residentMaxRows` rows by their manifest record counts. The first
+    * call at any other snapshot keeps the pushed-down reads, so a
+    * one-shot fold or retire reads no more than it did without
+    * residency. */
   private def loadResident(t: IcebergTable): Option[ComponentIndex.Resident] =
     synchronized {
       residentOf(t).orElse {
-        resident = keyOf(t).filter(_ =>
-          t.files().map(_.recordCount).sum <= residentMaxRows).map(key =>
-          ComponentIndex.Resident(key, Dedup.longPairs(storeOf(t), "doc_id", "component")))
-        resident
+        val key = keyOf(t)
+        if (key.isEmpty || key != seen) seen = key
+        else resident = key.filter(_ =>
+          t.files().map(_.recordCount).sum <= residentMaxRows).map(k =>
+          ComponentIndex.Resident(k, Dedup.longPairs(storeOf(t), "doc_id", "component")))
+        residentOf(t)
       }
     }
+
+  /** The resident rows, when they are at the table's current snapshot. */
+  private[graft] def residentRows: Option[Seq[(Long, Long)]] =
+    residentOf(engine.load(ref)).map(_.rows)
 
   /** `t`'s rows of the `labels` components, through the bucket-pruned
     * read. */
@@ -131,33 +144,31 @@ final class ComponentIndex private[graft] (
     ScanPlanner.readTableWhereIn(engine.spark, t, "component", labels.map(_.toString))
 
   /** The driver tiers' row lookups at pinned load `t`: the resident rows
-    * (read once on first use), else pushed-down reads of `t` — the
-    * batch's rows by `doc_id`, the components' rows through
-    * [[labelRows]]. `advance` moves the resident rows along this
-    * instance's commit `snapshotId`, CAS-pinned to `t`'s snapshot, while
-    * that commit is still the table's current snapshot. */
+    * ([[loadResident]]), else pushed-down reads of `t` — the batch's
+    * rows by `doc_id`, the components' rows through [[labelRows]].
+    * `advance` follows this instance's commit `snapshotId`, CAS-pinned
+    * to `t`'s snapshot, while that commit is still the table's current
+    * snapshot: it moves the resident rows forward, else marks the
+    * commit's snapshot seen. */
   private final class RowsAt(t: IcebergTable) extends Dedup.AssignRows {
     private lazy val kept = loadResident(t)
-    private val read = Dedup.readRows(storeOf(t), Some(labelRows(t)))
+    private lazy val read = Dedup.readRows(storeOf(t), Some(labelRows(t)))
     def ofDocs(ids: Seq[Long]): Seq[(Long, Long)] = kept.fold(read.ofDocs(ids))(_.ofDocs(ids))
     def ofLabels(labels: Seq[Long]): Seq[(Long, Long)] =
       kept.fold(read.ofLabels(labels))(_.ofLabels(labels))
-    def advance(snapshotId: Long, gone: Seq[Long], added: Seq[(Long, Long)]): Unit =
-      kept.foreach { k =>
-        val now = keyOf(engine.load(ref)).filter(_._2 == snapshotId)
-        ComponentIndex.this.synchronized {
-          if (resident.exists(_ eq k)) resident = now.map(k.advance(_, gone, added))
+    def advance(snapshotId: Long, gone: Seq[Long], added: Seq[(Long, Long)]): Unit = {
+      val now = keyOf(engine.load(ref)).filter(_._2 == snapshotId)
+      ComponentIndex.this.synchronized {
+        kept match {
+          case Some(k) => if (resident.exists(_ eq k)) resident = now.map(k.advance(_, gone, added))
+          case None => seen = now
         }
       }
+    }
   }
 
-  /** The standing sparse assignment (non-trivial memberships only): the
-    * resident rows as a local relation when this instance holds the
-    * current snapshot's, else a read of the table. */
-  def assignments: DataFrame = {
-    val t = engine.load(ref)
-    residentOf(t).fold(storeOf(t))(r => Dedup.pairFrame(engine.spark, r.rows))
-  }
+  /** The standing sparse assignment (non-trivial memberships only). */
+  def assignments: DataFrame = storeOf(engine.load(ref))
 
   /** The corpus-dedup DROP list, for free — VALID ONLY when every doc
     * in the ledger is corpus-resident (bootstrap/fold over edges among
@@ -218,7 +229,7 @@ final class ComponentIndex private[graft] (
         expectedCurrentSnapshotId = t.metadata.currentSnapshotId).snapshotId
     val at = new RowsAt(t)
     Dedup.incrementalDelta(storeOf(t), newEdges, sparseAssign = true,
-      relabelSource = Some(labelRows(t)), resolveInMaxIds, Some(at)) match {
+      relabelSource = Some(labelRows(t)), resolveInMaxIds, at) match {
       case Left(rows) =>
         val upserts = rows.filter { case (d, c) => d != c }
         if (upserts.nonEmpty)
@@ -312,7 +323,7 @@ final class ComponentIndex private[graft] (
   def retire(retired: DataFrame, pairsAmong: DataFrame => DataFrame,
       inMaxIds: Int = Dedup.LiteralMaxIds): DataFrame = {
     val ids = retired.select(col("doc_id"))
-    if (retired.isLocal) {
+    if (Dedup.isDriverRows(retired)) {
       val lits = ids.collect().map(_.getLong(0)).distinct.toIndexedSeq
       if (inMaxIds > 0 && lits.size <= inMaxIds) return retireOnDriver(lits, pairsAmong)
     }
@@ -432,8 +443,10 @@ final class ComponentIndex private[graft] (
 
 object ComponentIndex {
   /** The largest ledger (live rows by manifest record counts) an
-    * instance keeps resident on the driver: 16 MB as two long arrays. */
-  private[graft] val ResidentMaxRows: Long = 1L << 20
+    * instance loads resident on the driver: 2 MB as two long arrays. At
+    * this size the loading call costs what its two pushed-down collects
+    * cost; at 2^20 rows it costs about a second more (4 vCPU). */
+  private[graft] val ResidentMaxRows: Long = 1L << 17
 
   /** A table snapshot: (table uuid, snapshot id, manifest list). */
   private type Key = (String, Long, String)

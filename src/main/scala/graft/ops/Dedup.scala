@@ -3,6 +3,7 @@ package graft.ops
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -419,7 +420,7 @@ object Dedup {
       relabelSource: Option[Seq[Long] => DataFrame] = None,
       resolveInMaxIds: Int = LiteralMaxIds): DataFrame =
     incrementalDelta(assign, newEdges, sparseAssign, relabelSource,
-      resolveInMaxIds) match {
+      resolveInMaxIds, readRows(assign, relabelSource)) match {
       case Left(rows) => pairFrame(assign.sparkSession, rows)
       case Right(delta) => delta
     }
@@ -433,35 +434,38 @@ object Dedup {
 
   /** [[AssignRows]] as pushed-down collects: `assign` filtered on
     * `doc_id`, and `relabelSource`'s read (else `assign` filtered on
-    * `component`). `assign` is built on first use. */
-  private[graft] def readRows(assign: => DataFrame,
+    * `component`). */
+  private[graft] def readRows(assign: DataFrame,
       relabelSource: Option[Seq[Long] => DataFrame]): AssignRows = new AssignRows {
-    private lazy val store = assign
     def ofDocs(ids: Seq[Long]) = longPairs(
-      store.filter(col("doc_id").isin(ids: _*)), "doc_id", "component")
+      assign.filter(col("doc_id").isin(ids: _*)), "doc_id", "component")
     def ofLabels(labels: Seq[Long]) = longPairs(relabelSource match {
       case Some(read) => read(labels)
-      case None => store.filter(col("component").isin(labels: _*))
+      case None => assign.filter(col("component").isin(labels: _*))
     }, "doc_id", "component")
   }
 
+  /** Whether `df` is rows already on the driver: its optimized plan is
+    * one local relation (a `createDataFrame`, a renaming `toDF`, and
+    * projections or filters of one), so collecting it runs no job. */
+  private[graft] def isDriverRows(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
   /** [[incrementalComponents]] with the tier visible: `Left` is the
     * driver tier's delta rows, `Right` the distributed tier's plan.
-    * `driverRows` serves the driver tier's two lookups (default:
-    * [[readRows]] of `assign` and `relabelSource`); `assign` is only
-    * built if a tier reads it. */
+    * `driverRows` serves the driver tier's two lookups; `assign` is
+    * only built for the distributed tier. */
   private[graft] def incrementalDelta(assign: => DataFrame, newEdges: DataFrame,
       sparseAssign: Boolean,
       relabelSource: Option[Seq[Long] => DataFrame],
       resolveInMaxIds: Int,
-      driverRows: Option[AssignRows] = None): Either[Seq[(Long, Long)], DataFrame] = {
-    lazy val store = assign
+      driverRows: AssignRows): Either[Seq[(Long, Long)], DataFrame] = {
     // a local edge frame is driver rows already (no job to read it);
     // any other plan is batch-bounded and consumed more than once —
     // materialize once (skipped when the caller already checkpointed
     // exactly this shape, e.g. the semantic gate's edge set) and probe
     // its distinct endpoints in ONE bounded job ([[literalIds]])
-    val local = if (newEdges.isLocal) Some(longPairs(newEdges, "a_id", "b_id")) else None
+    val local = if (isDriverRows(newEdges)) Some(longPairs(newEdges, "a_id", "b_id")) else None
     val e = if (local.isDefined) newEdges.select(col("a_id"), col("b_id"))
       else materializedAs(newEdges, Seq("a_id", "b_id")).getOrElse(
         newEdges.select(col("a_id"), col("b_id")).localCheckpoint())
@@ -474,10 +478,9 @@ object Dedup {
       case None => literalIds(idFrame, resolveInMaxIds)
     }
     lits match {
-      case Some(ids) => Left(driverDelta(
-        driverRows.getOrElse(readRows(store, relabelSource)),
+      case Some(ids) => Left(driverDelta(driverRows,
         local.getOrElse(longPairs(e, "a_id", "b_id")), ids, sparseAssign))
-      case None => Right(distributedDelta(store, e, idFrame.localCheckpoint(),
+      case None => Right(distributedDelta(assign, e, idFrame.localCheckpoint(),
         sparseAssign, relabelSource))
     }
   }

@@ -10,10 +10,11 @@ import graft.SparkSpec
 import graft.api.Engine
 import graft.obs.JobCensus
 
-/** The component ledger's resident rows ([[ComponentIndex]] keeps them
+/** The component ledger's resident rows ([[ComponentIndex]] loads them
+  * on a further call at the snapshot it last worked at and keeps them
   * between calls at `(table uuid, snapshot id)`) give the same deltas and
   * tables as an instance that reads the table every time (bound 0), and
-  * are re-read after any commit the instance did not make. */
+  * are dropped after any commit the instance did not make. */
 class LedgerResidentSpec extends SparkSpec {
   import spark.implicits._
 
@@ -68,14 +69,18 @@ class LedgerResidentSpec extends SparkSpec {
       val s = ids.collect().map(_.getLong(0)).toSet
       edgeFrame(edges.filter(p => s(p._1) && s(p._2)))
     }
+    var calls = 0
     def check(step: String, a: DataFrame, b: DataFrame): Unit = {
+      calls += 1
       assert(rows(a) == rows(b), s"$step: returned rows differ")
       val expected = closure(edges)
       assert(tableRows(res) == expected, s"$step: resident ledger's table")
       assert(tableRows(read) == expected, s"$step: reading ledger's table")
-      val kept = res.assignments
-      assert(kept.isLocal, s"$step: rows not resident")
-      assert(rows(kept) == expected, s"$step: resident rows")
+      assert(read.residentRows.isEmpty, s"$step: rows resident at bound 0")
+      // the first call after bootstrap keeps the pushed-down reads
+      val kept = res.residentRows
+      assert(kept.isDefined == calls > 1, s"$step: resident after $calls calls")
+      kept.foreach(k => assert(k.sorted == expected, s"$step: resident rows"))
     }
     def labels: Seq[Long] = closure(edges).map(_._2).distinct
     def fold(step: String, batch: Seq[(Long, Long)]): Unit = {
@@ -109,6 +114,24 @@ class LedgerResidentSpec extends SparkSpec {
         retire(s"$step singletons", Seq(9999L, 9999L))
     }
     assert(rows(res.assignments) == tableRows(read))
+    assert(res.residentRows.map(_.sorted).contains(tableRows(read)))
+  }
+
+  test("a one-shot fold keeps the pushed-down reads; the next call loads the rows") {
+    val boot = (0L until 40L by 2L).map(i => (i, i + 1L))
+    val e = warehouse()
+    ledger(e, "ns.oneshot", boot)
+    val idx = new ComponentIndex(e, "ns.oneshot", 8)
+    idx.fold(edgeFrame(Seq((1L, 2L))))
+    assert(idx.residentRows.isEmpty, "a first fold loaded the whole ledger")
+    val left = boot.filterNot(_._1 == 0L) :+ ((1L, 2L))
+    idx.retire(idFrame(Seq(0L)), ids => {
+      val s = ids.collect().map(_.getLong(0)).toSet
+      edgeFrame(left.filter(p => s(p._1) && s(p._2)))
+    })
+    val expected = closure(left)
+    assert(idx.residentRows.map(_.sorted).contains(expected))
+    assert(rows(idx.assignments) == expected)
   }
 
   test("commits by others move the snapshot: the next fold re-reads the table") {
@@ -125,12 +148,14 @@ class LedgerResidentSpec extends SparkSpec {
       ss
     }
     foldA(Seq((2L, 3L)))
-    assert(onlyCommits(foldA(Seq((3L, 4L)))), "a warm fold reads no table")
+    foldA(Seq((3L, 4L)))
+    assert(onlyCommits(foldA(Seq((4L, 5L)))), "a warm fold reads no table")
     def readsAfter(foreign: => Unit): Unit = {
       foreign
-      assert(!a.assignments.isLocal, "rows of an older snapshot served")
+      assert(a.residentRows.isEmpty, "rows of an older snapshot served")
       val ss = foldA(Seq((edges.last._2, edges.last._2 + 1)))
       assert(ss.exists(_.startsWith("graft.ops.Dedup$.longPairs")), s"no read: $ss")
+      assert(a.residentRows.isEmpty)
     }
     readsAfter { edges += ((11L, 12L)); b.fold(edgeFrame(Seq((11L, 12L)))) }
     readsAfter(assert(a.compact().isDefined))
@@ -150,7 +175,7 @@ class LedgerResidentSpec extends SparkSpec {
     a.fold(edgeFrame(Seq((2L, 3L))))
     a.fold(edgeFrame(Seq((3L, 4L))))
     val heldId = e.load("ns.reuse").metadata.currentSnapshotId.get
-    assert(a.assignments.isLocal)
+    assert(a.residentRows.isDefined)
     // back to the bootstrap snapshot, drop both folds' snapshots, and
     // commit two other folds: the second gets the held snapshot's id
     e.rollback("ns.reuse", bootId)
@@ -160,7 +185,7 @@ class LedgerResidentSpec extends SparkSpec {
     b.fold(edgeFrame(Seq((21L, 22L))))
     assert(e.load("ns.reuse").metadata.currentSnapshotId.contains(heldId))
     val expected = closure(boot ++ Seq((11L, 12L), (21L, 22L)))
-    assert(!a.assignments.isLocal)
+    assert(a.residentRows.isEmpty)
     assert(rows(a.assignments) == expected)
     a.fold(edgeFrame(Seq((1L, 30L))))
     assert(rows(a.assignments) == closure(boot ++ Seq((11L, 12L), (21L, 22L), (1L, 30L))))
@@ -171,7 +196,8 @@ class LedgerResidentSpec extends SparkSpec {
     val e = warehouse()
     val a = ledger(e, "ns.cas", base)
     val b = new ComponentIndex(e, "ns.cas", 8)
-    // both warm at the same snapshot, then fold off it concurrently
+    // both have worked at the same snapshot, so their concurrent folds
+    // off it load it resident
     a.fold(edgeFrame(Seq((2L, 3L))))
     b.fold(edgeFrame(Seq((3L, 3L))))
     val e1 = Seq((3L, 10L))
@@ -186,8 +212,8 @@ class LedgerResidentSpec extends SparkSpec {
     f1.get(); f2.get(); pool.shutdown()
     val expected = closure(base ++ Seq((2L, 3L)) ++ e1 ++ e2)
     assert(rows(a.assignments) == expected)
-    assert(rows(b.assignments) == expected)
     assert(tableRows(a) == expected)
+    for (idx <- Seq(a, b)) assert(idx.residentRows.forall(_.sorted == expected))
   }
 
   test("a ledger above the resident bound keeps the table reads") {
@@ -197,7 +223,7 @@ class LedgerResidentSpec extends SparkSpec {
     idx.fold(edgeFrame(Seq((1L, 2L))))
     val ss = sites(idx.fold(edgeFrame(Seq((3L, 4L)))))
     assert(ss.exists(_.startsWith("graft.ops.Dedup$.longPairs")), s"no read: $ss")
-    assert(!idx.assignments.isLocal)
+    assert(idx.residentRows.isEmpty)
     assert(rows(idx.assignments) == closure(boot ++ Seq((1L, 2L), (3L, 4L))))
   }
 
@@ -206,10 +232,12 @@ class LedgerResidentSpec extends SparkSpec {
     val e = warehouse()
     val idx = ledger(e, "ns.warm", boot)
     idx.fold(edgeFrame(Seq((1L, 2L))))
-    val foldSites = sites(idx.fold(edgeFrame(Seq((3L, 4L), (5L, 6L), (100L, 7L)))))
+    idx.fold(edgeFrame(Seq((9L, 10L))))
+    // renaming `toDF` frames are driver rows too
+    val foldSites = sites(idx.fold(Seq((3L, 4L), (5L, 6L), (100L, 7L)).toDF("a_id", "b_id")))
     assert(foldSites.nonEmpty && onlyCommits(foldSites), s"fold jobs: $foldSites")
-    val edges = boot ++ Seq((1L, 2L), (3L, 4L), (5L, 6L), (100L, 7L))
-    val retireSites = sites(idx.retire(idFrame(Seq(4L, 20L)), ids => {
+    val edges = boot ++ Seq((1L, 2L), (9L, 10L), (3L, 4L), (5L, 6L), (100L, 7L))
+    val retireSites = sites(idx.retire(Seq(4L, 20L).toDF("doc_id"), ids => {
       val s = ids.collect().map(_.getLong(0)).toSet
       edgeFrame(edges.filter(p => s(p._1) && s(p._2)))
     }))
