@@ -1088,7 +1088,8 @@ class Engine(val spark: SparkSession, warehouseDir: String,
     *      ([[graft.ops.AnnIndex.retire]]; quantizer untouched).
     *
     * Every step is one commit on its own table; steps for absent state
-    * are skipped. `ids` is a one-column frame named `idColumn`. Returns
+    * are skipped. An index that was created but never admitted anything
+    * is a no-op retire: the step reads it as empty and does not fail. `ids` is a one-column frame named `idColumn`. Returns
     * what happened per surface; `ledgerRemaining` is the re-clustered
     * post-retire assignment of the affected components' surviving
     * members (lazy, affected-bounded).
@@ -1814,8 +1815,6 @@ class Engine(val spark: SparkSession, warehouseDir: String,
     // paths (spec / schema / id / value gates) leave nothing behind,
     // and the observed version pins the first commit attempt
     val firstPass = validate()
-    var seenV = firstPass._1
-    var props = firstPass._2
     val dir = java.nio.file.Paths.get(tableDir(ref))
     // canonical value rendering used the SAME declared schema the gates
     // validated (a racer can only widen key types — CAS-caught and
@@ -1837,26 +1836,18 @@ class Engine(val spark: SparkSession, warehouseDir: String,
     // Any failure before the commit lands unlinks the adopted files —
     // a rejected or conflict-exhausted drop leaves no orphans.
     try {
-      var attempt = 0
-      var res: graft.meta.TableWriter.CommitResult = null
-      while (res == null) {
-        try res = graft.meta.TableWriter.commitFiles(spark, tableDir(ref), rels,
+      val res = graft.meta.TableWriter.retryOnConflict { attempt =>
+        // rels stay as linked: a racer can only widen the key types
+        // (anything else refuses in validate), and widening keeps the
+        // canonical rendering byte-identical
+        val (seenV, props, _) = if (attempt == 0) firstPass else validate()
+        graft.meta.TableWriter.commitFiles(spark, tableDir(ref), rels,
           removePaths = Set.empty, operation = "append",
           extraSummary = Map("adopted-from" -> sourceDir),
           expectedMetadataVersion = Some(seenV),
           extraProperties = props,
           absentColumns = src.partitionKeys.toSet,
           knownFooters = relFooters)
-        catch {
-          case e: graft.meta.CommitConflictException =>
-            if (attempt >= 5) throw e
-            attempt += 1; Thread.sleep(20L * attempt)
-            // rels stay as linked: a racer can only widen the key types
-            // (anything else refuses in validate), and widening keeps
-            // the canonical rendering byte-identical
-            val revalidated = validate()
-            seenV = revalidated._1; props = revalidated._2
-        }
       }
       graft.meta.PointerSync.sync(catalog, ref, dir.toString)
       res

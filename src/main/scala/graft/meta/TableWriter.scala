@@ -59,7 +59,7 @@ object TableWriter {
       "a staged (write-audit-publish) append cannot also target a branch")
     commit(spark, tableDir, Some(df), "append", keepPredicate = _ => true,
       branch = branch, extraSummary = extraSummary,
-      extraProperties = extraProperties, retryOnConflict = true,
+      extraProperties = extraProperties, rebaseOnConflict = true,
       wapId = wapId)
   }
 
@@ -95,7 +95,7 @@ object TableWriter {
       expectedCurrentSnapshotId: Option[Long] = None): CommitResult = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     commit(spark, tableDir, Some(df), "overwrite", keepPredicate = _ => true,
-      equalityDeleteOn = Some(keyCols), retryOnConflict = true,
+      equalityDeleteOn = Some(keyCols), rebaseOnConflict = true,
       expectedCurrentSnapshotId = expectedCurrentSnapshotId)
   }
 
@@ -112,7 +112,7 @@ object TableWriter {
     require(keyCols.nonEmpty, "rowDelta needs at least one key column")
     commit(spark, tableDir, Some(df), "overwrite", keepPredicate = _ => true,
       equalityDeleteOn = Some(keyCols),
-      equalityDeleteSource = Some(deleteKeys), retryOnConflict = true,
+      equalityDeleteSource = Some(deleteKeys), rebaseOnConflict = true,
       expectedCurrentSnapshotId = expectedCurrentSnapshotId)
   }
 
@@ -709,7 +709,7 @@ object TableWriter {
       carryDeletes: Boolean = false,
       extraSummary: Map[String, String] = Map.empty,
       extraProperties: Map[String, String] = Map.empty,
-      retryOnConflict: Boolean = false,
+      rebaseOnConflict: Boolean = false,
       wapId: Option[String] = None,
       expectedCurrentSnapshotId: Option[Long] = None): CommitResult = {
 
@@ -959,41 +959,50 @@ object TableWriter {
       case _ => Seq.empty
     }
 
-    var attempt = 0
-    var result: CommitResult = null
-    while (result == null) {
+    def attempt(n: Int): CommitResult = {
       val (curMd, curBaseV, curSnapId) =
-        if (attempt == 0) (md, baseV, snapId)
+        if (n == 0) (md, baseV, snapId)
         else {
           val (m, v) = IcebergMeta.loadVersioned(tableDir)
           require(m.currentSchemaId == md.currentSchemaId &&
             m.defaultSpecId == md.defaultSpecId,
             "concurrent schema/spec evolution during commit — retry aborted")
-          checkExpected(m.currentSnapshotId)
           (m, v, m.snapshots.map(_.snapshotId).maxOption.getOrElse(999L) + 1L)
         }
-      val entries =
-        if (attempt == 0) newEntries
-        else newEntries.map(_.copy(snapshotId = curSnapId))
-      try {
-        result = publishSnapshot(spark, dir, tableDir, curMd, curBaseV, fields,
-          spec.specId, curSnapId, entries, operation, keepPredicate, branch,
-          equalityDeleteOn.map(keys =>
-            (equalityDeleteSource.getOrElse(data.get), keys)), carryDeletes,
-          extraSummary, extraProperties, wapId,
-          equalityFromData = equalityDeleteSource.isEmpty)
-      } catch {
-        // append/upsert keep every pre-existing file, so replaying the
-        // SAME logical commit on the winner's metadata is exactly the
-        // serial execution — rewrites (replace/overwrite of named files)
-        // validated against a stale parent must surface the conflict
-        case e: CommitConflictException =>
-          if (!retryOnConflict || attempt >= 7) throw e
-          attempt += 1
-          Thread.sleep(10L * attempt)
+      publishSnapshot(spark, dir, tableDir, curMd, curBaseV, fields,
+        spec.specId, curSnapId,
+        if (n == 0) newEntries else newEntries.map(_.copy(snapshotId = curSnapId)),
+        operation, keepPredicate, branch,
+        equalityDeleteOn.map(keys =>
+          (equalityDeleteSource.getOrElse(data.get), keys)), carryDeletes,
+        extraSummary, extraProperties, wapId,
+        equalityFromData = equalityDeleteSource.isEmpty)
+    }
+    // append/upsert keep every pre-existing file, so replaying the SAME
+    // logical commit on the winner's metadata is exactly the serial
+    // execution. Rewrites (replace/overwrite of named files) validated
+    // against a stale parent, and commits pinned to the snapshot their
+    // data was derived from, must surface the conflict instead.
+    if (rebaseOnConflict && expectedCurrentSnapshotId.isEmpty) retryOnConflict(attempt)
+    else attempt(0)
+  }
+
+  /** The engine's one conflict policy: run `body(attempt)` and, when it
+    * throws [[CommitConflictException]], run it again — the WHOLE body
+    * (reload, re-derive, re-commit), never just the publish — up to 8
+    * attempts with a 10 ms × attempt backoff. `attempt` counts from 0,
+    * so a body can revalidate on `attempt > 0`. */
+  def retryOnConflict[A](body: Int => A): A = {
+    var n = 0
+    while (true) {
+      try return body(n)
+      catch {
+        case _: CommitConflictException if n < 7 =>
+          n += 1
+          Thread.sleep(10L * n)
       }
     }
-    result
+    throw new IllegalStateException("unreachable")
   }
 
   /** Commit a set of ALREADY-WRITTEN final data files (relative path +

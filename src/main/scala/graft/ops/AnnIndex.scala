@@ -30,22 +30,24 @@ import graft.api.Engine
   * centroid matrix is driver-state-sized, the same contract as
   * [[Clustering.kmeans]]'s per-iteration collect.
   *
-  * Lifecycle: [[create]] once, [[bootstrap]] from the standing corpus
-  * (the ONLY call that runs kmeans), then [[admit]] per ingest batch —
+  * The table lifecycle ([[create]], [[compact]], retires, residual
+  * reads, the gate tail) lives in [[PersistedIndex]]; this class keeps
+  * the quantizer. [[create]] once, [[bootstrap]] from the standing
+  * corpus (the ONLY call that runs kmeans), then [[admit]] per ingest
+  * batch —
   * new vectors are assigned to the FROZEN centroids (map-side argmin,
   * no retrain, one append commit) and land in their lists for the very
   * next probe. Re-train by rebuilding: quantizer drift under
   * distribution shift is a rebuild decision, not an incremental one
-  * (the standard IVF posture). [[compact]] folds per-batch small files
-  * exactly like the near-dup index.
+  * (the standard IVF posture).
   */
 final class AnnIndex(
-    val engine: Engine,
-    val ref: String,
+    engine: Engine,
+    ref: String,
     val kClusters: Int = 4,
     val iters: Int = 2,
     val pqM: Int = 0,
-    val pqK: Int = 16) {
+    val pqK: Int = 16) extends PersistedIndex(engine, ref) {
 
   /** With `pqM > 0` the index is IVF-PQ: every row additionally carries
     * `codes` — `pqM` per-subspace product-quantization codes (one byte
@@ -65,12 +67,12 @@ final class AnnIndex(
       Seq(StructField("codes", ArrayType(IntegerType), nullable = false))
     else Nil))
 
-  private val CentroidsProp = AnnIndex.CentroidsProp
+  /** Identity-partitioned on the cluster id — each partition is one
+    * inverted list. */
+  protected def partitionDecls: Seq[String] = Seq("cluster")
+  protected def idColumn: String = "vec_id"
 
-  /** Create the (empty) index table, identity-partitioned on the cluster
-    * id — each partition is one inverted list. */
-  def create(): Unit =
-    engine.createTable(ref, schema, Seq("cluster"))
+  private val CentroidsProp = AnnIndex.CentroidsProp
 
   private def assignedRows(emb: DataFrame, cents: Seq[Seq[Double]],
       cbs: Option[Seq[Seq[Seq[Double]]]]): DataFrame = {
@@ -170,7 +172,7 @@ final class AnnIndex(
   }
 
   /** The standing index (all lists). */
-  def signatures: DataFrame = engine.readTable(ref)
+  def signatures: DataFrame = rowsOf(engine.load(ref))
 
   /** [[candidates]] against an already-pinned table — every internal
     * serving path routes here so the candidate scan shares its caller's
@@ -432,67 +434,19 @@ final class AnnIndex(
           col("c_norm").as("v_norm")),
         Seq("vec_id", "cluster", "v_norm"), "left_semi")
       .select("vec_id")
-      // distinct: the flag attaches via a LEFT join below, so a batch
-      // that carries duplicate vec_id rows must not multiply survivors
-      .distinct()
-    // the batch-vs-index cosine collision join, shared by both shapes
-    def collisions = assigned.join(cands, Seq("cluster"))
+    // the batch-vs-index cosine collision pairs
+    val pairs = assigned.join(cands, Seq("cluster"))
       .filter(col("c_id") =!= col("vec_id"))
       .filter(Similarity.cosineFromNorms(
         "c_emb", "embedding", "c_norm", "v_norm") >= threshold)
-    // with a component ledger attached, the fold needs the FULL pair
-    // structure (a vector bridging two standing components must merge
-    // them — a per-vector flag loses that edge), and it feeds both the
-    // gate and the fold — materialize once and derive the flag set from
-    // it. Without a ledger keep the original lazy single-consumer shape
-    // (and its pinned 3-job census).
-    val collisionPairs = components.map { _ =>
-      collisions.select("vec_id", "c_id").distinct()
-        .join(selfIndexed, Seq("vec_id"), "left_anti") // redelivery ≠ dup
-        .localCheckpoint()
-    }
-    val flagged = collisionPairs match {
-      case Some(pairs) => pairs.select("vec_id").distinct()
-      case None => collisions
-        .select("vec_id").distinct()
-        .join(selfIndexed, Seq("vec_id"), "left_anti") // redelivery ≠ dup
-    }
-    // job 2 — one eager checkpoint carries the survivor rows AND their
-    // redelivery flag, so the fresh-rows split below never re-runs the
-    // collision join
-    val flaggedSurv = assigned.join(flagged, Seq("vec_id"), "left_anti")
-      .join(selfIndexed.withColumn("__gr_self", lit(true)),
-        Seq("vec_id"), "left")
-      .withColumn("__gr_self", coalesce(col("__gr_self"), lit(false)))
-      .localCheckpoint()
-    val survivors = flaggedSurv.drop("__gr_self")
-    val fresh = flaggedSurv.filter(!col("__gr_self")).drop("__gr_self")
-    // dup-cluster ledger: fold this batch's COMPLETE cosine collision
-    // pair set — batch-vs-index AND intra-batch (both endpoints
-    // admitted; the gate flag set above is untouched; both-endpoint
-    // selfIndexed suppression keeps redelivery idempotent) — into the
-    // persisted assignment. Runs BEFORE the append and with conflict
-    // retry, for the same two reasons as the minhash gate
-    // ([[NearDupIndex.admitStream]]): an append-first crash window
-    // would lose admitted-admitted intra edges forever (the
-    // redelivered batch suppresses them as selfIndexed), and a SHARED
-    // ledger's concurrent fold/retire (the other gate, Engine.forget)
-    // must surface as a re-derived retry, not kill the caller.
-    // Collision-free batches never load the ledger.
-    components.zip(collisionPairs).foreach { case (comps, pairs) =>
-      val intra = pairsOf(assigned.select(col("vec_id"), col("cluster"),
-          col("v_norm"), col("embedding")), threshold)
-        .join(selfIndexed.select(col("vec_id").as("a_id")),
-          Seq("a_id"), "left_anti")
-        .join(selfIndexed.select(col("vec_id").as("b_id")),
-          Seq("b_id"), "left_anti")
-      // ONE eager checkpoint: the emptiness probe, the fold's several
-      // passes, and any CAS retry reuse the materialized edge set
-      // instead of re-running the within-cluster cosine self-join
-      val edges = pairs.select(col("vec_id").as("a_id"),
-        col("c_id").as("b_id")).unionByName(intra).localCheckpoint()
-      if (!edges.isEmpty) comps.foldWithRetry(edges)
-    }
+      .select(col("vec_id").as("a_id"), col("c_id").as("b_id"))
+    // job 2 — the gate's one checkpoint of the survivors and their
+    // redelivery flag; with a ledger, the batch-vs-index and intra-batch
+    // cosine pairs fold in first (the fold-before-append ORDER and the
+    // conflict RETRY are `PersistedIndex.foldEdges`')
+    val (survivors, fresh) = gate(assigned, pairs, selfIndexed, components,
+      pairsOf(assigned.select(col("vec_id"), col("cluster"), col("v_norm"),
+        col("embedding")), threshold))
     // job 3 — emptiness probe on the checkpointed rows (limit-1 scan)
     if (!fresh.isEmpty) { engine.append(ref, fresh); () }
     assigned0.unpersist()
@@ -514,14 +468,9 @@ final class AnnIndex(
       dedupWithinBatch: Boolean = false,
       components: Option[ComponentIndex] = None)(
       onSurvivors: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        onSurvivors(admitIfNovel(batch, threshold, dedupWithinBatch,
-          components))
-      }
-      .start()
+    stream(vecs, checkpointDir) { batch =>
+      onSurvivors(admitIfNovel(batch, threshold, dedupWithinBatch, components))
+    }
 
   /** REBUILD the quantizer — the action [[AnnIndex.drift]] recommends
     * when admissions have outgrown the bootstrap distribution: retrain
@@ -575,11 +524,6 @@ final class AnnIndex(
     cents
   }
 
-  /** Fold per-batch small files back into one per list (the identity
-    * partition layout is preserved by the rewrite). */
-  def compact(smallBytes: Long = 32L * 1024 * 1024): Option[graft.meta.TableWriter.CommitResult] =
-    engine.rewriteSmallFiles(ref, smallBytes = smallBytes)
-
   /** RETIRE vectors from the index (corpus deletion): one pure keyed
     * equality-delete commit — retired vectors stop being served by
     * every frozen-quantizer path (search, decontam, hard negatives) and
@@ -590,21 +534,13 @@ final class AnnIndex(
     * still compares ADMISSIONS against the bootstrap baseline, and a
     * mass deletion that DOES change the data distribution is what
     * [[rebuild]] is for. */
-  def retire(vecIds: Seq[Long]): graft.meta.TableWriter.CommitResult = {
-    val spark2 = engine.spark
-    import spark2.implicits._
-    retire(vecIds.toDF("vec_id"))
-  }
+  def retire(vecIds: Seq[Long]): graft.meta.TableWriter.CommitResult =
+    deleteIds(idFrame(vecIds))
 
   /** [[retire]] with the retired ids as a DataFrame (`vec_id` column) —
-    * the corpus-scale form: a compliance batch of millions of ids never
-    * becomes a driver-side literal (the equality-delete keys distribute
-    * through the commit like any other frame). */
+    * the corpus-scale form ([[PersistedIndex.deleteIds]]). */
   def retire(vecIds: DataFrame): graft.meta.TableWriter.CommitResult =
-    // empty insert off the TABLE's live schema, not the handle's — a
-    // default-constructed handle serving a PQ index lacks `codes`
-    engine.rowDelta(ref, signatures.limit(0), Seq("vec_id"),
-      vecIds.select("vec_id"))
+    deleteIds(vecIds)
 
   /** Residual SEMANTIC candidate pairs among `ids` — the cosine twin of
     * [[NearDupIndex.pairsAmong]] and the canonical `pairsAmong` provider
@@ -624,36 +560,9 @@ final class AnnIndex(
     * that were never admitted; for those use [[pairsFromVecs]] over the
     * raw embedding store. */
   def pairsAmong(threshold: Double, inMaxIds: Int = Dedup.LiteralMaxIds)(
-      ids: DataFrame): DataFrame = {
-    // literal-vs-join threshold, the [[NearDupIndex.pairsAmong]] twin:
-    // a bounded member set point-set-prunes through driver-known
-    // bounds; a giant affected component never comes to the driver —
-    // the index semi-joins the id frame broadcast-side instead
-    val rids = ids.select(col("doc_id").as("vec_id")).distinct()
-      .localCheckpoint()
-    val rows = (Dedup.literalIds(rids, inMaxIds) match {
-      case Some(seq) if seq.isEmpty =>
-        engine.spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(
-            StructField("vec_id", LongType, nullable = false),
-            StructField("cluster", IntegerType, nullable = false),
-            StructField("v_norm", DoubleType, nullable = false),
-            StructField("embedding", ArrayType(FloatType), nullable = false))))
-      case Some(seq) =>
-        ScanPlanner.readTableWhereInSet(engine.spark, engine.load(ref),
-          "vec_id", seq)
-          .select(col("vec_id"), col("cluster"), col("v_norm"), col("embedding"))
-      case None =>
-        // hint only under the ceiling — a nation-scale member set must
-        // not be FORCED through the driver as a broadcast
-        ScanPlanner.readTable(engine.spark, engine.load(ref))
-          .join(Dedup.hintIf(Dedup.fitsBroadcast(rids))(rids),
-            Seq("vec_id"), "left_semi")
-          .select(col("vec_id"), col("cluster"), col("v_norm"), col("embedding"))
-    }).localCheckpoint()
-    pairsOf(rows, threshold)
-  }
+      ids: DataFrame): DataFrame =
+    // the literal-vs-join read is [[PersistedIndex.rowsAmong]]
+    pairsOf(rowsAmong(ids, inMaxIds), threshold)
 
   /** Residual-pair provider from the RAW embedding store — the
     * gate-composed-ledger form ([[graft.ops.Dedup.pairsFromDocs]]'s

@@ -146,6 +146,10 @@ object Compact {
 
     val t = IcebergTable.load(tableDir)
     val live = t.files()
+    // no data files (a fresh table, or one retired while empty: delete
+    // files only) — nothing to fold; pruneDanglingDeletes drops the
+    // dangling deletes
+    if (live.isEmpty) return None
 
     // a table carrying LIVE DELETE FILES cannot be compacted file-subset-
     // wise: rewriting a file from its raw bytes would resurrect rows the

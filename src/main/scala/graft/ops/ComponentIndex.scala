@@ -1,8 +1,6 @@
 package graft.ops
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,10 +29,12 @@ import graft.meta.IcebergTable
   * the distributed tier) moves the snapshot, and the lookups go back to
   * the pushed-down collects; so does a ledger above the bound.
   *
-  * Lifecycle mirrors [[NearDupIndex]] (the two compose: `NearDupIndex
-  * .admit` gates a batch and its collision pairs are exactly the new
-  * edges this index folds): [[create]] once, [[bootstrap]] from the
-  * standing corpus' candidate pairs, then per batch [[fold]].
+  * The table lifecycle ([[create]], [[compact]], the empty-safe read)
+  * lives in [[PersistedIndex]]; this class keeps the union-find ledger.
+  * It composes with [[NearDupIndex]]: `NearDupIndex.admit` gates a batch
+  * and its collision pairs are exactly the new edges this index folds.
+  * [[create]] once, [[bootstrap]] from the standing corpus' candidate
+  * pairs, then per batch [[fold]].
   *
   * Storage is SPARSE: only non-trivial memberships (`doc_id !=
   * component`) are stored — singleton docs are implicit, so the table
@@ -54,10 +54,10 @@ import graft.meta.IcebergTable
   * delete on `doc_id` plus the delta rows, no data-file rewrite.
   */
 final class ComponentIndex private[graft] (
-    val engine: Engine,
-    val ref: String,
+    engine: Engine,
+    ref: String,
     val nBuckets: Int,
-    residentMaxRows: Long) {
+    residentMaxRows: Long) extends PersistedIndex(engine, ref) {
 
   def this(engine: Engine, ref: String, nBuckets: Int = 32) =
     this(engine, ref, nBuckets, ComponentIndex.ResidentMaxRows)
@@ -66,10 +66,10 @@ final class ComponentIndex private[graft] (
     StructField("doc_id", LongType, nullable = false),
     StructField("component", LongType, nullable = false)))
 
-  /** Create the (empty) assignment table, bucket-partitioned on the
-    * RELABEL key (see class doc for why `component`, not `doc_id`). */
-  def create(): Unit =
-    engine.createTable(ref, schema, Seq(s"bucket[$nBuckets](component)"))
+  /** Bucket-partitioned on the RELABEL key (see class doc for why
+    * `component`, not `doc_id`). */
+  protected def partitionDecls: Seq[String] = Seq(s"bucket[$nBuckets](component)")
+  protected def idColumn: String = "doc_id"
 
   /** Seed the assignment from the standing corpus' candidate pairs —
     * the ONLY call that runs global connected components. A pair-free
@@ -80,18 +80,6 @@ final class ComponentIndex private[graft] (
       .filter(col("doc_id") =!= col("component")).localCheckpoint()
     if (!rows.isEmpty) engine.append(ref, rows)
     ()
-  }
-
-  private def emptyStore: DataFrame =
-    engine.spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-
-  /** The table's live rows off an already-pinned load — empty-safe (a
-    * fresh or fully-singleton index has no snapshot or no files). */
-  private def storeOf(t: IcebergTable): DataFrame = {
-    if (t.metadata.currentSnapshotId.isEmpty) return emptyStore
-    val files = t.files()
-    if (files.isEmpty) emptyStore
-    else ScanPlanner.readFiles(engine.spark, t, files)
   }
 
   /** The ledger rows this instance keeps between calls, at the snapshot
@@ -129,7 +117,7 @@ final class ComponentIndex private[graft] (
         if (key.isEmpty || key != seen) seen = key
         else resident = key.filter(_ =>
           t.files().map(_.recordCount).sum <= residentMaxRows).map(k =>
-          ComponentIndex.Resident(k, Dedup.longPairs(storeOf(t), "doc_id", "component")))
+          ComponentIndex.Resident(k, Dedup.longPairs(rowsOf(t), "doc_id", "component")))
         residentOf(t)
       }
     }
@@ -152,7 +140,7 @@ final class ComponentIndex private[graft] (
     * commit's snapshot seen. */
   private final class RowsAt(t: IcebergTable) extends Dedup.AssignRows {
     private lazy val kept = loadResident(t)
-    private lazy val read = Dedup.readRows(storeOf(t), Some(labelRows(t)))
+    private lazy val read = Dedup.readRows(rowsOf(t), Some(labelRows(t)))
     def ofDocs(ids: Seq[Long]): Seq[(Long, Long)] = kept.fold(read.ofDocs(ids))(_.ofDocs(ids))
     def ofLabels(labels: Seq[Long]): Seq[(Long, Long)] =
       kept.fold(read.ofLabels(labels))(_.ofLabels(labels))
@@ -168,7 +156,7 @@ final class ComponentIndex private[graft] (
   }
 
   /** The standing sparse assignment (non-trivial memberships only). */
-  def assignments: DataFrame = storeOf(engine.load(ref))
+  def assignments: DataFrame = rowsOf(engine.load(ref))
 
   /** The corpus-dedup DROP list, for free — VALID ONLY when every doc
     * in the ledger is corpus-resident (bootstrap/fold over edges among
@@ -228,7 +216,7 @@ final class ComponentIndex private[graft] (
       engine.upsert(ref, upserts, Seq("doc_id"),
         expectedCurrentSnapshotId = t.metadata.currentSnapshotId).snapshotId
     val at = new RowsAt(t)
-    Dedup.incrementalDelta(storeOf(t), newEdges, sparseAssign = true,
+    Dedup.incrementalDelta(rowsOf(t), newEdges, sparseAssign = true,
       relabelSource = Some(labelRows(t)), resolveInMaxIds, at) match {
       case Left(rows) =>
         val upserts = rows.filter { case (d, c) => d != c }
@@ -243,28 +231,24 @@ final class ComponentIndex private[graft] (
     }
   }
 
-  /** [[fold]] with a bounded reload-and-rerun on CAS conflict: a racing
+  /** [[fold]] with a reload-and-rerun on CAS conflict: a racing
     * fold/retire that lands first surfaces as
     * [[graft.meta.CommitConflictException]]; the rerun re-pins the table
     * (picking up the winner's rows) and recomputes the delta, so both
     * edge sets land and the final ledger equals the from-scratch closure
-    * over their union (spec-pinned with two concurrent folds). The
-    * ledger-side twin of [[graft.meta.TableWriter]]'s append
-    * `retryOnConflict` — retried HERE, not inside the commit, because
-    * the DELTA itself must be re-derived from the fresh snapshot (a
-    * commit-level rebase would silently erase the winner's merges, the
-    * exact failure the CAS guard exists to surface). */
-  def foldWithRetry(newEdges: DataFrame, maxAttempts: Int = 7): DataFrame =
-    ComponentIndex.retryOnConflict(maxAttempts)(fold(newEdges))
+    * over their union (spec-pinned with two concurrent folds). Rerun
+    * HERE ([[PersistedIndex.rerunOnConflict]]), not inside the commit,
+    * because the DELTA itself must be re-derived from the fresh snapshot
+    * (a commit-level rebase would silently erase the winner's merges,
+    * the exact failure the CAS guard exists to surface). */
+  def foldWithRetry(newEdges: DataFrame): DataFrame = rerunOnConflict(fold(newEdges))
 
   /** [[retire]]'s conflict-retrying twin of [[foldWithRetry]]: the
     * affected-component surgery re-derives from the fresh snapshot on
     * each attempt. */
   def retireWithRetry(retired: DataFrame,
-      pairsAmong: DataFrame => DataFrame, inMaxIds: Int = Dedup.LiteralMaxIds,
-      maxAttempts: Int = 7): DataFrame =
-    ComponentIndex.retryOnConflict(maxAttempts)(
-      retire(retired, pairsAmong, inMaxIds))
+      pairsAmong: DataFrame => DataFrame): DataFrame =
+    rerunOnConflict(retire(retired, pairsAmong))
 
   /** RETIRE docs from the ledger (corpus deletion / right-to-be-
     * forgotten): removing a doc removes its similarity EDGES, so the
@@ -298,11 +282,8 @@ final class ComponentIndex private[graft] (
     * members (trivial rows included); unaffected components never
     * appear and never shuffle. */
   def retire(retired: Seq[Long],
-      pairsAmong: DataFrame => DataFrame): DataFrame = {
-    val s2 = engine.spark
-    import s2.implicits._
-    retire(retired.toDF("doc_id"), pairsAmong)
-  }
+      pairsAmong: DataFrame => DataFrame): DataFrame =
+    retire(idFrame(retired), pairsAmong)
 
   /** [[retire]] with the retired ids as a DataFrame (`doc_id` column) —
     * the corpus-scale form. Sets at or under `inMaxIds` distinct ids
@@ -351,31 +332,26 @@ final class ComponentIndex private[graft] (
       .distinct.filterNot(gone).sorted
     val kept = remaining.toSet
     val residual = Dedup.longPairs(
-      pairsAmong(ids(remaining)), "a_id", "b_id")
+      pairsAmong(idFrame(remaining)), "a_id", "b_id")
       .filter { case (a, b) => kept(a) && kept(b) }
     val labels = Dedup.minLabels(residual)
     if (affectedRows.nonEmpty) {
       val inserts = labels.toSeq.sorted.filter { case (d, c) => d != c }
       val deleted = affectedRows.map(_._1)
       at.advance(engine.rowDelta(ref, Dedup.pairFrame(spark, inserts),
-        Seq("doc_id"), ids(deleted),
+        Seq("doc_id"), idFrame(deleted),
         expectedCurrentSnapshotId = t.metadata.currentSnapshotId).snapshotId,
         deleted, inserts)
     }
     Dedup.pairFrame(spark, remaining.map(d => d -> labels.getOrElse(d, d)))
   }
 
-  /** A local `doc_id` frame. */
-  private def ids(xs: Seq[Long]): DataFrame =
-    engine.spark.createDataFrame(xs.map(Row(_)).asJava,
-      StructType(Seq(StructField("doc_id", LongType, nullable = false))))
-
   /** The distributed tier of [[retire]] over the checkpointed distinct
     * retired ids `rids`. */
   private def retireDistributed(rids: DataFrame,
       pairsAmong: DataFrame => DataFrame): DataFrame = {
     val t = engine.load(ref)
-    val store = storeOf(t)
+    val store = rowsOf(t)
     // hint ceiling: the explicit broadcast hints below are the
     // mass-deletion form, but a hint FORCES the broadcast regardless of
     // size — probe the checkpointed frame once and drop the hint above
@@ -434,11 +410,6 @@ final class ComponentIndex private[graft] (
         col("doc_id") === col("rid"), "left")
       .select(col("doc_id"), coalesce(col("rc"), col("doc_id")).as("component"))
   }
-
-  /** Fold per-batch small files back into one per bucket (the bucketed
-    * layout is preserved by the rewrite). */
-  def compact(smallBytes: Long = 32L * 1024 * 1024): Option[graft.meta.TableWriter.CommitResult] =
-    engine.rewriteSmallFiles(ref, smallBytes = smallBytes)
 }
 
 object ComponentIndex {
@@ -491,21 +462,5 @@ object ComponentIndex {
       val sorted = rows.sortBy(_._1)
       new Resident(key, sorted.map(_._1).toArray, sorted.map(_._2).toArray)
     }
-  }
-
-  /** Bounded rerun on [[graft.meta.CommitConflictException]] — the whole
-    * BODY re-executes (reload, re-derive, re-commit), never just the
-    * commit. */
-  private[ops] def retryOnConflict[A](maxAttempts: Int)(body: => A): A = {
-    var attempt = 1
-    while (true) {
-      try return body
-      catch {
-        case e: graft.meta.CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
   }
 }

@@ -827,21 +827,6 @@ object Dedup {
         col("band"), col("band_sig")), Seq("band", "band_sig"))
       .select(col("doc_id"), col("corpus_doc_id")).distinct()
 
-  /** LINE-LEVEL BOILERPLATE REMOVAL (the C4/CCNet corpus-dedup pass):
-    * a "line" (here a `sep`-delimited sentence) appearing in at least
-    * `minDf` DISTINCT documents is boilerplate (navigation chrome,
-    * license banners, repeated templates); every document is rebuilt
-    * without those lines, preserving original line order and spelling.
-    * Returns one row per AFFECTED document: line counts and the
-    * rebuilt text (byte-exact, oracle-verifiable).
-    *
-    * Scale shape: one explode, one (line, doc) distinct-count aggregate
-    * over the LINE VOCABULARY (bounded by distinct lines, not corpus
-    * size), one membership join, one per-doc rebuild aggregate — lines
-    * shuffle once each. At 100 TB the membership test is the same plan
-    * with the line column pre-hashed (shuffles 8-byte hashes instead of
-    * strings) and the boilerplate set broadcast — both drop-in column
-    * swaps on this shape. */
   /** Degree distribution of a candidate-pair graph: how many documents
     * have 1, 2, … near-duplicate neighbors. The shape of this histogram
     * is the standard pre-dedup corpus diagnostic — a heavy tail means
@@ -881,6 +866,21 @@ object Dedup {
       .orderBy("source_a", "source_b")
   }
 
+  /** LINE-LEVEL BOILERPLATE REMOVAL (the C4/CCNet corpus-dedup pass):
+    * a "line" (here a `sep`-delimited sentence) appearing in at least
+    * `minDf` DISTINCT documents is boilerplate (navigation chrome,
+    * license banners, repeated templates); every document is rebuilt
+    * without those lines, preserving original line order and spelling.
+    * Returns one row per AFFECTED document: line counts and the
+    * rebuilt text (byte-exact, oracle-verifiable).
+    *
+    * Scale shape: one explode, one (line, doc) distinct-count aggregate
+    * over the LINE VOCABULARY (bounded by distinct lines, not corpus
+    * size), one membership join, one per-doc rebuild aggregate — lines
+    * shuffle once each. At 100 TB the membership test is the same plan
+    * with the line column pre-hashed (shuffles 8-byte hashes instead of
+    * strings) and the boilerplate set broadcast — both drop-in column
+    * swaps on this shape. */
   def dedupLines(docs: DataFrame, minDf: Long = 2, sep: String = ". "): DataFrame = {
     val sepRegex = java.util.regex.Pattern.quote(sep)
     val lines = docs.select(col("doc_id"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,8 +12,10 @@ import graft.api.Engine
   * corpus text on every call (the one thing incremental dedup exists to
   * avoid).
   *
-  * Lifecycle: [[create]] once, [[bootstrap]] from the standing corpus,
-  * then per ingest batch [[admit]] — flag collisions against the index,
+  * The table lifecycle ([[create]], [[compact]], retires, residual
+  * reads, the gate tail) lives in [[PersistedIndex]]; this class keeps
+  * the band-signature kernel. [[create]] once, [[bootstrap]] from the
+  * standing corpus, then per ingest batch [[admit]] — flag collisions against the index,
   * return the clean survivors, and append exactly the survivors'
   * signatures in one table commit so the next batch sees them. The
   * streaming twin passes [[signatures]] as the static side of
@@ -35,21 +37,21 @@ import graft.api.Engine
   * constructor value is only used by [[create]].)
   */
 final class NearDupIndex(
-    val engine: Engine,
-    val ref: String,
+    engine: Engine,
+    ref: String,
     val numPerm: Int = 16,
     val rowsPerBand: Int = 4,
-    val nBuckets: Int = 32) {
+    val nBuckets: Int = 32) extends PersistedIndex(engine, ref) {
 
   val schema: StructType = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
     StructField("band", IntegerType, nullable = false),
     StructField("band_sig", LongType, nullable = false)))
 
-  /** Create the (empty) index table, bucket-partitioned on the probe key
-    * so gate passes prune (see [[probePaths]]). */
-  def create(): Unit =
-    engine.createTable(ref, schema, Seq(s"bucket[$nBuckets](band_sig)"))
+  /** Bucket-partitioned on the probe key so gate passes prune (see
+    * [[probePaths]]). */
+  protected def partitionDecls: Seq[String] = Seq(s"bucket[$nBuckets](band_sig)")
+  protected def idColumn: String = "doc_id"
 
   /** Seed the index from the standing corpus — the ONLY call that
     * aggregates corpus text; everything after probes the table. */
@@ -61,7 +63,7 @@ final class NearDupIndex(
 
   /** The standing index — a plain Graft-table scan (ids and 8-byte band
     * keys; no document text anywhere in this plan). */
-  def signatures: DataFrame = engine.readTable(ref)
+  def signatures: DataFrame = rowsOf(engine.load(ref))
 
   /** Paths of the index files a probe for `batchSigs` must read: the
     * batch's distinct band-sig buckets (≤ nBuckets ints — a
@@ -137,15 +139,6 @@ final class NearDupIndex(
     survivors
   }
 
-  /** Maintenance: every [[admit]] commits one small file per colliding
-    * bucket, so the file count grows with batch count — fold each
-    * bucket's small files back into one. The rewrite re-stages through
-    * the table's partition spec, so the bucketed layout (and probe
-    * pruning) is preserved. Run periodically, like any ingest table's
-    * compaction. None = nothing small enough to fold. */
-  def compact(smallBytes: Long = 32L * 1024 * 1024): Option[graft.meta.TableWriter.CommitResult] =
-    engine.rewriteSmallFiles(ref, smallBytes = smallBytes)
-
   /** RETIRE docs from the index (corpus deletion): one pure keyed
     * equality-delete commit drops every band row of the retired ids —
     * without it, future gate probes still collide with the GHOSTS of
@@ -153,21 +146,13 @@ final class NearDupIndex(
     * (no data rewrite); [[compact]] folds the tombstones later. The
     * ledger twin is [[ComponentIndex.retire]] — retire the signatures
     * FIRST so its `pairsAmong` provider no longer sees retired docs. */
-  def retire(retired: Seq[Long]): graft.meta.TableWriter.CommitResult = {
-    val spark2 = engine.spark
-    import spark2.implicits._
-    retire(retired.toDF("doc_id"))
-  }
+  def retire(retired: Seq[Long]): graft.meta.TableWriter.CommitResult =
+    deleteIds(idFrame(retired))
 
   /** [[retire]] with the retired ids as a DataFrame (`doc_id` column) —
-    * the corpus-scale form: a compliance batch of millions of ids never
-    * becomes a driver-side literal (the equality-delete keys distribute
-    * through the commit like any other frame). */
-  def retire(retired: DataFrame): graft.meta.TableWriter.CommitResult = {
-    val empty = engine.spark.createDataFrame(
-      new java.util.ArrayList[Row](), schema)
-    engine.rowDelta(ref, empty, Seq("doc_id"), retired.select("doc_id"))
-  }
+    * the corpus-scale form ([[PersistedIndex.deleteIds]]). */
+  def retire(retired: DataFrame): graft.meta.TableWriter.CommitResult =
+    deleteIds(retired)
 
   /** Residual candidate pairs among `ids` — the canonical `pairsAmong`
     * provider for [[ComponentIndex.retire]] over a CORPUS ledger: the
@@ -190,28 +175,10 @@ final class NearDupIndex(
     * the raw document store instead ([[Dedup.pairsFromDocs]]). */
   def pairsAmong(ids: DataFrame): DataFrame = pairsAmong(ids, Dedup.LiteralMaxIds)
 
-  /** [[pairsAmong]] with an explicit literal-vs-join threshold: at or
-    * under `inMaxIds` distinct ids the read point-set-prunes through
-    * driver-known bounds; above it — a mass deletion hitting a giant
-    * dup component — the member set never comes to the driver at all:
-    * the signatures semi-join against the id frame broadcast-side
-    * (full index scan, the honest at-scale form — bounds pruning needs
-    * driver-known points). */
+  /** [[pairsAmong]] with an explicit literal-vs-join threshold
+    * ([[PersistedIndex.rowsAmong]]). */
   def pairsAmong(ids: DataFrame, inMaxIds: Int): DataFrame = {
-    val rids = ids.select(col("doc_id")).distinct().localCheckpoint()
-    val sigs = (Dedup.literalIds(rids, inMaxIds) match {
-      case Some(seq) if seq.isEmpty =>
-        engine.spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-      case Some(seq) =>
-        ScanPlanner.readTableWhereInSet(engine.spark, engine.load(ref),
-          "doc_id", seq)
-      case None =>
-        // hint only under the ceiling — a nation-scale member set must
-        // not be FORCED through the driver as a broadcast
-        engine.readTable(ref)
-          .join(Dedup.hintIf(Dedup.fitsBroadcast(rids))(rids),
-            Seq("doc_id"), "left_semi")
-    }).localCheckpoint()
+    val sigs = rowsAmong(ids, inMaxIds)
     Dedup.bandCollisionPairs(sigs, sigs)
       .filter(col("doc_id") =!= col("corpus_doc_id"))
       .select(col("doc_id").as("a_id"), col("corpus_doc_id").as("b_id"))
@@ -256,106 +223,40 @@ final class NearDupIndex(
     * cluster's min id can be a doc that exists only in the ledger
     * ([[ComponentIndex.dropList]] documents the distinction).
     *
-    * INTRA-micro-batch edges: two mutual near-dups arriving in the SAME
-    * micro-batch are both ADMITTED (the gate's contract is "new vs
-    * standing index", unchanged) — but without their edge the ledger
-    * would permanently diverge from a signature-level from-scratch
-    * closure (neither doc ever collides with the index afterwards;
-    * each is already IN it). `intraBatchEdges` (default true) therefore
-    * folds the batch's internal collision pairs as well — fold-only,
-    * never flag — restricted to docs NOT already indexed, so a
-    * redelivered batch contributes nothing and idempotence holds.
-    * Set it false to record strictly what the gate REJECTED on. */
+    * The batch's INTERNAL collision pairs fold too (fold-only: both
+    * docs are admitted), restricted to docs not already indexed so a
+    * redelivered batch contributes nothing; without them the ledger
+    * would diverge from a signature-level from-scratch closure. */
   def admitStream(
       docs: DataFrame,
       checkpointDir: String,
-      components: Option[ComponentIndex] = None,
-      intraBatchEdges: Boolean = true)(
+      components: Option[ComponentIndex] = None)(
       onSurvivors: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val batchSigs = Dedup.bandSignatures(batch, numPerm, rowsPerBand)
-          .localCheckpoint()
-        // the bucket-pruned index slice, materialized once — feeds the
-        // collision join AND both already-indexed checks
-        val probed = probeSignatures(batchSigs).localCheckpoint()
-        // redelivered iff EVERY band row matches the index under the
-        // doc's own id — id presence alone would mistake an id-reusing
-        // new doc for a redelivery (and silently skip gating it)
-        val nBands = numPerm / rowsPerBand
-        val selfIndexed = batchSigs
-          .join(probed, Seq("doc_id", "band", "band_sig"), "left_semi")
-          .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-          .filter(col("n") === nBands).select(col("doc_id"))
-          .localCheckpoint()
-        // with a component ledger attached, the fold needs the FULL
-        // pair structure (a doc bridging two components must merge
-        // them — bandCollisions' min-aggregated dup_of loses that
-        // edge), and it feeds both the gate and the fold — materialize
-        // once and derive the flag set from it. Without a ledger, keep
-        // the original lazy aggregated single-consumer shape.
-        val collisionPairs = components.map { _ =>
-          Dedup.bandCollisionPairs(batchSigs, probed)
-            .join(selfIndexed, Seq("doc_id"), "left_anti") // redelivery ≠ dup
-            .localCheckpoint()
-        }
-        val flagged = collisionPairs match {
-          case Some(pairs) => pairs.select(col("doc_id")).distinct()
-          case None => Dedup.bandCollisions(batchSigs, probed)
-            .join(selfIndexed, Seq("doc_id"), "left_anti") // redelivery ≠ dup
-            .select(col("doc_id"))
-        }
-        val survivors = batch.join(flagged, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        val fresh = survivors.join(selfIndexed, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        // dup-cluster ledger: fold this batch's COMPLETE collision pair
-        // set into the persisted assignment (idempotent across
-        // redeliveries; skipped entirely — no table load — when the
-        // batch had no collisions). Intra-batch edges join the FOLD
-        // only (both endpoints were admitted — the gate flag set above
-        // is untouched); both-endpoint selfIndexed restriction keeps
-        // redelivered batches contributing nothing. The fold runs
-        // BEFORE the signature append and with conflict retry:
-        //   - ORDER: intra-edge suppression keys on selfIndexed, which
-        //     the append establishes — a crash between an append-first
-        //     commit and the fold would lose the admitted-admitted
-        //     intra edges FOREVER (the redelivered batch suppresses
-        //     them). Fold-first is safe in both crash orders: an
-        //     unfolded redelivery re-derives everything, a folded-but-
-        //     unappended redelivery re-gates (not selfIndexed yet) and
-        //     its re-fold is an absorbed no-op.
-        //   - RETRY: a concurrent fold/retire on a SHARED ledger (the
-        //     other gate, or Engine.forget) landing mid-fold surfaces
-        //     as CommitConflictException; foldWithRetry re-derives from
-        //     the fresh snapshot instead of killing the stream.
-        components.zip(collisionPairs).foreach { case (comps, pairs) =>
-          val intra =
-            if (!intraBatchEdges) pairs.limit(0)
-            else Dedup.bandCollisionPairs(batchSigs, batchSigs)
-              .filter(col("doc_id") =!= col("corpus_doc_id"))
-              .join(selfIndexed, Seq("doc_id"), "left_anti")
-              .join(selfIndexed.select(col("doc_id").as("corpus_doc_id")),
-                Seq("corpus_doc_id"), "left_anti")
-          // ONE eager checkpoint: the emptiness probe, the fold's
-          // several passes over the edge set, and any CAS retry reuse
-          // the materialized frame instead of re-running the band
-          // self-join per consumer
-          val edges = pairs.unionByName(intra).localCheckpoint()
-          if (!edges.isEmpty)
-            comps.foldWithRetry(edges.select(col("doc_id").as("a_id"),
-              col("corpus_doc_id").as("b_id")))
-        }
-        if (fresh.count() > 0)
-          // the fresh docs' signatures are already materialized in
-          // batchSigs — append from the checkpoint instead of paying a
-          // second tokenize+hash pass over the batch text
-          engine.append(ref,
-            batchSigs.join(fresh.select("doc_id"), Seq("doc_id"), "left_semi")
-              .select(col("doc_id"), col("band"), col("band_sig")))
-        onSurvivors(survivors)
-      }
-      .start()
+    stream(docs, checkpointDir) { batch =>
+      val batchSigs = Dedup.bandSignatures(batch, numPerm, rowsPerBand)
+        .localCheckpoint()
+      // the bucket-pruned index slice, materialized once — feeds the
+      // collision join AND the already-indexed check
+      val probed = probeSignatures(batchSigs).localCheckpoint()
+      // redelivered iff EVERY band row matches the index under the doc's
+      // own id — id presence alone would mistake an id-reusing new doc
+      // for a redelivery (and silently skip gating it)
+      val selfIndexed = batchSigs
+        .join(probed, Seq("doc_id", "band", "band_sig"), "left_semi")
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+        .filter(col("n") === numPerm / rowsPerBand).select(col("doc_id"))
+        .localCheckpoint()
+      def pairsWith(index: DataFrame) = Dedup.bandCollisionPairs(batchSigs, index)
+        .select(col("doc_id").as("a_id"), col("corpus_doc_id").as("b_id"))
+      val (survivors, fresh) = gate(batch, pairsWith(probed), selfIndexed,
+        components, pairsWith(batchSigs).filter(col("a_id") =!= col("b_id")))
+      if (!fresh.isEmpty)
+        // the fresh docs' signatures are already materialized in
+        // batchSigs — append from the checkpoint instead of paying a
+        // second tokenize+hash pass over the batch text
+        engine.append(ref,
+          batchSigs.join(fresh.select("doc_id"), Seq("doc_id"), "left_semi")
+            .select(col("doc_id"), col("band"), col("band_sig")))
+      onSurvivors(survivors)
+    }
 }

@@ -1563,8 +1563,7 @@ object PipelineQueries {
         val pairs = Dedup.minhashCandidates(s, documents(s, d),
             sorted = false)
           .localCheckpoint()
-        val wh = java.nio.file.Files
-          .createTempDirectory("q_comp_retire").toString
+        val wh = org.apache.spark.sql.GraftTempDir("q_comp_retire")
         val e = new graft.api.Engine(s, wh)
         val idx = new graft.ops.ComponentIndex(e, "q.retire_comps")
         idx.create(); idx.bootstrap(pairs)
@@ -1598,8 +1597,7 @@ object PipelineQueries {
       (s, d) => {
         val emb = embeddings(s, d)
         val isBatch = (c: org.apache.spark.sql.Column) => c % 5 === 0
-        val wh = java.nio.file.Files
-          .createTempDirectory("q_comp_sem").toString
+        val wh = org.apache.spark.sql.GraftTempDir("q_comp_sem")
         val e = new graft.api.Engine(s, wh)
         val idx = new graft.ops.AnnIndex(e, "q.sem_idx",
           kClusters = 4, iters = 2)

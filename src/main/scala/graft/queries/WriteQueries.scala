@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.GraftTempDir
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
@@ -44,7 +45,7 @@ object WriteQueries {
     Q("q_merge_upsert",
       (s, d) => {
         val src = slice(s, d, 0)
-        val wh = java.nio.file.Files.createTempDirectory("q_merge").toString
+        val wh = GraftTempDir("q_merge")
         val e = new Engine(s, wh)
         e.createTable("q.merge_orders", src.schema)
         e.append("q.merge_orders", src)
@@ -88,7 +89,7 @@ object WriteQueries {
     Q("q_row_delta",
       (s, d) => {
         val src = slice(s, d, 0)
-        val wh = java.nio.file.Files.createTempDirectory("q_rowdelta").toString
+        val wh = GraftTempDir("q_rowdelta")
         val e = new Engine(s, wh)
         e.createTable("q.rd_orders", src.schema)
         e.append("q.rd_orders", src)
@@ -134,7 +135,7 @@ object WriteQueries {
       (s, d) => {
         val a = slice(s, d, 0)
         val b = slice(s, d, 1)
-        val wh = java.nio.file.Files.createTempDirectory("q_cdf").toString
+        val wh = GraftTempDir("q_cdf")
         val e = new Engine(s, wh)
         e.createTable("q.cdf_orders", a.schema)
         val snap1 = e.append("q.cdf_orders", a).snapshotId
@@ -168,7 +169,7 @@ object WriteQueries {
       (s, d) => {
         val a = slice(s, d, 0)
         val b = slice(s, d, 1)
-        val wh = java.nio.file.Files.createTempDirectory("q_tt").toString
+        val wh = GraftTempDir("q_tt")
         val e = new Engine(s, wh)
         e.createTable("q.tt_orders", a.schema)
         val snap1 = e.append("q.tt_orders", a).snapshotId
@@ -203,7 +204,7 @@ object WriteQueries {
       (s, d) => {
         val a = slice(s, d, 0)
         val b = slice(s, d, 1)
-        val wh = java.nio.file.Files.createTempDirectory("q_wap").toString
+        val wh = GraftTempDir("q_wap")
         val e = new Engine(s, wh)
         e.createTable("q.wap_orders", a.schema)
         e.append("q.wap_orders", a)
@@ -236,7 +237,7 @@ object WriteQueries {
       (s, d) => {
         val a = slice(s, d, 0)
         val b = slice(s, d, 1)
-        val wh = java.nio.file.Files.createTempDirectory("q_branch").toString
+        val wh = GraftTempDir("q_branch")
         val e = new Engine(s, wh)
         e.createTable("q.br_orders", a.schema)
         e.append("q.br_orders", a)
@@ -270,7 +271,7 @@ object WriteQueries {
     // EMPTY (physical rewrite, no logical change).
     Q("q_compact_roundtrip",
       (s, d) => {
-        val wh = java.nio.file.Files.createTempDirectory("q_compact").toString
+        val wh = GraftTempDir("q_compact")
         val e = new Engine(s, wh)
         val base = slice(s, d, 0)
         e.createTable("q.cp_orders", base.schema)
@@ -315,7 +316,7 @@ object WriteQueries {
       (s, d) => {
         val a = slice(s, d, 0)
         val b = slice(s, d, 1)
-        val wh = java.nio.file.Files.createTempDirectory("q_pspec").toString
+        val wh = GraftTempDir("q_pspec")
         val e = new Engine(s, wh)
         e.createTable("q.pe_orders", a.schema,
           partitionDecls = Seq("o_orderstatus"))
@@ -358,7 +359,7 @@ object WriteQueries {
         val a = slice(s, d, 0)
           .withColumn("o_rank", (col("o_orderkey") % 100).cast("int"))
           .drop("o_totalprice")
-        val wh = java.nio.file.Files.createTempDirectory("q_evo").toString
+        val wh = GraftTempDir("q_evo")
         val e = new Engine(s, wh)
         e.createTable("q.evo_orders", a.schema)
         e.append("q.evo_orders", a)
@@ -402,9 +403,9 @@ object WriteQueries {
     Q("q_register_adopt",
       (s, d) => {
         val src = slice(s, d, 2)
-        val srcDir = java.nio.file.Files.createTempDirectory("q_reg_src").toString
+        val srcDir = GraftTempDir("q_reg_src")
         src.repartition(4).write.mode("overwrite").parquet(srcDir)
-        val wh = java.nio.file.Files.createTempDirectory("q_reg_wh").toString
+        val wh = GraftTempDir("q_reg_wh")
         val e = new Engine(s, wh)
         e.registerParquet("q.adopted", srcDir)
         e.migrateToFieldIds("q.adopted")
@@ -434,11 +435,11 @@ object WriteQueries {
       (s, d) => {
         val dropA = slice(s, d, 3)
         val dropB = slice(s, d, 4)
-        val dirA = java.nio.file.Files.createTempDirectory("q_af_a").toString
-        val dirB = java.nio.file.Files.createTempDirectory("q_af_b").toString
+        val dirA = GraftTempDir("q_af_a")
+        val dirB = GraftTempDir("q_af_b")
         dropA.repartition(3).write.mode("overwrite").parquet(dirA)
         dropB.repartition(2).write.mode("overwrite").parquet(dirB)
-        val wh = java.nio.file.Files.createTempDirectory("q_af_wh").toString
+        val wh = GraftTempDir("q_af_wh")
         val e = new Engine(s, wh)
         e.registerParquet("q.drops", dirA)
         e.adoptFiles("q.drops", dirB)
@@ -476,13 +477,13 @@ object WriteQueries {
       (s, d) => {
         val dropA = slice(s, d, 5)
         val dropB = slice(s, d, 6)
-        val dirA = java.nio.file.Files.createTempDirectory("q_hive_a").toString
-        val dirB = java.nio.file.Files.createTempDirectory("q_hive_b").toString
+        val dirA = GraftTempDir("q_hive_a")
+        val dirB = GraftTempDir("q_hive_b")
         dropA.repartition(3).write.mode("overwrite")
           .partitionBy("o_orderstatus").parquet(dirA)
         dropB.repartition(2).write.mode("overwrite")
           .partitionBy("o_orderstatus").parquet(dirB)
-        val wh = java.nio.file.Files.createTempDirectory("q_hive_wh").toString
+        val wh = GraftTempDir("q_hive_wh")
         val e = new Engine(s, wh)
         e.registerParquet("q.hive", dirA)
         e.adoptFiles("q.hive", dirB)
